@@ -379,8 +379,10 @@ case class PqLut(
   * left-to-right over min(d, row-dims) exactly like [[ArraySqDist]]
   * (ragged rows fold the common prefix), the running min of doubles is
   * the same value `least` computes in any order, and the strict `<`
-  * scan in ascending-cid order IS the when-chain's first-match-wins
-  * lowest-cid tiebreak — so every oracle-pinned consumer (Lloyd fits,
+  * scan in ascending-cid order, seeded from the first candidate, IS the
+  * when-chain's first-match-wins lowest-cid tiebreak (a row whose
+  * distances are all NaN gets the lowest model cid, never a cid outside
+  * the model) — so every oracle-pinned consumer (Lloyd fits,
   * IVF quantizers, semdedup cells) sees identical assignments.
   *
   * Why an expression and not the chain (round-20, guide §7.3): the chain
@@ -413,24 +415,11 @@ case class NearestCentroid(
       nullable = false)))
 
   override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val nDims = v.numElements()
-    var best = 0
-    var bestD = Double.MaxValue
-    var c = 0
-    while (c < k) {
-      val n = math.min(nDims, d)
-      var acc = 0.0
-      var i = 0
-      while (i < n) {
-        val diff = v.getDouble(i) - flat(c * d + i)
-        acc += diff * diff
-        i += 1
-      }
-      if (acc < bestD) { bestD = acc; best = cids(c) }
-      c += 1
-    }
-    org.apache.spark.sql.catalyst.InternalRow(best, bestD)
+    val xs = input.asInstanceOf[ArrayData].toDoubleArray()
+    val n = math.min(xs.length, d)
+    val c = NearestCentroid.nearest(xs, 0, n, flat, k, d)
+    org.apache.spark.sql.catalyst.InternalRow(
+      cids(c), NearestCentroid.dist2(xs, 0, n, flat, c, d))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -449,14 +438,14 @@ case class NearestCentroid(
          |int $nDims = $v.numElements();
          |int $n = java.lang.Math.min($nDims, $d);
          |int $best = 0;
-         |double $bestD = Double.MAX_VALUE;
+         |double $bestD = 0.0;
          |for (int $c = 0; $c < ${k}; $c++) {
          |  double $acc = 0.0;
          |  for (int $i = 0; $i < $n; $i++) {
          |    double $diff = $v.getDouble($i) - $flatRef[$c * $d + $i];
          |    $acc += $diff * $diff;
          |  }
-         |  if ($acc < $bestD) { $bestD = $acc; $best = $cidsRef[$c]; }
+         |  if ($c == 0 || $acc < $bestD) { $bestD = $acc; $best = $cidsRef[$c]; }
          |}
          |${ev.value} = new org.apache.spark.sql.catalyst.expressions
          |  .GenericInternalRow(new Object[] {
@@ -468,6 +457,45 @@ case class NearestCentroid(
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+/** The argmin scan of [[NearestCentroid]] over a `double[]` slice, for
+  * its interpreted path and for the Lloyd core's packed partitions (the
+  * generated code keeps its own copy of the same loop).
+  */
+object NearestCentroid {
+
+  /** Squared distance from `xs(off until off + n)` to candidate `c` of
+    * the `d`-wide model `flat`: `acc = 0.0; acc += diff*diff`, left to
+    * right.
+    */
+  def dist2(xs: Array[Double], off: Int, n: Int, flat: Array[Double], c: Int, d: Int): Double = {
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      val diff = xs(off + i) - flat(c * d + i)
+      acc += diff * diff
+      i += 1
+    }
+    acc
+  }
+
+  /** Index of the candidate nearest to `xs(off until off + n)` among the
+    * `k` in `flat`: scanned in order with a strict `<`, seeded from
+    * candidate 0, so a tie goes to the earlier candidate and an all-NaN
+    * row to candidate 0.
+    */
+  def nearest(xs: Array[Double], off: Int, n: Int, flat: Array[Double], k: Int, d: Int): Int = {
+    var best = 0
+    var bestD = dist2(xs, off, n, flat, 0, d)
+    var c = 1
+    while (c < k) {
+      val acc = dist2(xs, off, n, flat, c, d)
+      if (acc < bestD) { bestD = acc; best = c }
+      c += 1
+    }
+    best
+  }
 }
 
 object ArrayVector {

@@ -1,66 +1,28 @@
 package graft.kmeans
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.functions.col
 
-/** n-D Lloyd driver loop — same structure as [[Lloyd]] (one Spark job per
-  * iteration: shuffle-free assign → one-pass VectorMean aggregate → O(K·d)
-  * collect), generalized to `ARRAY<DOUBLE>` features.
+/** n-D Lloyd over (pid, features ARRAY<DOUBLE>) points: the [[LloydCore]]
+  * loop of [[Lloyd]], from first-K init by pid. f32Wire is the 2-D
+  * reference's wire format; the n-D loop is f64 throughout and ignores it.
   */
 object LloydN {
 
   def fit(points: DataFrame, cfg: KMeansConfig): KMeansResultN = {
     require(cfg.k > 0, "k must be positive")
-    val cached = points.persist(StorageLevel.MEMORY_AND_DISK)
-    try fitCached(cached, cfg)
-    finally cached.unpersist(blocking = false)
-  }
-
-  private def fitCached(points: DataFrame, cfg: KMeansConfig): KMeansResultN = {
-    var centroids = OpsN.collectCentroidsN(OpsN.initFirstKN(points, cfg.k))
-    require(centroids.nonEmpty, s"fewer than 1 point available for k=${cfg.k} init")
-    var iter = 0
-    var done = false
-    while (iter < cfg.maxIter && !done) {
-      iter += 1
-      val updated =
-        OpsN.collectCentroidsN(
-          OpsN.updateN(OpsN.assignN(points, centroids)).drop("n"))
-      val next = cfg.emptyClusters match {
-        case EmptyClusterPolicy.Drop => updated
-        case EmptyClusterPolicy.Keep =>
-          val seen = updated.map(_.cid).toSet
-          (updated ++ centroids.filterNot(c => seen(c.cid))).sortBy(_.cid)
-      }
-      done = OpsN.convergedN(centroids, next, cfg.tol)
-      centroids = next
-    }
-    KMeansResultN(centroids, iter, done)
+    // first-K init by pid, as OpsN.initFirstKN
+    LloydCore.run(points, col("features"), Seq(col("pid")), cfg.copy(f32Wire = false))
   }
 
   /** Fixed-iteration n-D Lloyd (NO early stop): exactly `iters` rounds of
     * assign → mean. Unlike [[fit]] this unrolls into an exact SQL oracle
     * (cf. [[Lloyd.iterate]]); empty clusters drop, matching the SQL's
-    * group-by-assigned semantics.
+    * group-by-assigned semantics. Any k runs the same per-row argmin, so a
+    * corpus-sized quantizer (k ~ n/occupancy) needs no separate path.
     */
-  def iterateN(points: DataFrame, k: Int, iters: Int): Seq[CentroidN] = {
-    val cached = points.persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      var centroids = OpsN.collectCentroidsN(OpsN.initFirstKN(cached, k))
-      require(centroids.nonEmpty, s"fewer than 1 point available for k=$k init")
-      var i = 0
-      while (i < iters) {
-        // adaptive formulation: a corpus-SIZED quantizer (k ~ n/occupancy,
-        // cf. Similarity.semDedupSized) would otherwise pay a k-deep
-        // literal codegen chain per iteration — fitting, not the pairwise
-        // step, then dominates the whole operator
-        centroids = OpsN.collectCentroidsN(
-          OpsN.updateN(OpsN.assignNAdaptive(cached, centroids)).drop("n"))
-        i += 1
-      }
-      centroids
-    } finally cached.unpersist(blocking = false)
-  }
+  def iterateN(points: DataFrame, k: Int, iters: Int): Seq[CentroidN] =
+    fit(points, LloydCore.fixed(k, iters)).centroids
 
   /** [[iterateN]] with the quantizer fit on a DETERMINISTIC hash-sample
     * of ~`sampleCap` points: at corpus scale a k-means fit is otherwise
@@ -106,7 +68,4 @@ object LloydN {
     * is hash-sampled — FAISS's `min_points_per_centroid` default.
     */
   val minPointsPerCentroid: Long = 39L
-
-  def transform(points: DataFrame, result: KMeansResultN): DataFrame =
-    OpsN.assignN(points, result.centroids)
 }

@@ -10,11 +10,6 @@ package graft.kmeans
   * DuckDB oracle.
   */
 
-/** A 2-D point with a stable id (the reference has no point ids; we add one
-  * so argmin/oracle comparisons are deterministic — FIXTURES.md §C).
-  */
-final case class Point2(pid: Long, x: Double, y: Double)
-
 /** A 2-D centroid. `cid` is 0-based, assigned in first-K order
   * (reference `master.py:27-30`).
   */
@@ -24,11 +19,6 @@ final case class Centroid2(cid: Int, x: Double, y: Double) {
     dx * dx + dy * dy
   }
 }
-
-/** An n-D point: `features` is an `ARRAY<DOUBLE>` column in DataFrame form
-  * (reference mapper parses arbitrary arity, `mapper.py:110`).
-  */
-final case class PointN(pid: Long, features: Array[Double])
 
 /** An n-D centroid. */
 final case class CentroidN(cid: Int, features: Array[Double]) {

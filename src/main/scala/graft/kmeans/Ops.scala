@@ -104,15 +104,6 @@ object Ops {
   def dist2(px: Column, py: Column, cx: Column, cy: Column): Column =
     (px - cx) * (px - cx) + (py - cy) * (py - cy)
 
-  /** A literal `ARRAY<STRUCT<cid,x,y>>` holding the model state — the Spark
-    * analogue of the reference broadcasting centroids inside every mapper
-    * RPC (`master.py:64-66`, `comm.proto:16-22`).
-    */
-  def centroidLiteral(centroids: Seq[Centroid2]): Column =
-    array(centroids.sortBy(_.cid).map { c =>
-      struct(lit(c.cid).as("cid"), lit(c.x).as("x"), lit(c.y).as("y"))
-    }: _*)
-
   /** J1+A3: assign each point to its nearest centroid; ties break to the
     * lowest cid (reference `mapper.py:26-29`: `list.index(min(...))`).
     *
@@ -181,8 +172,8 @@ object Ops {
 
   /** A1+A2+A4: new centroid per cluster = arithmetic mean of its members
     * (reference `reducer.py:108-132`). Clusters with no members don't
-    * appear (Drop policy — `reducer.py:116-122`); `Lloyd` re-adds them
-    * under the Keep policy. One partial+final HashAggregate; the exchange
+    * appear (Drop policy — `reducer.py:116-122`); the Lloyd loop re-adds
+    * them under the Keep policy. One partial+final HashAggregate; the exchange
     * carries ≤ K rows per map task.
     *
     * Output: (cid, x, y, n).
@@ -243,15 +234,6 @@ object Ops {
     */
   def modPartition(assigned: DataFrame, numPartitions: Int): DataFrame =
     assigned.withColumn("partition", pmod(col("cid"), lit(numPartitions)))
-
-  /** X1 as a physical repartition: co-locate rows by cid across exactly
-    * `numPartitions` partitions (what the reference's M×R partition files
-    * achieve), exposing the actual Spark partition id.
-    */
-  def repartitionByCid(assigned: DataFrame, numPartitions: Int): DataFrame =
-    assigned
-      .repartition(numPartitions, col("cid"))
-      .withColumn("spark_partition", spark_partition_id())
 
   // ---------------------------------------------------------------------
   // P3: float32 wire-precision emulation

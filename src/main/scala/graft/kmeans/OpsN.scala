@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   * partial+final aggregation via [[VectorMean]], so the exchange carries
   * O(K·d·partitions) bytes. For K·d too large for one per-row loop
   * (≫10^4), use [[assignCrossJoinN]], which broadcasts the centroid
-  * table instead.
+  * table instead. [[LloydCore]] runs the Lloyd loops' assign + update;
+  * these operators are the reference it is tested against.
   */
 object OpsN {
 
@@ -57,14 +58,6 @@ object OpsN {
       .sortBy(_.cid)
       .toSeq
 
-  /** The centroid model as a literal ARRAY<STRUCT<cid, features>> column. */
-  def centroidLiteralN(centroids: Seq[CentroidN]): Column =
-    array(centroids.sortBy(_.cid).map { c =>
-      struct(
-        lit(c.cid).as("cid"),
-        array(c.features.toIndexedSeq.map(lit(_)): _*).as("features"))
-    }: _*)
-
   /** J1+A3 n-D: nearest-centroid assignment, lowest-cid tiebreak.
     * Output: (pid, features, cid, dist2).
     */
@@ -75,16 +68,8 @@ object OpsN {
       centroids.forall(_.features.length == d),
       "assignN: ragged centroid dimensions")
     // ONE codegen'd argmin node with the model as runtime references
-    // ([[graft.expr.NearestCentroid]]) — bit-identical values to the
-    // round-10 three-projection least/when chain (same left-to-right
-    // distance fold, same min, same lowest-cid tiebreak; asserted in
-    // NDimSpec/KMeansProperties), but the plan no longer carries k
-    // distance nodes + a k-deep when-chain that Catalyst re-analyzes and
-    // codegen re-generates per quantizer ITERATION (round-20, guide
-    // §7.3: ~60–140 ms driver per iteration at k=8 across the IVF/Lloyd
-    // family; the generated source is iteration-invariant, so janino's
-    // compile cache hits where the chain's changing literals forced a
-    // fresh source walk each time).
+    // ([[graft.expr.NearestCentroid]]): the plan stays one node at any k,
+    // and its generated source does not change with the model.
     // TWO projections (argmin struct → field extraction), the second
     // referencing the first's ATTRIBUTE: CollapseProject keeps a
     // non-cheap alias referenced twice apart, so the argmin evaluates
@@ -108,8 +93,8 @@ object OpsN {
     * per-partition hash relation rather than an every-row full scan of
     * the model. Same distances, same lowest-cid tiebreak either way;
     * downstream aggregation order (and so last-ulp mean noise) can
-    * differ, which is why every ORACLE-checked path runs at
-    * k ≤ literalBound.
+    * differ. Quantizer FITS never come here ([[LloydCore]] runs any k);
+    * this is the final cell assignment of the fitted quantizer.
     */
   def assignNAdaptive(
       points: DataFrame,

@@ -1,22 +1,30 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, Dataset}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Minimal bridge into Spark's `private[sql]` internals: the
+/** Minimal bridge into Spark's `private[sql]` / `private[spark]` internals: the
   * Column↔Expression converters (Spark 4 removed the public
-  * `Column(expr)` constructor) and the materialized RDD behind a
+  * `Column(expr)` constructor), the materialized RDD behind a
   * checkpointed Dataset (needed to release a superseded
   * `localCheckpoint`'s blocks eagerly — `Dataset.unpersist` only talks to
-  * the CacheManager, which never sees checkpoint storage). This is the
-  * only file outside the `graft` namespace; it contains no logic.
+  * the CacheManager, which never sees checkpoint storage), and the
+  * blocking form of `Broadcast.destroy`. This is the only file outside
+  * the `graft` namespace; it contains no logic.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Destroy a broadcast and wait until its blocks are gone: the public
+    * `destroy()` returns at once and leaves the removal running beside
+    * the caller's next job.
+    */
+  def destroy(b: Broadcast[_]): Unit = b.destroy(blocking = true)
 
   /** The RDD backing a `df.localCheckpoint(...)` / `df.checkpoint(...)`
     * result (eager or LAZY) — None for any other plan shape.

@@ -4,7 +4,7 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.kmeans.{Ops, SparkTestSession}
+import graft.kmeans.{Ops, OpsN, SparkTestSession}
 
 /** Physical-plan shape assertions — the properties that keep the engine
   * viable at 100 TB (SURVEY.md §4.2): scans prune columns and push filters,
@@ -205,6 +205,12 @@ class PlanShapeSpec extends AnyFunSuite {
           s"explode input must be a projected token array, not an " +
             s"inline split:\n${g.generator}")
     }
+  }
+
+  test("assignN plans the K-way argmin as one nearest_centroid node") {
+    val p = OpsN.pointsFromEmbeddings(spark.read.parquet(s"$sf/embeddings.parquet"))
+    val plan = executed(OpsN.assignN(p, OpsN.collectCentroidsN(OpsN.initFirstKN(p, 8)))).toString
+    assert("nearest_centroid".r.findAllIn(plan).size === 1, plan.take(1200))
   }
 
   test("mean update is a partial+final hash aggregate (map-side combine)") {

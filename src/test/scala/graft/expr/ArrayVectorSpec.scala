@@ -114,6 +114,20 @@ class ArrayVectorSpec extends AnyFunSuite {
     assert(adc === lut(3) + lut(9))
   }
 
+  test("nearestCentroid: an all-NaN row takes the lowest model cid, " +
+      "interpreted and codegen'd") {
+    import org.apache.spark.sql.functions._
+    val model = Seq((5, Array(1.0, 1.0)), (3, Array(0.0, 0.0)))
+    // a local relation evaluates the expression interpreted ...
+    val interp = Seq(Array(Double.NaN, 0.0)).toDF("v")
+      .select(ArrayVector.nearestCentroid($"v", model).getField("cid")).as[Int].head()
+    // ... a range source runs it inside whole-stage codegen
+    val gen = spark.range(1)
+      .select(array($"id".cast("double") + Double.NaN, lit(0.0)).as("v"))
+      .select(ArrayVector.nearestCentroid($"v", model).getField("cid")).as[Int].head()
+    assert((interp, gen) === ((3, 3)))
+  }
+
   test("whole-stage codegen covers the expression (no interpreted fallback)") {
     // needs a non-local source: literal local relations constant-fold to a
     // LocalTableScan with no codegen stage at all

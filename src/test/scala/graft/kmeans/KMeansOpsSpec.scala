@@ -84,6 +84,21 @@ class KMeansOpsSpec extends AnyFunSuite {
     assert(r.centroids.map(_.cid).sorted === Seq(0, 1))
   }
 
+  test("fit refuses a null coordinate, naming it") {
+    val pts = Seq((1L, Some(0.0), 0.0), (2L, None, 1.0), (3L, Some(5.0), 5.0))
+      .toDF("pid", "x", "y")
+    val e = intercept[IllegalArgumentException](Lloyd.fit(pts, KMeansConfig(k = 2)))
+    assert(e.getMessage.contains("null coordinate"), e.getMessage)
+  }
+
+  test("fit refuses a non-finite coordinate instead of folding it into a centroid") {
+    val pts = pointsDf((1, 0.0, 0.0), (2, 1.0, 1.0), (3, Double.NaN, 5.0))
+    val e = intercept[IllegalArgumentException](Lloyd.fit(pts, KMeansConfig(k = 2)))
+    assert(e.getMessage.contains("non-finite coordinate NaN"), e.getMessage)
+    val inf = pointsDf((1, 0.0, 0.0), (2, 1.0, Double.PositiveInfinity))
+    intercept[IllegalArgumentException](Lloyd.iterate(inf, k = 1, iters = 1))
+  }
+
   test("C4: converged fires at a fixed point (one point per cluster)") {
     val pts = pointsDf((1, 0.0, 0.0), (2, 10.0, 0.0), (3, 0.0, 10.0))
     val r = Lloyd.fit(pts, KMeansConfig(k = 3, maxIter = 10))

@@ -30,6 +30,28 @@ class NDimSpec extends AnyFunSuite {
     assert(e.getMessage.contains("ragged") || e.getCause != null)
   }
 
+  test("fit refuses a null feature array") {
+    val pts = Seq((1L, Some(Array(0.0, 0.0))), (2L, None), (3L, Some(Array(1.0, 1.0))))
+      .toDF("pid", "features")
+    val e = intercept[IllegalArgumentException](LloydN.fit(pts, KMeansConfig(k = 2)))
+    assert(e.getMessage.contains("null feature array"), e.getMessage)
+  }
+
+  test("fit refuses rows whose width differs instead of folding the common prefix") {
+    val pts = ndDf((1L, Seq(0.0, 0.0)), (2L, Seq(1.0, 1.0)), (3L, Seq(5.0, 5.0, 5.0)))
+    val e = intercept[IllegalArgumentException](LloydN.fit(pts, KMeansConfig(k = 2)))
+    assert(e.getMessage.contains("differ in width"), e.getMessage)
+    // and however the rows are spread over partitions
+    val split = pts.repartition(3, org.apache.spark.sql.functions.col("pid"))
+    intercept[IllegalArgumentException](LloydN.iterateN(split, k = 1, iters = 1))
+  }
+
+  test("fit refuses a non-finite coordinate") {
+    val pts = ndDf((1L, Seq(0.0, 0.0)), (2L, Seq(1.0, Double.NaN)), (3L, Seq(5.0, 5.0)))
+    val e = intercept[IllegalArgumentException](LloydN.fit(pts, KMeansConfig(k = 2)))
+    assert(e.getMessage.contains("non-finite coordinate NaN"), e.getMessage)
+  }
+
   test("assignN matches brute-force nearest with lowest-cid tiebreak") {
     val pts = ndDf(
       (1L, Seq(0.0, 0.0)),

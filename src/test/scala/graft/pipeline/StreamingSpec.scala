@@ -393,9 +393,15 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("f32Wire Lloyd reproduces the reference's float funnel artifacts") {
-    import graft.kmeans.{KMeansConfig, Lloyd, Ops}
-    val pts = Ops.readPointsCsv(spark, "/root/reference/Input/points1.txt")
-    assume(pts.count() > 0)
+    import graft.kmeans.{KMeansConfig, Lloyd}
+    // FIXTURES §B micro-fixture shaped like points1.txt's three clusters;
+    // pids 1-3 seed one centroid per cluster. The middle cluster's x-mean
+    // is 0.825, which the f32 funnel turns into the reference's logged
+    // 0.824999988079071 (dump_master.txt); the f64 loop gives 0.825.
+    val pts = Seq(
+      (1L, -0.7, 7.3), (2L, 0.7, 9.8), (3L, 9.5, 1.0),
+      (4L, -0.65, 7.4), (5L, 0.8, 9.7), (6L, 0.9, 9.75), (7L, 0.9, 9.75),
+      (8L, 9.6, 1.1)).toDF("pid", "x", "y")
     val r = Lloyd.fit(pts, KMeansConfig(k = 3, maxIter = 20, f32Wire = true))
     // the f32-rounded x of the (0.825, 9.75) cluster is the reference's
     // logged 0.824999988079071 (dump_master.txt)
