@@ -5499,7 +5499,7 @@ object SparkEntry {
 
     // multi-probe kNN-join: the probe side takes each vector's TWO
     // nearest cells (LATERAL ... LIMIT 2 — same (d2, cid) order as the
-    // engine's probeCellsCol sort), the candidate side keeps primary
+    // engine's nearest_cells probe), the candidate side keeps primary
     // cells (LIMIT 1); otherwise identical to sm_knn_join
     "sm_knn_join_probe" ->
       s"""WITH ${nLloydCtesSized(5, 64L)},

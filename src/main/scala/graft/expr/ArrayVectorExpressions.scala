@@ -1,11 +1,13 @@
 package graft.expr
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.Bridge
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, StructField, StructType}
 
 /** Native Catalyst expressions for the vector hot path.
   *
@@ -369,101 +371,148 @@ case class PqLut(
 }
 
 /** K-way nearest-centroid argmin as ONE expression node: for an input
-  * ARRAY<DOUBLE> row vector, the (cid, dist2) of the centroid minimizing
-  * the squared Euclidean distance, lowest-cid tiebreak. `flat` holds the
-  * k centroid vectors concatenated in ASCENDING-cid order (k·d doubles),
-  * `cids` the parallel cid list (same order), `d` the centroid width.
+  * ARRAY<DOUBLE> row vector, the (cid, dist2) of the centroid nearest in
+  * squared Euclidean distance. `flat` holds the k centroid vectors
+  * concatenated in ASCENDING-cid order (k·d doubles), `cids` the
+  * parallel cid list (same order), `d` the centroid width. It is the
+  * engine's only argmin: `Ops.assign` runs it over `array(x, y)`,
+  * `OpsN.assignN` over the feature array, and the Lloyd core runs the
+  * companion's scan over its packed partitions.
   *
-  * BIT-IDENTICAL to the round-10 three-projection least/when chain it
-  * replaces (`OpsN.assignN`): each candidate distance folds
-  * left-to-right over min(d, row-dims) exactly like [[ArraySqDist]]
-  * (ragged rows fold the common prefix), the running min of doubles is
-  * the same value `least` computes in any order, and the strict `<`
-  * scan in ascending-cid order, seeded from the first candidate, IS the
-  * when-chain's first-match-wins lowest-cid tiebreak (a row whose
-  * distances are all NaN gets the lowest model cid, never a cid outside
-  * the model) — so every oracle-pinned consumer (Lloyd fits,
-  * IVF quantizers, semdedup cells) sees identical assignments.
+  * One contract, in the companion's scan: each distance folds
+  * `0.0 + diff²` left to right over the first min(d, row width)
+  * coordinates, like [[ArraySqDist]] (ragged rows fold the common
+  * prefix; in 2-D the sum is bit-identical to `Ops.dist2`). Distances
+  * compare as Spark SQL orders doubles, NaN above every number, and
+  * ties go to the lowest cid (`mapper.py:28`). A null row, or a null
+  * among the coordinates read, yields null.
   *
-  * Why an expression and not the chain (round-20, guide §7.3): the chain
-  * builds 3 projections with k distance nodes + a k-deep when-chain that
-  * Catalyst re-analyzes and whole-stage codegen re-generates PER
-  * ITERATION of every quantizer loop — measured ~60–140 ms of driver
-  * time per iteration on the IVF keys at k=8, and the centroids CHANGE
-  * each iteration so no plan-level caching helps. Here the model rides
-  * as runtime references (the [[PqEncode]] discipline): the plan is one
-  * node, and the generated source is IDENTICAL across iterations (only
-  * the reference objects differ), so janino's compile cache hits.
+  * Why one node: a `least`/`when` chain of k distance nodes grows with k
+  * and is re-analysed and re-compiled on every Lloyd iteration, since the
+  * centroids change each time. Here the model rides as a runtime
+  * reference (the [[PqEncode]] discipline): the plan is one node at any
+  * k, and the generated source does not change with the model, so
+  * janino's compile cache hits.
   */
 case class NearestCentroid(
     child: Expression,
     flat: Array[Double],
     cids: Array[Int],
     d: Int) extends UnaryExpression {
-  require(d > 0, s"d=$d")
-  require(cids.length >= 1, "empty centroid set")
-  require(flat.length == cids.length * d,
-    s"flat length ${flat.length} != k*d = ${cids.length * d}")
-
-  private def k: Int = cids.length
+  NearestCentroid.check(flat, cids, d)
 
   override def prettyName: String = "nearest_centroid"
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField(
-      "cid", org.apache.spark.sql.types.IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("dist2", DoubleType,
-      nullable = false)))
+  override def nullable: Boolean = true
+  override def dataType: DataType = StructType(Seq(
+    StructField("cid", IntegerType, nullable = false),
+    StructField("dist2", DoubleType, nullable = false)))
 
-  override def nullSafeEval(input: Any): Any = {
-    val xs = input.asInstanceOf[ArrayData].toDoubleArray()
-    val n = math.min(xs.length, d)
-    val c = NearestCentroid.nearest(xs, 0, n, flat, k, d)
-    org.apache.spark.sql.catalyst.InternalRow(
-      cids(c), NearestCentroid.dist2(xs, 0, n, flat, c, d))
+  /** (cid, dist2) of the centroid nearest to `v`; null on a null coordinate. */
+  def argmin(v: ArrayData): InternalRow = {
+    val xs = NearestCentroid.coords(v, d)
+    if (xs == null) null
+    else {
+      val c = NearestCentroid.nearest(xs, 0, xs.length, flat, cids.length, d)
+      InternalRow(cids(c), NearestCentroid.dist2(xs, 0, xs.length, flat, c, d))
+    }
   }
 
+  override def nullSafeEval(input: Any): Any = argmin(input.asInstanceOf[ArrayData])
+
+  // the generated code calls the same scan, with this node as a reference
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val flatRef = ctx.addReferenceObj("ncFlat", flat, "double[]")
-    val cidsRef = ctx.addReferenceObj("ncCids", cids, "int[]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val nDims = ctx.freshName("nDims")
-      val n = ctx.freshName("n")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      val diff = ctx.freshName("diff")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
+    val self = ctx.addReferenceObj("nearestCentroid", this)
+    nullSafeCodeGen(ctx, ev, v =>
       s"""
-         |int $nDims = $v.numElements();
-         |int $n = java.lang.Math.min($nDims, $d);
-         |int $best = 0;
-         |double $bestD = 0.0;
-         |for (int $c = 0; $c < ${k}; $c++) {
-         |  double $acc = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $diff = $v.getDouble($i) - $flatRef[$c * $d + $i];
-         |    $acc += $diff * $diff;
-         |  }
-         |  if ($c == 0 || $acc < $bestD) { $bestD = $acc; $best = $cidsRef[$c]; }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.expressions
-         |  .GenericInternalRow(new Object[] {
-         |    java.lang.Integer.valueOf($best),
-         |    java.lang.Double.valueOf($bestD) });
-       """.stripMargin
-    })
+         |${ev.value} = $self.argmin($v);
+         |${ev.isNull} = ${ev.value} == null;
+       """.stripMargin)
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
-/** The argmin scan of [[NearestCentroid]] over a `double[]` slice, for
-  * its interpreted path and for the Lloyd core's packed partitions (the
-  * generated code keeps its own copy of the same loop).
+/** The `n` centroids nearest to an input ARRAY<DOUBLE> row, as ONE node:
+  * `array<struct<d2: double, cell: int>>` with min(n, k) entries ordered
+  * by (d2, cell) ascending, the IVF probe list. The model and the scan
+  * are [[NearestCentroid]]'s, so the list is the one
+  * `slice(array_sort(array(struct(d2, cell), …)), 1, n)` gives over the
+  * model, without a per-cell literal in the plan or a per-row sort, and
+  * its first entry is the row's argmin. A null row or a null coordinate
+  * has no distances: it gets the first n cells in cid order with d2
+  * null, where that sort puts them.
+  */
+case class NearestCells(
+    child: Expression,
+    flat: Array[Double],
+    cids: Array[Int],
+    d: Int,
+    n: Int) extends UnaryExpression {
+  NearestCentroid.check(flat, cids, d)
+  require(n >= 1, s"n=$n")
+
+  override def prettyName: String = "nearest_cells"
+  override def nullable: Boolean = false
+  override def dataType: DataType = ArrayType(StructType(Seq(
+    StructField("d2", DoubleType),
+    StructField("cell", IntegerType, nullable = false))), containsNull = false)
+
+  /** The probe list of `v`, which may be null. */
+  def cells(v: ArrayData): ArrayData = {
+    val m = math.min(n, cids.length)
+    val xs = if (v == null) null else NearestCentroid.coords(v, d)
+    val out: Array[Any] =
+      if (xs == null) Array.tabulate(m)(i => InternalRow(null, cids(i)))
+      else {
+        val (top, dist) = NearestCentroid.nearestN(xs, flat, cids.length, d, m)
+        Array.tabulate(m)(i => InternalRow(dist(i), cids(top(i))))
+      }
+    new GenericArrayData(out)
+  }
+
+  override def eval(input: InternalRow): Any =
+    cells(child.eval(input).asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("nearestCells", this)
+    val v = child.genCode(ctx)
+    ev.copy(
+      code = code"""
+        ${v.code}
+        ArrayData ${ev.value} = $self.cells(${v.isNull} ? null : ${v.value});
+      """,
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** The scan behind [[NearestCentroid]] and [[NearestCells]] over a
+  * `double[]` slice, also run by the Lloyd core over its packed
+  * partitions.
   */
 object NearestCentroid {
+
+  private[expr] def check(flat: Array[Double], cids: Array[Int], d: Int): Unit = {
+    require(d > 0, s"d=$d")
+    require(cids.length >= 1, "empty centroid set")
+    require(flat.length == cids.length * d,
+      s"flat length ${flat.length} != k*d = ${cids.length * d}")
+  }
+
+  /** The first min(d, width) coordinates of `v`, or null if one is null. */
+  private[expr] def coords(v: ArrayData, d: Int): Array[Double] = {
+    val xs = new Array[Double](math.min(v.numElements(), d))
+    var i = 0
+    while (i < xs.length) {
+      if (v.isNullAt(i)) return null
+      xs(i) = v.getDouble(i)
+      i += 1
+    }
+    xs
+  }
 
   /** Squared distance from `xs(off until off + n)` to candidate `c` of
     * the `d`-wide model `flat`: `acc = 0.0; acc += diff*diff`, left to
@@ -480,10 +529,14 @@ object NearestCentroid {
     acc
   }
 
+  /** Whether `a` sorts before `b` in Spark SQL's order on doubles: NaN
+    * above every number and equal to itself.
+    */
+  private[expr] def before(a: Double, b: Double): Boolean = a < b || (b != b && a == a)
+
   /** Index of the candidate nearest to `xs(off until off + n)` among the
-    * `k` in `flat`: scanned in order with a strict `<`, seeded from
-    * candidate 0, so a tie goes to the earlier candidate and an all-NaN
-    * row to candidate 0.
+    * `k` in `flat`, scanned in order: a tie goes to the earlier candidate,
+    * an all-NaN row to candidate 0.
     */
   def nearest(xs: Array[Double], off: Int, n: Int, flat: Array[Double], k: Int, d: Int): Int = {
     var best = 0
@@ -491,10 +544,34 @@ object NearestCentroid {
     var c = 1
     while (c < k) {
       val acc = dist2(xs, off, n, flat, c, d)
-      if (acc < bestD) { bestD = acc; best = c }
+      if (before(acc, bestD)) { bestD = acc; best = c }
       c += 1
     }
     best
+  }
+
+  /** The `m` (≤ k) candidates nearest to `xs`, nearest first with ties
+    * to the earlier candidate, and their distances: an insertion into a
+    * sorted m-slot list, in scan order.
+    */
+  private[expr] def nearestN(
+      xs: Array[Double], flat: Array[Double], k: Int, d: Int, m: Int): (Array[Int], Array[Double]) = {
+    val top = new Array[Int](m)
+    val dist = new Array[Double](m)
+    var size = 0
+    var c = 0
+    while (c < k) {
+      val acc = dist2(xs, 0, xs.length, flat, c, d)
+      if (size < m || before(acc, dist(m - 1))) {
+        var i = if (size < m) { size += 1; size - 1 } else m - 1
+        while (i > 0 && before(acc, dist(i - 1))) {
+          top(i) = top(i - 1); dist(i) = dist(i - 1); i -= 1
+        }
+        top(i) = c; dist(i) = acc
+      }
+      c += 1
+    }
+    (top, dist)
   }
 }
 
@@ -519,18 +596,28 @@ object ArrayVector {
   def sqDist(a: Column, b: Column): Column =
     Bridge.column(ArraySqDist(Bridge.expression(a), Bridge.expression(b)))
 
-  /** Column API: codegen'd K-way argmin (see [[NearestCentroid]]).
-    * `centroids` is (cid, vector) pairs; sorted ascending-cid here so the
-    * strict-< scan reproduces the lowest-cid tiebreak.
+  /** Column API: the row's nearest centroid as struct(cid, dist2) (see
+    * [[NearestCentroid]]). `centroids` is (cid, vector) pairs of one width.
     */
   def nearestCentroid(v: Column, centroids: Seq[(Int, Array[Double])]): Column = {
+    val (flat, cids, d) = model(centroids)
+    Bridge.column(NearestCentroid(Bridge.expression(v), flat, cids, d))
+  }
+
+  /** Column API: the row's `n` nearest centroids as an array of
+    * struct(d2, cell), nearest first (see [[NearestCells]]).
+    */
+  def nearestCells(v: Column, centroids: Seq[(Int, Array[Double])], n: Int): Column = {
+    val (flat, cids, d) = model(centroids)
+    Bridge.column(NearestCells(Bridge.expression(v), flat, cids, d, n))
+  }
+
+  /** (flat vectors, cids, width) in ascending-cid order, so the scan's
+    * earlier-candidate tiebreak is the lowest cid.
+    */
+  private def model(centroids: Seq[(Int, Array[Double])]): (Array[Double], Array[Int], Int) = {
     val sorted = centroids.sortBy(_._1)
-    val d = sorted.head._2.length
-    Bridge.column(NearestCentroid(
-      Bridge.expression(v),
-      sorted.flatMap(_._2).toArray,
-      sorted.map(_._1).toArray,
-      d))
+    (sorted.flatMap(_._2).toArray, sorted.map(_._1).toArray, sorted.head._2.length)
   }
 
   /** Column API: codegen'd PQ asymmetric-distance accumulate. */

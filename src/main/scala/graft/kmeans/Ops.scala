@@ -9,10 +9,10 @@ import org.apache.spark.sql.functions._
   * L1–L2, C4) refer to the SURVEY.md §2 inventory rows.
   *
   * Scale notes (100 TB design):
-  *   - Assignment (J1+A3) is shuffle-free: centroids are tiny (K rows), so
-  *     they are embedded as a literal array and the argmin is a narrow
-  *     per-row projection inside whole-stage codegen — the Spark analogue of
-  *     the reference embedding the centroid list in every mapper RPC
+  *   - Assignment (J1+A3) is shuffle-free: the K-row model rides as a
+  *     runtime reference of one argmin node, a narrow per-row projection
+  *     inside whole-stage codegen — the Spark analogue of the reference
+  *     embedding the centroid list in every mapper RPC
   *     (`master.py:78-87`). No cross-join shuffle of N×K rows ever happens.
   *   - Update (A1+A2) is one partial+final hash aggregate: map-side combine
   *     reduces each task's output to ≤K rows before the exchange, so the
@@ -73,8 +73,10 @@ object Ops {
     // column) — a literal key would be constant-folded out of the window
     // spec, putting WindowExec back on its unpartitioned warning path;
     // this keeps the same single-task K-row plan, declared partitioned.
+    // The coalesce keeps a null pid in the one partition (pmod(null, 1)
+    // is null, which would restart the rank at cid 0).
     val w = Window
-      .partitionBy(pmod(col("pid"), lit(1)))
+      .partitionBy(pmod(coalesce(col("pid"), lit(0L)), lit(1)))
       .orderBy(col("pid"), col("x"), col("y"))
     points
       .orderBy(col("pid"), col("x"), col("y"))
@@ -107,40 +109,26 @@ object Ops {
   /** J1+A3: assign each point to its nearest centroid; ties break to the
     * lowest cid (reference `mapper.py:26-29`: `list.index(min(...))`).
     *
-    * Shuffle-free: the centroid list rides in the plan as a literal array and
-    * `array_min` over `transform(...)` evaluates the K-way argmin per row
-    * inside whole-stage codegen. Struct ordering is lexicographic, so
-    * `min(struct(dist2, cid))` encodes the lowest-cid tiebreak exactly.
+    * Shuffle-free: the engine's one argmin node,
+    * [[graft.expr.NearestCentroid]], over `array(x, y)` with the model as
+    * a runtime reference; its fold `0.0 + dx² + dy²` is bit-identical to
+    * [[dist2]]. A NaN distance ranks above every number, and a null
+    * coordinate gives a null cid and dist2.
     *
     * Output: (pid, x, y, cid, dist2).
     */
   def assign(points: DataFrame, centroids: Seq[Centroid2]): DataFrame = {
     require(centroids.nonEmpty, "assign: empty centroid set")
-    // scalar least/when chain instead of array_min(transform(...)):
-    // higher-order functions are CodegenFallback, the scalar chain keeps the
-    // K-way argmin inside whole-stage codegen (subexpression elimination
-    // dedups the repeated distances). First matching `when` in ascending cid
-    // order reproduces the lowest-cid tiebreak (`mapper.py:28`).
-    val sorted = centroids.sortBy(_.cid)
-    val dists = sorted.map(c => dist2(col("x"), col("y"), lit(c.x), lit(c.y)))
-    val best = if (dists.size == 1) dists.head else least(dists: _*)
-    val cid = sorted.zip(dists).tail.foldLeft(
-      when(dists.head === best, lit(sorted.head.cid))) {
-      case (acc, (c, d)) => acc.when(d === best, lit(c.cid))
-    }
-    points.select(
-      col("pid"),
-      col("x"),
-      col("y"),
-      cid.cast("int").as("cid"),
-      best.as("dist2"))
+    OpsN.withNearest(points, Seq("pid", "x", "y"),
+      array(col("x").cast("double"), col("y").cast("double")),
+      centroids.map(c => (c.cid, Array(c.x, c.y))))
   }
 
   /** J1 variant realized as an explicit broadcast cross join + window argmin
     * (the plan shape the reference literally implements: points × all K
     * centroids, then per-point min — SURVEY.md §2.3). Kept as the
-    * oracle-shaped formulation and as the path for LARGE centroid sets
-    * (K too big for a literal); `assign` is the fast path.
+    * oracle-shaped formulation (the `j1_crossjoin_assign` key); `assign`
+    * is the engine's path at any K.
     */
   def assignCrossJoin(points: DataFrame, centroids: DataFrame): DataFrame = {
     val c = broadcast(

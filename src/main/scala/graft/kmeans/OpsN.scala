@@ -8,14 +8,12 @@ import org.apache.spark.sql.functions._
   * arity, `mapper.py:110`; the reducer's mean is n-D, `reducer.py:124-132`;
   * only the wire protocol clamps it to 2-D, `comm.proto:50-53`).
   *
-  * Scale notes: assignment stays a shuffle-free per-row projection (the
-  * K·d centroid model rides as runtime references of one codegen'd
-  * argmin node — [[graft.expr.NearestCentroid]]); the update is a single
+  * Scale notes: assignment stays a shuffle-free per-row projection at any
+  * K (the K·d centroid model rides as a runtime reference of one argmin
+  * node — [[graft.expr.NearestCentroid]]); the update is a single
   * partial+final aggregation via [[VectorMean]], so the exchange carries
-  * O(K·d·partitions) bytes. For K·d too large for one per-row loop
-  * (≫10^4), use [[assignCrossJoinN]], which broadcasts the centroid
-  * table instead. [[LloydCore]] runs the Lloyd loops' assign + update;
-  * these operators are the reference it is tested against.
+  * O(K·d·partitions) bytes. [[LloydCore]] runs the Lloyd loops' assign +
+  * update; these operators are the reference it is tested against.
   */
 object OpsN {
 
@@ -25,15 +23,6 @@ object OpsN {
       col("vec_id").as("pid"),
       col("embedding").cast("array<double>").as("features"))
 
-  /** Squared Euclidean distance between two ARRAY<DOUBLE> columns — the
-    * codegen'd [[graft.expr.ArraySqDist]] expression (same left-to-right
-    * multiply/add fold as `aggregate(zip_with(...))`, so bit-identical to
-    * DuckDB's `list_sum(list_transform(...))`, but inside whole-stage
-    * codegen instead of the interpreted higher-order-function path).
-    */
-  def dist2N(a: Column, b: Column): Column =
-    graft.expr.ArrayVector.sqDist(a, b)
-
   /** L1 n-D: first K rows in pid order become centroids 0..K-1.
     * (Rank after limit(k) touches only K rows; the non-foldable
     * constant-zero partition key avoids WindowExec's unpartitioned-window
@@ -41,7 +30,7 @@ object OpsN {
     */
   def initFirstKN(points: DataFrame, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(pmod(col("pid"), lit(1))).orderBy(col("pid"))
+      .partitionBy(pmod(coalesce(col("pid"), lit(0L)), lit(1))).orderBy(col("pid"))
     points
       .orderBy(col("pid"))
       .limit(k)
@@ -67,68 +56,29 @@ object OpsN {
     require(
       centroids.forall(_.features.length == d),
       "assignN: ragged centroid dimensions")
-    // ONE codegen'd argmin node with the model as runtime references
-    // ([[graft.expr.NearestCentroid]]): the plan stays one node at any k,
-    // and its generated source does not change with the model.
-    // TWO projections (argmin struct → field extraction), the second
-    // referencing the first's ATTRIBUTE: CollapseProject keeps a
-    // non-cheap alias referenced twice apart, so the argmin evaluates
-    // once per row, and whole-stage codegen still fuses the pair.
-    val nc = graft.expr.ArrayVector.nearestCentroid(
-      col("features"),
+    withNearest(points, Seq("pid", "features"), col("features"),
       centroids.map(c => (c.cid, c.features)))
-    points
-      .select(col("pid"), col("features"), nc.as("__gnc"))
-      .select(
-        col("pid"),
-        col("features"),
-        col("__gnc.cid").as("cid"),
-        col("__gnc.dist2").as("dist2"))
   }
 
-  /** [[assignN]] while the centroid set fits the per-row argmin loop
-    * (k ≤ `literalBound`), [[assignCrossJoinN]] past it: the single-node
-    * loop is unbeatable at small k (zero shuffle, O(k·d) per row), but a
-    * corpus-sized quantizer (k ~ n/occupancy) needs the broadcast join's
-    * per-partition hash relation rather than an every-row full scan of
-    * the model. Same distances, same lowest-cid tiebreak either way;
-    * downstream aggregation order (and so last-ulp mean noise) can
-    * differ. Quantizer FITS never come here ([[LloydCore]] runs any k);
-    * this is the final cell assignment of the fitted quantizer.
+  /** `keep` plus the (cid, dist2) of the centroid nearest to each row's
+    * vector `v`: ONE codegen'd argmin node with the model as a runtime
+    * reference ([[graft.expr.NearestCentroid]]), so the plan stays one
+    * node at any k and its generated source does not change with the
+    * model. TWO projections (argmin struct → field extraction), the second
+    * referencing the first's ATTRIBUTE: CollapseProject keeps a non-cheap
+    * alias referenced twice apart, so the argmin evaluates once per row,
+    * and whole-stage codegen still fuses the pair.
     */
-  def assignNAdaptive(
+  private[kmeans] def withNearest(
       points: DataFrame,
-      centroids: Seq[CentroidN],
-      literalBound: Int = 64): DataFrame =
-    if (centroids.size <= literalBound) assignN(points, centroids)
-    else {
-      val spark = points.sparkSession
-      import spark.implicits._
-      assignCrossJoinN(points,
-        centroids.map(c => (c.cid, c.features.toSeq)).toDF("cid", "features"))
-    }
-
-  /** Broadcast-join formulation for centroid sets too large to inline as a
-    * plan literal. Per-row argmin via `min_by`-style struct min under a
-    * groupBy on a generated row id.
-    */
-  def assignCrossJoinN(points: DataFrame, centroids: DataFrame): DataFrame = {
-    val c = broadcast(
-      centroids.select(col("cid").cast("int").as("cid"), col("features").as("cf")))
+      keep: Seq[String],
+      v: Column,
+      centroids: Seq[(Int, Array[Double])]): DataFrame = {
+    val nc = graft.expr.ArrayVector.nearestCentroid(v, centroids)
     points
-      .withColumn("rid", monotonically_increasing_id())
-      .crossJoin(c)
-      .withColumn("dist2", dist2N(col("features"), col("cf")))
-      .groupBy(col("rid"))
-      .agg(
-        first(col("pid")).as("pid"),
-        first(col("features")).as("features"),
-        min(struct(col("dist2"), col("cid"))).as("best"))
-      .select(
-        col("pid"),
-        col("features"),
-        col("best.cid").as("cid"),
-        col("best.dist2").as("dist2"))
+      .select(keep.map(col) :+ nc.as("__gnc"): _*)
+      .select(keep.map(col) ++
+        Seq(col("__gnc.cid").as("cid"), col("__gnc.dist2").as("dist2")): _*)
   }
 
   /** A2 n-D: per-cluster mean vector via the one-pass [[VectorMean]]
@@ -193,7 +143,7 @@ object OpsN {
     * from the dense side; spec-locked against exactly that).
     *
     * Scale shape: each round is one map-only [[assignN]] distance pass
-    * (candidates ride as plan literals) + a TakeOrdered(l) — never a
+    * (candidates ride as a runtime reference) + a TakeOrdered(l) — never a
     * global sort; the final weighting is one more assign pass + an
     * O(candidates) count, and the greedy finish runs driver-side over
     * the ≤ 1+rounds·l candidates, exactly like Lloyd's model state.
@@ -270,8 +220,8 @@ object OpsN {
     * whole population for inliers and a diffuse cluster's core for
     * outliers; the per-cluster cut normalizes by local density).
     *
-    * Scale shape: the assignment is the map-only [[assignN]] literal
-    * chain (no shuffle); the per-cluster cut is ONE partial+final
+    * Scale shape: the assignment is the map-only [[assignN]] (no
+    * shuffle); the per-cluster cut is ONE partial+final
     * aggregation producing k rows that broadcast back onto the
     * assigned stream; the outlier filter is map-side. One k-row
     * shuffle total, never a corpus sort. The exact per-group buffer

@@ -191,49 +191,40 @@ object Similarity {
     // computed HERE, below the probe join, so it costs O(d) once per
     // corpus row — not once per (query-probe × corpus-row) candidate
     // (same hoist as lshTopK's signature projection).
-    val cells = OpsN.assignNAdaptive(pts, model)
+    val cells = OpsN.assignN(pts, model)
       .select(col("pid").as("cid_id"), col("features").as("cv"),
         norm(col("features")).as("cn"), col("cid").as("cell"))
     ivfProbeScore(queries, cells, model, k, nprobe)
   }
 
+  /** The nprobe nearest cells of a query vector, nearest first, as
+    * struct(d2, cell) (shared by the exact and quantized probe paths and
+    * [[probeLegs]]): one [[graft.expr.NearestCells]] node.
+    */
+  private def probeCells(
+      v: Column, model: Seq[graft.kmeans.CentroidN], nprobe: Int): Column =
+    graft.expr.ArrayVector.nearestCells(v, model.map(c => (c.cid, c.features)), nprobe)
+
   /** The probe+score half of IVF search, shared by [[ivfTopK]] (inline
     * quantizer) and [[ivfTopKFromStore]] (persisted index): each query
-    * explodes into its `nprobe` nearest cells (centroids ride as plan
-    * literals — O(nlist·d) doubles), the exploded query side broadcasts,
-    * and scoring touches only the probed cells' rows. `cells` must carry
-    * (cid_id, cv, cn, cell) with the norm PREcomputed — from the store
-    * that means the norm is read, not recomputed.
+    * explodes into its `nprobe` nearest cells ([[probeCells]]: the
+    * O(nlist·d) model rides as a runtime reference of one node), the
+    * exploded query side broadcasts, and scoring touches only the probed
+    * cells' rows. `cells` must carry (cid_id, cv, cn, cell) with the norm
+    * PREcomputed — from the store that means the norm is read, not
+    * recomputed.
     */
-  /** The nprobe nearest cells of a query vector, as a sortable struct
-    * array (shared by the exact and quantized probe paths).
-    */
-  private def probeCellsCol(
-      model: Seq[graft.kmeans.CentroidN],
-      nprobe: Int): Column => Column =
-    (q: Column) =>
-      slice(
-        array_sort(
-          array(model.map(c =>
-            struct(
-              graft.expr.ArrayVector
-                .sqDist(q, graft.expr.ArrayVector.vecLit(c.features.toIndexedSeq))
-                .as("d2"),
-              lit(c.cid).as("cell"))): _*)),
-        1, nprobe)
-
   private def ivfProbeScore(
       queries: DataFrame,
       cells: DataFrame,
       model: Seq[graft.kmeans.CentroidN],
       k: Int,
       nprobe: Int): DataFrame = {
-    val probeCells = probeCellsCol(model, nprobe)
     val q = broadcast(
       queries
         .select(col("id").as("qid"), col("vec").as("qv"),
           norm(col("vec")).as("qn"),
-          explode(probeCells(col("vec"))).as("probe"))
+          explode(probeCells(col("vec"), model, nprobe)).as("probe"))
         .select(col("qid"), col("qv"), col("qn"), col("probe.cell").as("cell")))
     val scored = cells.join(q, Seq("cell"))
       .filter(col("qid") =!= col("cid_id"))
@@ -278,7 +269,7 @@ object Similarity {
       .write.mode("overwrite").parquet(s"$path/centroids")
     Seq((n, nlist)).toDF("fit_count", "nlist")
       .write.mode("overwrite").parquet(s"$path/meta")
-    val cells = OpsN.assignNAdaptive(pts, model)
+    val cells = OpsN.assignN(pts, model)
       .select(col("pid").as("cid_id"), col("features").as("cv"),
         norm(col("features")).as("cn"), col("cid").as("cell"))
     writeCells(cells, s"$path/cells", partitionCells, "overwrite")
@@ -359,7 +350,7 @@ object Similarity {
     val spark = newVectors.sparkSession
     val model = readIvfCentroids(spark, path)
     val rows = graft.util.OpCaches.cache(
-      OpsN.assignNAdaptive(
+      OpsN.assignN(
           newVectors.select(col("id").as("pid"), col("vec").as("features")),
           model)
         .select(col("pid").as("cid_id"), col("features").as("cv"),
@@ -413,7 +404,7 @@ object Similarity {
     val spark = batch.sparkSession
     val model = readIvfCentroids(spark, path)
     val rows = graft.util.OpCaches.cache(
-      OpsN.assignNAdaptive(
+      OpsN.assignN(
           batch.select(col("id").as("pid"), col("vec").as("features")),
           model)
         .select(col("pid").as("cid_id"), col("features").as("cv"),
@@ -627,7 +618,7 @@ object Similarity {
     Seq((n, nlist)).toDF("fit_count", "nlist")
       .write.mode("overwrite").parquet(s"$path/meta")
     val cells = graft.util.OpCaches.cache(
-      OpsN.assignNAdaptive(pts, model)
+      OpsN.assignN(pts, model)
         .select(col("pid").as("cid_id"), col("features").as("cv"),
           norm(col("features")).as("cn"), col("cid").as("cell")))
     writeCells(cells, s"$path/cells", partitionCells, "overwrite")
@@ -681,7 +672,6 @@ object Similarity {
     val (mins, maxs) = readSqBounds(spark, path)
     val deltasLit = graft.expr.ArrayVector.vecLit(sqDeltas(mins, maxs))
     val minsLit = graft.expr.ArrayVector.vecLit(mins)
-    val probeCells = probeCellsCol(model, nprobe)
     // broadcast query prep: qΔ and the per-query constant live on the
     // tiny side; HOFs here run once per query row, never per cell row
     val q = broadcast(
@@ -689,7 +679,7 @@ object Similarity {
         .select(col("id").as("qid"), col("vec").as("qvec"),
           norm(col("vec")).as("qn"),
           zip_with(col("vec"), deltasLit, (a, b) => a * b).as("qdelta"),
-          explode(probeCells(col("vec"))).as("probe"))
+          explode(probeCells(col("vec"), model, nprobe)).as("probe"))
         .select(col("qid"), col("qvec"), col("qn"), col("qdelta"),
           (graft.expr.ArrayVector.dot(col("qvec"), minsLit) +
             lit(128.0) * aggregate(col("qdelta"), lit(0.0), (acc, x) => acc + x))
@@ -931,7 +921,7 @@ object Similarity {
     Seq((n, nlist)).toDF("fit_count", "nlist")
       .write.mode("overwrite").parquet(s"$path/meta")
     val cells = graft.util.OpCaches.cache(
-      OpsN.assignNAdaptive(pts, model)
+      OpsN.assignN(pts, model)
         .select(col("pid").as("cid_id"), col("features").as("cv"),
           norm(col("features")).as("cn"), col("cid").as("cell")))
     writeCells(cells, s"$path/cells", partitionCells, "overwrite")
@@ -1041,12 +1031,11 @@ object Similarity {
     // plan analysis at the 8-bit default.
     val lutCol = graft.expr.ArrayVector.pqLut(
       col("vec"), pqBooks(codebooks), dsub, ksub)
-    val probeCells = probeCellsCol(model, nprobe)
     val q = broadcast(
       queries
         .select(col("id").as("qid"), col("vec").as("qvec"),
           norm(col("vec")).as("qn"), lutCol.as("lut"),
-          explode(probeCells(col("vec"))).as("probe"))
+          explode(probeCells(col("vec"), model, nprobe)).as("probe"))
         .select(col("qid"), col("qvec"), col("qn"), col("lut"),
           col("probe.cell").as("cell")))
     // same pre-ranking tombstone/segment handling as the SQ tier
@@ -1086,7 +1075,7 @@ object Similarity {
     * identical output (same quantizer, same probe policy — asserted in
     * SimilaritySpec), but the corpus embeddings are never touched. The
     * centroids load is O(nlist) driver rows (they re-enter the plan as
-    * literals, exactly as the inline path inlines its freshly fit model);
+    * the probe node's model, exactly as in the inline path);
     * the cells scan reads only (cid_id, cv, cn, cell) from the store.
     */
   def ivfTopKFromStore(
@@ -1135,10 +1124,7 @@ object Similarity {
     // so the sizing+sampling pair costs ONE corpus count, not two
     val model =
       LloydN.iterateNSampled(pts, nlist, maxIter, fitSampleCap, knownCount)
-    // assignNAdaptive: the literal least/when chain while the quantizer
-    // fits a codegen span, the broadcast cross-join argmin past it (same
-    // distances, same lowest-cid tiebreak — invisible to results)
-    val assigned = OpsN.assignNAdaptive(pts, model)
+    val assigned = OpsN.assignN(pts, model)
     // cache: both sides of the within-cell self-join and the surviving
     // anti-join read the assignment (else it computes three times);
     // OpCaches-tracked for post-materialize release
@@ -1228,10 +1214,10 @@ object Similarity {
     * boundary-sensitive users (graph quality, per-doc redundancy): the
     * round-14 quiet-box certification measured it at 1.15× the confined
     * form's wall at 10× scale (9.80 s vs 8.56 s, `BENCH_full_r14.json`)
-    * — the ≤ nprobe× pair-volume contract holds with margin now that
-    * probe legs are computed by iterated argmin above 64 cells
-    * ([[probeLegs]]) instead of a per-row codebook sort. Cost-sensitive
-    * bulk paths keep the confined default.
+    * — the ≤ nprobe× pair-volume contract holds with margin: the probe
+    * legs ([[probeLegs]]) come from one per-row scan of the model, not a
+    * per-row codebook sort. Cost-sensitive bulk paths keep the confined
+    * default.
     *
     * Output: (id, rank, nbr_id, sim), sim floor-truncated to 6 decimals
     * AFTER ranking (ranking compares raw doubles).
@@ -1250,17 +1236,16 @@ object Similarity {
     val pts = vectors.select(col("id").as("pid"), col("vec").as("features"))
     val model =
       LloydN.iterateNSampled(pts, nlist, maxIter, fitSampleCap, knownCount)
-    val assigned = OpsN.assignNAdaptive(pts, model)
+    val assigned = OpsN.assignN(pts, model)
     // both sides of the within-cell join read the assignment;
     // OpCaches-tracked for post-materialize release
     val cells = graft.util.OpCaches.cache(
       assigned.select(
         col("pid").as("id"), col("features").as("v"),
         norm(col("features")).as("nn"), col("cid").as("cell")))
-    // probe side: the primary cell at nprobe=1 (bit-identical to the
-    // confined form — probeLegs' (d2, cell) order is the same
-    // argmin/lowest-cid tiebreak as assignNAdaptive), the nprobe
-    // nearest cells otherwise
+    // probe side: the primary cell at nprobe=1, the nprobe nearest cells
+    // otherwise (probeLegs' first leg is the same argmin, lowest-cid
+    // tiebreak, as assignN's cell)
     val probes =
       if (nprobe == 1) cells.select(col("cell"), col("id"), col("v"), col("nn"))
       else probeLegs(cells, model, nprobe)
@@ -1282,70 +1267,19 @@ object Similarity {
   }
 
   /** The multi-probe legs of [[knnJoin]]: every vector replicated into
-    * its `min(nprobe, nlist)` nearest cells. Two formulations with
-    * IDENTICAL output (tiebreak (d2 asc, cell asc) in both — the probe
-    * sets are bit-identical, locked by KnnJoinSpec's cross-form test):
-    *
-    *  - nlist ≤ `literalBound`: the [[probeCellsCol]] form — one
-    *    per-row `slice(array_sort(array(<nlist structs>)), 1, nprobe)`.
-    *    Fine while the quantizer is small; but the expression carries
-    *    the whole codebook as an O(nlist·d)-literal tree and pays an
-    *    O(nlist log nlist) array build+sort PER ROW.
-    *  - nlist > `literalBound`: iterated argmin — leg 0 is the ALREADY
-    *    COMPUTED primary assignment riding on `cells`; each further leg
-    *    is one crossJoin against the broadcast centroid table with the
-    *    previously-picked cells excluded, reduced by a map-side-combined
-    *    `min(struct(d2, cell))` (the [[graft.kmeans.OpsN.assignCrossJoinN]]
-    *    discipline). Distance work stays the inherent O(n·nlist) on the
-    *    codegen'd [[graft.expr.ArraySqDist]], every exchange is O(n)
-    *    rows, and no nlist-sized per-row array is ever allocated or
-    *    sorted. This is the 100-TB form: the SIZED quantizer grows
-    *    nlist ~ n/64, so at 10× bench scale the literal form's per-row
-    *    sort over ~10³ cells (a ~10⁵-literal expression) multiplied the
-    *    probe form's wall ~4× over the confined form against a
-    *    ≤ nprobe× pair-volume contract (r12–r13 driver boxes); the
-    *    iterated form keeps the probe overhead proportional to the
-    *    assignment work the confined form already pays.
+    * its `min(nprobe, nlist)` nearest cells, in (d2, cell) order, by one
+    * [[graft.expr.NearestCells]] scan per row: O(nlist·d) distance work
+    * and an nprobe-slot insertion, with no per-cell literal in the plan,
+    * no per-row sort and no exchange.
     */
   private[graft] def probeLegs(
       cells: DataFrame,
       model: Seq[graft.kmeans.CentroidN],
-      nprobe: Int,
-      literalBound: Int = 64): DataFrame = {
-    val np = math.min(nprobe, model.size)
-    if (model.size <= literalBound)
-      cells
-        .select(col("id"), col("v"), col("nn"),
-          explode(probeCellsCol(model, np)(col("v"))).as("probe"))
-        .select(col("probe.cell").as("cell"), col("id"), col("v"), col("nn"))
-    else {
-      val spark = cells.sparkSession
-      import spark.implicits._
-      val cdf = broadcast(
-        model.map(c => (c.cid, c.features.toSeq)).toDF("pcid", "pcf"))
-      // leg 0: the primary assignment (same argmin, already computed)
-      var legs = cells.select(col("id"), array(col("cell")).as("pcells"))
-      for (_ <- 1 until np) {
-        legs = cells.select(col("id"), col("v"))
-          .join(legs, "id")
-          .crossJoin(cdf)
-          .filter(!array_contains(col("pcells"), col("pcid")))
-          .withColumn("d2",
-            graft.kmeans.OpsN.dist2N(col("v"), col("pcf")))
-          .groupBy(col("id"))
-          .agg(
-            first(col("pcells")).as("prev"),
-            min(struct(col("d2"), col("pcid"))).as("best"))
-          .select(col("id"),
-            concat(col("prev"),
-              array(col("best").getField("pcid"))).as("pcells"))
-      }
-      cells.select(col("id"), col("v"), col("nn"))
-        .join(legs, "id")
-        .select(explode(col("pcells")).as("cell"),
-          col("id"), col("v"), col("nn"))
-    }
-  }
+      nprobe: Int): DataFrame =
+    cells
+      .select(col("id"), col("v"), col("nn"),
+        explode(probeCells(col("v"), model, nprobe)).as("probe"))
+      .select(col("probe.cell").as("cell"), col("id"), col("v"), col("nn"))
 
   /** [[knnJoin]] with the cell count derived from the corpus size at a
     * target per-cell occupancy — the same ⌈n / targetCellSize⌉ sizing

@@ -63,9 +63,11 @@ class PlanShapeSpec extends AnyFunSuite {
     val centroids = Ops.collectCentroids(Ops.initFirstK(p, 4))
     val plan = executed(Ops.assign(p, centroids)).toString
     assert(!plan.contains("Exchange"), s"unexpected shuffle:\n${plan.take(800)}")
-    // the scalar least/when argmin keeps every Project inside whole-stage
-    // codegen ("*(n)" prefixes); an un-starred Project would mean an
-    // interpreted fallback in the hot path
+    // the K-way argmin is one nearest_centroid node over array(x, y)
+    assert("nearest_centroid".r.findAllIn(plan).size === 1, plan.take(1200))
+    // it keeps every Project inside whole-stage codegen ("*(n)"
+    // prefixes); an un-starred Project would mean an interpreted
+    // fallback in the hot path
     assert(plan.contains("*("), s"no codegen span in:\n${plan.take(800)}")
     assert(
       plan.linesIterator.count(_.contains("Project")) ===
@@ -301,6 +303,15 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(embScans.nonEmpty)
     assert(embScans.forall(_.toString.contains("LessThan(vec_id,10)")),
       "an embeddings scan without the query filter re-reads the corpus")
+    // the probe list is one nearest_cells node carrying the quantizer, not
+    // a tree with one vector literal per cell
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val exprs = df.queryExecution.sparkPlan.collect { case p => p.expressions }.flatten
+    assert(exprs.map(_.collect { case n: graft.expr.NearestCells => n }.size).sum === 1)
+    assert(!exprs.exists(_.exists {
+      case l: Literal => l.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]
+      case _ => false
+    }), "a vector literal in the probe plan")
   }
 
   test("ivfTopKFromStorePq probes the PQ code tier (pqcode bytes, no cv) " +

@@ -128,6 +128,78 @@ class ArrayVectorSpec extends AnyFunSuite {
     assert((interp, gen) === ((3, 3)))
   }
 
+  /** Rows of the odd-input fixture beside the model {0: (∞, 0), 1: (5, 0),
+    * 2: (0, 0)}: from (∞, 0) the distance to centroid 0 is NaN and to the
+    * others ∞; a null coordinate, a null row, a ragged row and a NaN row.
+    */
+  private val oddModel = Seq(
+    (0, Array(Double.PositiveInfinity, 0.0)), (1, Array(5.0, 0.0)), (2, Array(0.0, 0.0)))
+  private def oddRows = Seq[(Long, Option[Seq[Option[Double]]])](
+    1L -> Some(Seq(Some(Double.PositiveInfinity), Some(0.0))),
+    2L -> Some(Seq(None, Some(0.0))),
+    3L -> None,
+    4L -> Some(Seq(Some(4.0))),
+    5L -> Some(Seq(Some(Double.NaN), Some(0.0))),
+    6L -> Some(Seq(Some(1.0), Some(2.0)))).toDF("id", "v")
+
+  /** `body` over the fixture evaluated interpreted (a local relation folds
+    * the projection) and inside whole-stage codegen (above an exchange,
+    * with fallback off so a compile error fails the test).
+    */
+  private def bothPaths[T](body: org.apache.spark.sql.DataFrame => T): (T, T) = {
+    val interp = body(oddRows)
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try (interp, body(oddRows.repartition(1)))
+    finally spark.conf.unset("spark.sql.codegen.fallback")
+  }
+
+  test("odd input: argmin orders NaN above numbers; null coordinate -> null") {
+    val (interp, gen) = bothPaths { df =>
+      df.select($"id", ArrayVector.nearestCentroid($"v", oddModel).as("nc"))
+        .select($"id", $"nc.cid", $"nc.dist2").collect()
+        .map(r => r.getLong(0) -> (Option(r.get(1)), Option(r.get(2)).map(_.toString)))
+        .toMap
+    }
+    val inf = Some(Double.PositiveInfinity.toString)
+    val want = Map(
+      1L -> (Some(1), inf),                       // ∞ beats NaN; lowest cid of the ∞s
+      2L -> (None, None), 3L -> (None, None),     // null coordinate, null row
+      4L -> (Some(1), Some("1.0")),               // ragged: (4) against x only
+      5L -> (Some(0), Some("NaN")),               // all NaN: the lowest cid
+      6L -> (Some(2), Some("5.0")))
+    assert(interp === want)
+    assert(gen === want)
+  }
+
+  test("odd input: top-n cells equal the literal array_sort tree") {
+    import org.apache.spark.sql.functions._
+    // the per-cell literal tree the probe paths used before the node
+    def tree(v: org.apache.spark.sql.Column, n: Int) =
+      slice(array_sort(array(oddModel.map { case (cid, f) =>
+        struct(ArrayVector.sqDist(v, ArrayVector.vecLit(f.toIndexedSeq)).as("d2"),
+          lit(cid).as("cell"))
+      }: _*)), 1, n)
+    def cells(df: org.apache.spark.sql.DataFrame, c: org.apache.spark.sql.Column) =
+      df.select($"id", c.as("p")).collect()
+        .map(r => r.getLong(0) -> r.getSeq[org.apache.spark.sql.Row](1)
+          .map(e => (Option(e.get(0)).map(_.toString), e.getInt(1))))
+        .toMap
+    for (n <- Seq(1, 2, 3, 5)) {
+      val (interp, gen) = bothPaths(df => cells(df, ArrayVector.nearestCells($"v", oddModel, n)))
+      val (wantI, wantG) = bothPaths(df => cells(df, tree($"v", n)))
+      // the tree read a null coordinate as 0.0; the node gives it no
+      // distances, as it gives a null row
+      assert(interp - 2L === wantI - 2L, s"n=$n")
+      assert(gen - 2L === wantG - 2L, s"n=$n")
+      assert(interp === gen, s"n=$n")
+      // a null row or coordinate: the first cells in cid order, d2 null
+      assert(interp(3L) === Seq((None, 0), (None, 1), (None, 2)).take(n))
+      assert(interp(2L) === interp(3L))
+    }
+    assert(bothPaths(df => cells(df, ArrayVector.nearestCells($"v", oddModel, 3)))._1(1L) ===
+      Seq(("Infinity", 1), ("Infinity", 2), ("NaN", 0)).map { case (d, c) => (Some(d), c) })
+  }
+
   test("whole-stage codegen covers the expression (no interpreted fallback)") {
     // needs a non-local source: literal local relations constant-fold to a
     // LocalTableScan with no codegen stage at all

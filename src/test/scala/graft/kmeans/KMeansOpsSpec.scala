@@ -63,6 +63,62 @@ class KMeansOpsSpec extends AnyFunSuite {
     assert(a.toSeq === b.toSeq)
   }
 
+  /** The 2-D argmin `Ops.assign` planned before the `nearest_centroid`
+    * node, kept as the reference: `least` over the k distances and a
+    * when-chain taking the first cid whose distance equals it.
+    */
+  private def chainAssign(points: DataFrame, centroids: Seq[Centroid2]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, least, lit, when}
+    val sorted = centroids.sortBy(_.cid)
+    val dists = sorted.map(c => Ops.dist2(col("x"), col("y"), lit(c.x), lit(c.y)))
+    val best = if (dists.size == 1) dists.head else least(dists: _*)
+    val cid = sorted.zip(dists).tail.foldLeft(when(dists.head === best, lit(sorted.head.cid))) {
+      case (acc, (c, d)) => acc.when(d === best, lit(c.cid))
+    }
+    points.select(col("pid"), col("x"), col("y"), cid.cast("int").as("cid"), best.as("dist2"))
+  }
+
+  /** (pid, cid, dist2 bits), nulls as None, in pid order. */
+  private def assigned(df: DataFrame): Seq[(Long, Option[Int], Option[Long])] =
+    df.select("pid", "cid", "dist2").collect().toSeq
+      .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Int]),
+        Option(r.get(2)).map(d => java.lang.Double.doubleToRawLongBits(d.asInstanceOf[Double]))))
+      .sortBy(_._1)
+
+  test("A3: assign is bit-identical to the least/when chain, odd input too") {
+    val inf = Double.PositiveInfinity
+    val pts = Seq[(Long, Option[Double], Option[Double])](
+      (1, Some(inf), Some(0.0)), (2, Some(-inf), Some(3.0)), (3, Some(Double.NaN), Some(0.0)),
+      (4, Some(0.0), Some(Double.NaN)), (5, None, Some(1.0)), (6, Some(2.0), None),
+      (7, Some(1e308), Some(1e308)), (8, Some(5.0), Some(0.0)), (9, Some(2.5), Some(0.0)),
+      (10, Some(-0.0), Some(0.0)), (11, Some(0.1), Some(0.7))).toDF("pid", "x", "y")
+    val models = Seq(
+      Seq(Centroid2(0, inf, 0.0), Centroid2(1, 5.0, 0.0), Centroid2(2, 0.0, 0.0)),
+      Seq(Centroid2(3, Double.NaN, 0.0), Centroid2(1, 1.0, 1.0), Centroid2(2, 1.0, 1.0)),
+      Seq(Centroid2(0, 0.0, 0.0), Centroid2(1, 5.0, 0.0)),
+      Seq(Centroid2(7, 0.3, 0.3)))
+    for (cs <- models; df <- Seq(pts, pts.repartition(2))) {
+      val got = assigned(Ops.assign(df, cs))
+      assert(got === assigned(chainAssign(df, cs)), cs)
+      assert(got.collect { case (5L, c, d) => (c, d) } === Seq((None, None)))
+    }
+  }
+
+  test("A3: assign at k=100 equals a driver-side argmin in SQL order") {
+    // past the size at which the chain took about 20 s to plan per step
+    val rnd = new scala.util.Random(3)
+    val cs = (0 until 100).map(i => Centroid2(i, rnd.nextInt(10) * 1.0, rnd.nextInt(10) * 1.0))
+    val xs = (0 until 300).map(i => (i.toLong, rnd.nextDouble() * 10, rnd.nextDouble() * 10)) ++
+      Seq((300L, Double.PositiveInfinity, 0.0), (301L, Double.NaN, 1.0), (302L, 4.0, 4.0))
+    val want = xs.map { case (pid, x, y) =>
+      // a NaN distance ranks above every number (TotalOrdering), ties to the lowest cid
+      val (d, c) = cs.map(c => (c.dist2To(x, y), c.cid))
+        .min(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int))
+      (pid, Some(c), Some(java.lang.Double.doubleToRawLongBits(d)))
+    }
+    assert(assigned(Ops.assign(xs.toDF("pid", "x", "y"), rnd.shuffle(cs))) === want)
+  }
+
   test("A2: mean update is the arithmetic mean of members; empty clusters drop") {
     val pts = pointsDf((1, 0.0, 0.0), (2, 2.0, 2.0), (3, 100.0, 100.0))
     val cs = Seq(

@@ -2,7 +2,7 @@ package graft.kmeans
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{array, col}
+import org.apache.spark.sql.functions.col
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.SpanSugar._
@@ -57,17 +57,6 @@ class LloydCoreSpec extends AnyFunSuite {
   private def cfg(k: Int, iters: Int, policy: EmptyClusterPolicy) =
     KMeansConfig(k, maxIter = iters, tol = -1.0, emptyClusters = policy)
 
-  /** `Ops.assign` up to k = 8. Its k-deep least/when chain takes about
-    * 20 s to plan per step at k = 100, so there the same argmin (same
-    * `0.0 + dx² + dy²` fold, same lowest-cid tiebreak) comes from the
-    * `nearest_centroid` node over (x, y); `Ops.update` means it either way.
-    */
-  private def assign2(pts: DataFrame, cs: Seq[Centroid2]): DataFrame =
-    if (cs.size <= 8) Ops.assign(pts, cs)
-    else OpsN.assignN(pts.withColumn("features", array(col("x"), col("y"))),
-        cs.map(c => CentroidN(c.cid, Array(c.x, c.y))))
-      .select(col("pid"), col("features")(0).as("x"), col("features")(1).as("y"), col("cid"))
-
   test("2-D fit steps are bit-identical to Ops.update(Ops.assign(..))") {
     val df = points(2).map { case (pid, f) => (pid, f(0), f(1)) }.toDF("pid", "x", "y")
     def xy(cs: Seq[Centroid2]) = bits(cs.map(c => (c.cid, Seq(c.x, c.y))))
@@ -75,7 +64,7 @@ class LloydCoreSpec extends AnyFunSuite {
       for (k <- ks; policy <- policies) {
         val steps = reference(Ops.collectCentroids(Ops.initFirstK(pts, k)), 3,
           policy == EmptyClusterPolicy.Keep, (c: Centroid2) => c.cid) { cs =>
-          Ops.collectCentroids(Ops.update(assign2(pts, cs)))
+          Ops.collectCentroids(Ops.update(Ops.assign(pts, cs)))
         }
         for (iters <- Seq(1, 3)) {
           val got = Lloyd.fit(pts, cfg(k, iters, policy))
@@ -131,6 +120,25 @@ class LloydCoreSpec extends AnyFunSuite {
             bits(want.map(c => (c.cid, c.features.toSeq))), s"n-D p=$p k=$k")
         }
       }
+    }
+  }
+
+  test("first-K init with a null pid: distinct cids 0..k-1, as the core's") {
+    // the null pid sorts first (SQL's ORDER BY) and must not open a second
+    // window partition that restarts the rank at cid 0
+    val df2 = (0 until 6).map(i => (if (i == 3) None else Some(i.toLong), i * 1.0, 0.0))
+      .toDF("pid", "x", "y")
+    val dfN = (0 until 6).map(i => (if (i == 3) None else Some(i.toLong), Array(i * 1.0)))
+      .toDF("pid", "features")
+    for (k <- Seq(2, 4)) {
+      val init2 = Ops.collectCentroids(Ops.initFirstK(df2, k))
+      assert(init2.map(_.cid) === (0 until k), s"2-D k=$k")
+      assert(init2.head === Centroid2(0, 3.0, 0.0))
+      assert(init2 === Lloyd.iterate(df2, k, 0), s"2-D k=$k")
+      val initN = OpsN.collectCentroidsN(OpsN.initFirstKN(dfN, k))
+      assert(initN.map(_.cid) === (0 until k), s"n-D k=$k")
+      assert(bits(initN.map(c => (c.cid, c.features.toSeq))) ===
+        bits(LloydN.iterateN(dfN, k, 0).map(c => (c.cid, c.features.toSeq))), s"n-D k=$k")
     }
   }
 

@@ -65,25 +65,6 @@ class NDimSpec extends AnyFunSuite {
     assert(got === Map(1L -> 0, 2L -> 1, 3L -> 0))
   }
 
-  test("assignN and assignCrossJoinN agree") {
-    val pts = ndDf(
-      (1L, Seq(0.0, 1.0, 2.0)),
-      (2L, Seq(9.0, 9.0, 9.0)),
-      (3L, Seq(4.0, 4.0, 4.0)),
-      (4L, Seq(-1.0, 0.0, 1.0)))
-    val cs = Seq(
-      CentroidN(0, Array(0.0, 0.0, 0.0)),
-      CentroidN(1, Array(9.0, 9.0, 9.0)))
-    val csDf = cs.map(c => (c.cid, c.features)).toDF("cid", "features")
-    val a = OpsN.assignN(pts, cs)
-      .select("pid", "cid", "dist2").as[(Long, Int, Double)]
-      .collect().sortBy(_._1)
-    val b = OpsN.assignCrossJoinN(pts, csDf)
-      .select("pid", "cid", "dist2").as[(Long, Int, Double)]
-      .collect().sortBy(_._1)
-    assert(a.toSeq === b.toSeq)
-  }
-
   test("updateN (VectorMean) equals updateNExploded (posexplode+avg)") {
     val pts = OpsN.pointsFromEmbeddings(
       spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet"))

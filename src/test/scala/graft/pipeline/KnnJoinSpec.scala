@@ -130,30 +130,33 @@ class KnnJoinSpec extends AnyFunSuite {
     assert(got === expected)
   }
 
-  test("probeLegs: iterated-argmin form == literal form, and caps at nlist") {
-    import org.apache.spark.sql.functions.{col, lit}
+  test("probeLegs == the literal array_sort tree, and caps at nlist") {
+    import org.apache.spark.sql.functions._
     import graft.kmeans.{CentroidN, OpsN}
-    // 80 cells (> the production literalBound of 64) on a 10x8 grid,
-    // 200 points scattered among them
+    // 80 cells on a 10x8 grid, 200 points scattered among them
     val model = (0 until 80).map(i =>
       CentroidN(i, Array((i % 10) * 2.0, (i / 10) * 2.0)))
     val pts = (0 until 200).map(i =>
       (i.toLong, Seq((i % 19) * 1.05, (i % 37) * 0.41))).toDF("pid", "features")
-    val cells = OpsN.assignNAdaptive(pts, model)
+    val cells = OpsN.assignN(pts, model)
       .select(col("pid").as("id"), col("features").as("v"),
         lit(1.0).as("nn"), col("cid").as("cell"))
-    def legs(bound: Int, np: Int) =
-      Similarity.probeLegs(cells, model, np, literalBound = bound)
+    def legs(np: Int) =
+      Similarity.probeLegs(cells, model, np)
         .select(col("cell"), col("id")).as[(Int, Long)].collect().toSet
-    // bound=1000 forces the literal array_sort form, bound=0 the
-    // iterated-argmin form — probe sets must be bit-identical
-    val lit3 = legs(1000, 3)
-    val itr3 = legs(0, 3)
-    assert(lit3 === itr3)
-    assert(itr3.size === 600, "every point probes exactly 3 cells")
-    // nprobe past nlist caps at nlist (cap applied before the form
-    // branch, so one form suffices; 100 ≡ 80 probes everything)
-    assert(legs(1000, 100) === legs(1000, 80))
+    // the reference: the per-row sort over one struct literal per cell
+    // that the probe paths planned before the nearest_cells node
+    def tree(np: Int) =
+      cells.select(col("id"), explode(slice(array_sort(array(model.map(c =>
+        struct(graft.expr.ArrayVector.sqDist(col("v"),
+          graft.expr.ArrayVector.vecLit(c.features.toIndexedSeq)).as("d2"),
+          lit(c.cid).as("cell"))): _*)), 1, np)).as("probe"))
+        .select(col("probe.cell"), col("id")).as[(Int, Long)].collect().toSet
+    assert(legs(3) === tree(3))
+    assert(legs(3).size === 600, "every point probes exactly 3 cells")
+    // nprobe past nlist caps at nlist: every point probes every cell
+    assert(legs(100) === tree(100))
+    assert(legs(100).size === 200 * 80)
   }
 
   test("knnJoinSized with targetCellSize >= n degenerates to one cell") {

@@ -304,27 +304,22 @@ class SimilaritySpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$store/cells").count() === 51L)
   }
 
-  test("oracle fixture guard: sized queries stay on the literal assign " +
-      "path at correctness-gate scale") {
-    // sm_semdedup_sized's oracle equivalence silently DEPENDS on
-    // nlist = ceil(n / targetCellSize) <= assignNAdaptive's literalBound
-    // at the fixture scale: past the bound the crossjoin path takes over,
-    // whose aggregation-order (last-ulp) differences break hash equality
-    // with the unrolled SQL oracle. This assertion turns a fixture growth
-    // into THIS failure instead of an opaque oracle hash mismatch.
-    // (Constants mirror SparkEntry's sm_semdedup_sized: targetCellSize=64,
-    // and assignNAdaptive's default literalBound=64.)
-    val targetCellSize = 64L
-    val literalBound = 64
-    Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01").foreach { dir =>
-      val n = spark.read.parquet(s"$dir/embeddings.parquet").count()
-      val nlist = math.max((n + targetCellSize - 1) / targetCellSize, 1L)
-      assert(nlist <= literalBound,
-        s"$dir: embeddings fixture has grown to $n rows -> sized nlist " +
-          s"$nlist exceeds literalBound $literalBound; sm_semdedup_sized's " +
-          "oracle check would flip to the crossjoin path and hash-mismatch. " +
-          "Raise literalBound in the query or re-derive the sized oracle.")
-    }
+  test("semDedup at nlist 80 keeps the cells of a driver-side argmin") {
+    // 80 cells: past the 64 at which the final assignment used to switch
+    // to a broadcast cross join
+    val rnd = new scala.util.Random(11)
+    val vs = (0L until 400L).map(i => i -> Seq.fill(4)(rnd.nextInt(32) / 4.0))
+    val model = graft.kmeans.LloydN.iterateNSampled(
+      vecs(vs: _*).select($"id".as("pid"), $"vec".as("features")), 80, 5, 100000L)
+    // threshold above any cosine: nothing drops, every id keeps its cell
+    val got = Similarity.semDedup(vecs(vs: _*), nlist = 80, threshold = 2.0)
+      .as[(Long, Int)].collect().toMap
+    val want = vs.map { case (id, v) =>
+      id -> model.map(c => (c.dist2To(v.toArray), c.cid))
+        .min(Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int))._2
+    }.toMap
+    assert(model.size === 80)
+    assert(got === want)
   }
 
   test("compactIvfCells: file count drops in both layouts, search results " +
