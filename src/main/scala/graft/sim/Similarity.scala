@@ -355,7 +355,8 @@ object Similarity {
           model)
         .select(col("pid").as("cid_id"), col("features").as("cv"),
           norm(col("features")).as("cn"), col("cid").as("cell")))
-    checkIvfGrowth(spark, path, newVectors.count(),
+    // counting the cached batch also pins it for the writes below
+    checkIvfGrowth(spark, path, rows.count(),
       maxGrowthFactor, refuseBeyondGrowth)
     writeCells(rows, resolveCells(spark, path), partitionCells, "append")
     // a writeIvfIndexSq store also carries the quantized scan tier:
@@ -446,7 +447,7 @@ object Similarity {
         "growth vs fit cannot be checked — rebuild with writeIvfIndex to " +
         "record the fit count")
     } else {
-      val fitCount = spark.read.parquet(s"$path/meta")
+      val fitCount = graft.util.SegmentStore.parquet(spark, s"$path/meta")
         .select(col("fit_count")).head().getLong(0)
       val afterAppend =
         readTier(spark, s"$path/cells").count() + batchCount
@@ -577,7 +578,7 @@ object Similarity {
   private def readSqBounds(
       spark: org.apache.spark.sql.SparkSession,
       path: String): (Seq[Double], Seq[Double]) = {
-    val row = spark.read.parquet(s"$path/quant").collect()(0)
+    val row = graft.util.SegmentStore.parquet(spark, s"$path/quant").collect()(0)
     (row.getSeq[Double](row.fieldIndex("mins")),
       row.getSeq[Double](row.fieldIndex("maxs")))
   }
@@ -835,7 +836,7 @@ object Similarity {
   private def readPqMeta(
       spark: org.apache.spark.sql.SparkSession,
       path: String): (Int, Int, Int) = {
-    val row = spark.read.parquet(s"$path/pq_meta").collect()(0)
+    val row = graft.util.SegmentStore.parquet(spark, s"$path/pq_meta").collect()(0)
     (row.getInt(row.fieldIndex("m")),
       row.getInt(row.fieldIndex("ksub")),
       row.getInt(row.fieldIndex("dsub")))
@@ -850,7 +851,7 @@ object Similarity {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       m: Int): IndexedSeq[Seq[graft.kmeans.CentroidN]] = {
-    val rows = spark.read.parquet(s"$path/pq_codebooks").collect()
+    val rows = graft.util.SegmentStore.parquet(spark, s"$path/pq_codebooks").collect()
       .map(r => (r.getInt(r.fieldIndex("sub")),
         graft.kmeans.CentroidN(
           r.getInt(r.fieldIndex("cell")),
@@ -1060,7 +1061,7 @@ object Similarity {
   private def readIvfCentroids(
       spark: org.apache.spark.sql.SparkSession,
       path: String): Seq[graft.kmeans.CentroidN] = {
-    val model = spark.read.parquet(s"$path/centroids")
+    val model = graft.util.SegmentStore.parquet(spark, s"$path/centroids")
       .collect()
       .map(r => graft.kmeans.CentroidN(
         r.getInt(r.fieldIndex("cell")),
@@ -1073,10 +1074,18 @@ object Similarity {
 
   /** [[ivfTopK]] against a PERSISTED index written by [[writeIvfIndex]]:
     * identical output (same quantizer, same probe policy — asserted in
-    * SimilaritySpec), but the corpus embeddings are never touched. The
-    * centroids load is O(nlist) driver rows (they re-enter the plan as
-    * the probe node's model, exactly as in the inline path);
-    * the cells scan reads only (cid_id, cv, cn, cell) from the store.
+    * SimilaritySpec), but the corpus embeddings are never touched.
+    *
+    * Read path, with no metadata job: `centroids/` is collected once
+    * (O(nlist) driver rows, one job; they re-enter the plan as the probe
+    * node's model, exactly as in the inline path), and the cells tier is
+    * read with its schema from a footer
+    * ([[graft.util.SegmentStore.parquet]]), streaming segments and delete
+    * tombstones folded in. The scoring query reads only
+    * (cid_id, cv, cn, cell) from the store. A warm request runs 4 jobs:
+    * the centroids collect and the scoring query's 3 (broadcast query
+    * side, window shuffle, result). Nothing is cached between requests,
+    * so appends, deletes and compactions are seen by the next request.
     */
   def ivfTopKFromStore(
       queries: DataFrame,

@@ -1131,7 +1131,7 @@ object TextOps {
     // segments land INSIDE the active generation, so a reader resolving
     // the manifest sees them
     val base = graft.util.GenStore.resolve(spark, path)
-    writeBm25Segment(docs, base, storedBucketCount(spark, base),
+    writeBm25Segment(docs, base, readBm25Stats(spark, base).nBuckets,
       overwrite = false)
     graft.util.OpCaches.releaseAll(spark)
   }
@@ -1160,7 +1160,7 @@ object TextOps {
   def deleteFromBm25Index(docs: DataFrame, path: String): Unit = {
     val spark = docs.sparkSession
     val base = graft.util.GenStore.resolve(spark, path)
-    val nBuckets = storedBucketCount(spark, base)
+    val nBuckets = readBm25Stats(spark, base).nBuckets
     // one tokenize pass over the batch (stats + per-term deltas both
     // reduce off it; OpCaches-tracked like the build/append pass)
     val b = graft.util.OpCaches.cache(
@@ -1168,36 +1168,54 @@ object TextOps {
         .select(col("doc_id"), tokens(col("text")).as("t"))
         .select(col("doc_id"), size(col("t")).cast("long").as("dl"),
           col("t")))
+    // tombstones touch only doc_ids (never the tokenize cache `b`), so
+    // the write overlaps the delta writes below; postings rows can't be
+    // unwritten, so readers anti-join
+    alongside(
+      graft.util.Tombstones.write(docs.select(col("doc_id")), base)) {
+      // negated per-term df deltas FIRST — its pass computes and pins `b`,
+      // so the stats write after it is a pure cache reader (the
+      // writeBm25Segment materialization-order discipline): -1 per
+      // (deleted doc, distinct term), the exact inverse of the df the doc
+      // contributed
+      b.select(col("doc_id"), explode(col("t")).as("term"))
+        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)))
+        .groupBy(col("term"))
+        .agg((count(lit(1)).cast("double") * -1.0).as("df"))
+        .withColumn("tbucket", pmod(hash(col("term")), lit(nBuckets)))
+        .repartition(nBuckets, col("tbucket"))
+        .write.mode("append").partitionBy("tbucket")
+        .parquet(s"$base/terms")
+      // negated stats segment: zero-token docs count in n here exactly as
+      // they did at index time
+      b.agg(
+        (count(lit(1)) * -1L).as("n"),
+        (coalesce(sum(col("dl")), lit(0L)) * -1L).as("sum_dl"))
+        .withColumn("n_buckets", lit(nBuckets))
+        .write.mode("append").parquet(s"$base/stats")
+    }
+    graft.util.OpCaches.releaseAll(spark)
+  }
+
+  /** Runs `background` on a Future while `body` runs on the caller
+    * thread, and returns only once both have ended, so no write of the
+    * call outlives it. A failure of `body` is rethrown with the
+    * background failure, if any, added as suppressed; otherwise the
+    * background failure is rethrown.
+    */
+  private def alongside(background: => Unit)(body: => Unit): Unit = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
-    // tombstones touch only doc_ids (never the tokenize cache `b`), so
-    // the write overlaps the delta writes below from a Future (guide
-    // §2.6); postings rows can't be unwritten, so readers anti-join
-    val tomb = Future {
-      graft.util.Tombstones.write(docs.select(col("doc_id")), base)
+    val bg = Future(background)
+    val failed =
+      try { body; None }
+      catch { case t: Throwable => Some(t) }
+    Await.ready(bg, scala.concurrent.duration.Duration.Inf)
+    val bgFailed = bg.value.flatMap(_.failed.toOption)
+    failed match {
+      case Some(t) => bgFailed.foreach(t.addSuppressed); throw t
+      case None => bgFailed.foreach(t => throw t)
     }
-    // negated per-term df deltas FIRST — its pass computes and pins `b`,
-    // so the stats write after it is a pure cache reader (the
-    // writeBm25Segment materialization-order discipline): -1 per
-    // (deleted doc, distinct term), the exact inverse of the df the doc
-    // contributed
-    b.select(col("doc_id"), explode(col("t")).as("term"))
-      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)))
-      .groupBy(col("term"))
-      .agg((count(lit(1)).cast("double") * -1.0).as("df"))
-      .withColumn("tbucket", pmod(hash(col("term")), lit(nBuckets)))
-      .repartition(nBuckets, col("tbucket"))
-      .write.mode("append").partitionBy("tbucket")
-      .parquet(s"$base/terms")
-    // negated stats segment: zero-token docs count in n here exactly as
-    // they did at index time
-    b.agg(
-      (count(lit(1)) * -1L).as("n"),
-      (coalesce(sum(col("dl")), lit(0L)) * -1L).as("sum_dl"))
-      .withColumn("n_buckets", lit(nBuckets))
-      .write.mode("append").parquet(s"$base/stats")
-    Await.result(tomb, scala.concurrent.duration.Duration.Inf)
-    graft.util.OpCaches.releaseAll(spark)
   }
 
   /** One corpus/batch tokenize pass fanned into the three store
@@ -1227,9 +1245,10 @@ object TextOps {
     // same cached partition (the materialization-order proof the r19
     // checklist asked for). The stats and terms writes — independent
     // cache readers landing in different store subdirectories — then
-    // run CONCURRENTLY from the caller thread + one Future: Spark's
-    // FIFO scheduler back-fills the second job's tasks into the first
-    // job's tail instead of serializing three write barriers.
+    // run CONCURRENTLY from the caller thread + one Future ([[alongside]]
+    // waits for both before returning or rethrowing): Spark's FIFO
+    // scheduler back-fills the second job's tasks into the first job's
+    // tail instead of serializing three write barriers.
     // repartition BY BUCKET before partitionBy: without it every write
     // task opens a file in every bucket directory — tasks × nBuckets
     // small files per segment, which on a 1000-executor writer is an
@@ -1241,36 +1260,44 @@ object TextOps {
       .repartition(nBuckets, col("tbucket"))
       .write.mode(mode).partitionBy("tbucket")
       .parquet(s"$path/postings")
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
     // stats over ALL docs (zero-token docs included — the inline path's
     // N counts them too), exact integer sums so avgdl is engine-stable
-    val statsWrite = Future {
+    alongside(
       base.agg(count(lit(1)).as("n"), sum(col("dl")).as("sum_dl"))
         .withColumn("n_buckets", lit(nBuckets))
-        .write.mode(mode).parquet(s"$path/stats")
+        .write.mode(mode).parquet(s"$path/stats")) {
+      postings.groupBy(col("term"))
+        .agg(count(lit(1)).cast("double").as("df"))
+        .withColumn("tbucket", pmod(hash(col("term")), lit(nBuckets)))
+        .repartition(nBuckets, col("tbucket"))
+        .write.mode(mode).partitionBy("tbucket")
+        .parquet(s"$path/terms")
     }
-    postings.groupBy(col("term"))
-      .agg(count(lit(1)).cast("double").as("df"))
-      .withColumn("tbucket", pmod(hash(col("term")), lit(nBuckets)))
-      .repartition(nBuckets, col("tbucket"))
-      .write.mode(mode).partitionBy("tbucket")
-      .parquet(s"$path/terms")
-    Await.result(statsWrite, scala.concurrent.duration.Duration.Inf)
   }
 
-  /** The bucket count a store was written with, from its own stats
-    * segments (every segment records it; a mixed store is corrupt and
-    * refused).
+  /** A BM25 store's statistics: n and Σdl summed over the `stats/`
+    * segment rows, and the bucket count the store was written with. */
+  private[graft] final case class Bm25Stats(n: Long, sumDl: Long, nBuckets: Int) {
+    def avgdl: Double = if (n == 0L) 1.0 else sumDl.toDouble / n.toDouble
+  }
+
+  /** The store's `stats/` segment rows (one per write, append or delete)
+    * collected once, in one job. n and Σdl are exact `Long` sums that
+    * skip nulls, as SQL `sum` does (an empty append batch records a null
+    * Σdl); every row records the bucket count, and a store whose rows
+    * disagree, or lack it, is corrupt and refused.
     */
-  private def storedBucketCount(
-      spark: org.apache.spark.sql.SparkSession, path: String): Int = {
-    val bs = spark.read.parquet(s"$path/stats")
-      .select(col("n_buckets")).distinct().collect().map(_.getInt(0))
-    require(bs.length == 1,
+  private[graft] def readBm25Stats(
+      spark: org.apache.spark.sql.SparkSession, path: String): Bm25Stats = {
+    val rows = graft.util.SegmentStore.parquet(spark, s"$path/stats")
+      .select(col("n"), col("sum_dl"), col("n_buckets")).collect()
+    def total(i: Int): Long = rows.foldLeft(0L)((acc, r) =>
+      if (r.isNullAt(i)) acc else Math.addExact(acc, r.getLong(i)))
+    val bs = rows.map(r => Option.when(!r.isNullAt(2))(r.getInt(2))).distinct
+    require(bs.length == 1 && bs(0).isDefined,
       s"BM25 store at $path has inconsistent bucket counts: " +
-        bs.sorted.mkString(","))
-    bs(0)
+        bs.map(_.fold("null")(_.toString)).sorted.mkString(","))
+    Bm25Stats(total(0), total(1), bs(0).get)
   }
 
   /** Compact a BM25 index in place: daily [[appendToBm25Index]] runs
@@ -1296,20 +1323,21 @@ object TextOps {
       targetFileRows: Long = 4L * 1024 * 1024): Unit = {
     require(targetFileRows > 0, "targetFileRows must be positive")
     val src = graft.util.GenStore.resolve(spark, path)
-    val nBuckets = storedBucketCount(spark, src)
+    val nBuckets = readBm25Stats(spark, src).nBuckets
     // fold tombstones physically: deleted docs' postings drop from the
     // rewrite, and the new generation carries no _tombstones directory
     // (the old generation keeps its own for in-flight readers, under
     // GenStore's one-cycle grace rule)
     val postings = graft.util.Tombstones.filter(
-      spark.read.parquet(s"$src/postings"), spark, src, "doc_id")
+      graft.util.SegmentStore.parquet(spark, s"$src/postings"),
+      spark, src, "doc_id")
     val nFiles =
       graft.util.SegmentStore.fileCount(postings.count(), targetFileRows)
     graft.util.GenStore.compactInto(spark, path) { genDir =>
       postings.repartition(nFiles, col("tbucket"))
         .write.mode("overwrite").partitionBy("tbucket")
         .parquet(s"$genDir/postings")
-      spark.read.parquet(s"$src/terms")
+      graft.util.SegmentStore.parquet(spark, s"$src/terms")
         .groupBy(col("term")).agg(sum(col("df")).as("df"))
         // a term whose every bearing doc was deleted folds to df = 0
         // (+1 build contributions exactly cancelled by -1 delete
@@ -1319,7 +1347,7 @@ object TextOps {
         .repartition(nFiles, col("tbucket"))
         .write.mode("overwrite").partitionBy("tbucket")
         .parquet(s"$genDir/terms")
-      spark.read.parquet(s"$src/stats")
+      graft.util.SegmentStore.parquet(spark, s"$src/stats")
         .agg(sum(col("n")).as("n"), sum(col("sum_dl")).as("sum_dl"))
         .withColumn("n_buckets", lit(nBuckets))
         .write.mode("overwrite").parquet(s"$genDir/stats")
@@ -1329,19 +1357,29 @@ object TextOps {
   /** [[bm25TopK]] FROM a persisted index written by [[writeBm25Index]]:
     * identical output (same stats, same idf, same ordered fold, same
     * truncation — asserted query-for-query in the correctness gate), but
-    * query time never touches the corpus text: it reads one O(1) stats
-    * row, the queried terms' `terms/` rows, and the queried terms'
-    * postings — pruned first to the terms' hash-bucket PARTITIONS (the
-    * bucket ids come from running the writer's own `hash(term)`
-    * expression over the O(#terms) query list), then to the terms
-    * within. Everything downstream of the postings filter is the inline
-    * path's plan: broadcast idf join, ordered fold, TakeOrdered top-k.
+    * query time never touches the corpus text.
     *
-    * The store may carry [[appendToBm25Index]] segments: stats rows and
-    * per-term df deltas are summed here (an O(#segments) scalar and an
-    * O(#terms-rows) aggregate), so build+append stores answer
-    * bit-identically to a full rebuild. The bucket count comes from the
-    * store's own stats.
+    * Read path, with no metadata job: the generation is resolved once;
+    * `stats/` is collected once (one job: n, Σdl and the bucket count,
+    * see [[readBm25Stats]]); the query's bucket ids come from the
+    * writer's own `pmod(hash(term), n)` projected over the O(#terms)
+    * query list, which Spark folds into the local relation, so that
+    * collect runs no job; `postings/` and `terms/` list only those
+    * buckets' existing `tbucket=` directories (all of `postings/` or
+    * `terms/` when none exists) and take their schemas from a footer
+    * ([[graft.util.SegmentStore.parquet]]). The scoring query keeps the
+    * `tbucket` and term filters and is the inline path's plan: broadcast
+    * idf join, ordered fold, TakeOrdered top-k (a local top-k per
+    * partition and one driver merge). A warm request runs 5 jobs: the
+    * stats collect and the scoring query's 4. Nothing is cached between
+    * requests, so appends, deletes and compactions by any writer are seen
+    * by the next request.
+    *
+    * The store may carry [[appendToBm25Index]] and
+    * [[deleteFromBm25Index]] segments: stats rows and per-term df deltas
+    * are summed here, and deleted docs' postings are anti-joined against
+    * the generation's tombstones, so such stores answer bit-identically
+    * to a full rebuild.
     */
   def bm25TopKFromStore(
       spark: org.apache.spark.sql.SparkSession,
@@ -1357,31 +1395,25 @@ object TextOps {
     // resolve the active generation once — stats, terms, and postings
     // must come from ONE generation even if a compaction lands mid-call
     val base = graft.util.GenStore.resolve(spark, path)
-    val nBuckets = storedBucketCount(spark, base)
+    val stats = readBm25Stats(spark, base)
+    val n = stats.n
+    val avgdl = stats.avgdl
     // the writer's bucket ids for these terms — same hash() expression,
-    // evaluated over the O(#terms) query list, never driver-reimplemented
+    // never driver-reimplemented; the projection folds into the local
+    // relation, so the collect runs no job
     val qBuckets = terms.toDF("term")
-      .select(pmod(hash(col("term")), lit(nBuckets)).as("tbucket"))
-      .distinct().as[Int].collect().toSeq
-    // exact integer sums over the store's segment rows (one row per
-    // write/append) — identical n / avgdl to a monolithic rebuild
-    val stats = spark.read.parquet(s"$base/stats")
-      .agg(sum(col("n")).as("n"), sum(col("sum_dl")).as("sum_dl"))
-      .collect()(0)
-    val n = if (stats.isNullAt(0)) 0L else stats.getLong(0)
-    val sumDl = if (stats.isNullAt(1)) 0L else stats.getLong(1)
-    val avgdl = if (n == 0L) 1.0 else sumDl.toDouble / n.toDouble
+      .select(pmod(hash(col("term")), lit(stats.nBuckets)))
+      .as[Int].collect().distinct.toSeq
+    val parts = qBuckets.map(q => s"tbucket=$q")
+    def bucketed(component: String): DataFrame =
+      graft.util.SegmentStore.parquet(spark, s"$base/$component", parts)
+        .filter(col("tbucket").isin(qBuckets: _*) &&
+          col("term").isInCollection(terms))
     // tombstone anti-join AFTER the bucket/term pruning (the pruned
     // frame is O(query terms' postings), the broadcast delete set is
     // O(delete batches)); zero plan change when no delete has landed
-    val tf = graft.util.Tombstones.filter(
-      spark.read.parquet(s"$base/postings")
-        .filter(col("tbucket").isin(qBuckets: _*) &&
-          col("term").isInCollection(terms)),
-      spark, base, "doc_id")
-    val dfreq = spark.read.parquet(s"$base/terms")
-      .filter(col("tbucket").isin(qBuckets: _*) &&
-        col("term").isInCollection(terms))
+    val tf = graft.util.Tombstones.filter(bucketed("postings"), spark, base, "doc_id")
+    val dfreq = bucketed("terms")
       // fold append segments' df deltas; a compacted store has one row
       // per term and this is a no-op aggregate over it
       .groupBy(col("term")).agg(sum(col("df")).as("df"))

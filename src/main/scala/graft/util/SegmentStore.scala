@@ -1,7 +1,8 @@
 package graft.util
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftshim.Bridge
 
 /** The shared read/delete/compact core of the log-structured persisted
   * stores (signature store, BM25 index, IVF cell tiers). Each store
@@ -12,6 +13,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * store-SPECIFIC logic (what a row means, multi-subtable layouts like
   * BM25's postings/terms/stats, partition-pruned query paths) stays in
   * the stores; only the storage mechanics live here.
+  *
+  * '''Read path.''' Every store read goes through [[parquet]], which
+  * runs no Spark job before the caller's own action: the schema comes
+  * from ONE data file's footer, read on the driver (Spark's inference
+  * runs a job to read the same footer), and a caller that knows which
+  * `k=v` partition directories it needs names them, so the file listing
+  * covers only those directories (past 32 directories Spark lists in a
+  * job). Nothing is cached: each read lists and resolves the store's
+  * current files, so a writer in another process is seen on the next
+  * read.
   *
   * Snapshot-style model stores (TF-IDF df counts, LM bigram counts,
   * classifier sufficient statistics) are DELIBERATELY not clients:
@@ -27,6 +38,58 @@ object SegmentStore {
     require(targetFileRows > 0, "targetFileRows must be positive")
     math.max(1L, (total + targetFileRows - 1) / targetFileRows)
       .min(Int.MaxValue.toLong).toInt
+  }
+
+  /** Parquet under `dir`, with the schema taken from the footer of its
+    * first data file in path order — the file Spark's inference would
+    * open — so the read starts no job. Partition columns of `k=v`
+    * directories are still inferred from the listing, as in
+    * `spark.read.parquet(dir)`, whose schema this read equals.
+    *
+    * `parts` names partition directories under `dir` (`tbucket=3`); when
+    * any of them exists only those are listed and read, with `basePath`
+    * set so their partition column stays. Callers keep their partition
+    * filter: the pruning is of the listing, not of the answer. When none
+    * exists, or `parts` is empty, the whole of `dir` is read. A directory
+    * without a data file falls back to Spark's own read, with its error.
+    */
+  def parquet(
+      spark: SparkSession,
+      dir: String,
+      parts: Seq[String] = Nil,
+      recursive: Boolean = false): DataFrame = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val live = parts.distinct.map(new Path(root, _)).filter(fs.exists)
+    val reader =
+      if (recursive) spark.read.option("recursiveFileLookup", "true")
+      else spark.read
+    firstDataFile(fs, if (live.isEmpty) Seq(root) else live) match {
+      case None => reader.parquet(dir)
+      case Some(file) =>
+        val r = reader.schema(Bridge.parquetFileSchema(spark, file))
+        if (live.isEmpty) r.parquet(dir)
+        else r.option("basePath", dir).parquet(live.map(_.toString): _*)
+    }
+  }
+
+  /** The first data file under `roots` in path-string order, skipping
+    * what Spark's file index skips (`_`/`.`-prefixed names other than
+    * `k=v` directories). A depth-first walk: a directory sorts as its
+    * path plus `/`, which places it exactly where its files sort.
+    */
+  private def firstDataFile(fs: FileSystem, roots: Seq[Path]): Option[FileStatus] = {
+    def hidden(n: String) =
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+    def key(st: FileStatus) =
+      st.getPath.toString + (if (st.isDirectory) "/" else "")
+    def walk(sts: Seq[FileStatus]): Option[FileStatus] =
+      sts.sortBy(key).iterator.map { st =>
+        if (st.isDirectory)
+          walk(fs.listStatus(st.getPath).toSeq.filterNot(c => hidden(c.getPath.getName)))
+        else Some(st)
+      }.collectFirst { case Some(f) => f }
+    walk(roots.filter(fs.exists).map(fs.getFileStatus))
   }
 
   /** Whether the directory carries streaming segment subdirectories
@@ -52,9 +115,7 @@ object SegmentStore {
     */
   def read(spark: SparkSession, store: String, idCol: String): DataFrame = {
     val base = GenStore.resolve(spark, store)
-    Tombstones.filter(
-      spark.read.option("recursiveFileLookup", "true").parquet(base),
-      spark, base, idCol)
+    Tombstones.filter(parquet(spark, base, recursive = true), spark, base, idCol)
   }
 
   /** Whether the directory carries `k=v` partition subdirectories —
@@ -85,17 +146,16 @@ object SegmentStore {
   def readPartitionAware(
       spark: SparkSession, store: String, idCol: String): DataFrame = {
     val base = GenStore.resolve(spark, store)
-    val df =
-      if (hasSegmentDirs(spark, base)) {
-        require(!hasPartitionDirs(spark, base),
-          s"mixed store layout at $base: both k=v partition directories " +
-            "and streaming segment subdirectories are present — " +
-            "recursiveFileLookup would silently drop the partition " +
-            "column; compact the segments into the partitioned layout " +
-            "before reading")
-        spark.read.option("recursiveFileLookup", "true").parquet(base)
-      } else spark.read.parquet(base)
-    Tombstones.filter(df, spark, base, idCol)
+    val recursive = hasSegmentDirs(spark, base)
+    if (recursive)
+      require(!hasPartitionDirs(spark, base),
+        s"mixed store layout at $base: both k=v partition directories " +
+          "and streaming segment subdirectories are present — " +
+          "recursiveFileLookup would silently drop the partition " +
+          "column; compact the segments into the partitioned layout " +
+          "before reading")
+    Tombstones.filter(parquet(spark, base, recursive = recursive),
+      spark, base, idCol)
   }
 
   /** The DELETE leg shared by every store: the batch's ids land as a

@@ -48,13 +48,13 @@ object Tombstones {
 
   /** The generation's tombstoned ids, if any delete segment exists —
     * None means no delete has touched this generation (the overwhelming
-    * common case; the existence probe is one file-listing call, no
-    * Spark job).
+    * common case; the existence probe is one file-listing call, and the
+    * read takes its schema from a footer: no Spark job either way).
     */
   def readOpt(spark: SparkSession, genDir: String): Option[DataFrame] = {
     val p = new Path(dir(genDir))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) Some(spark.read.parquet(dir(genDir)).distinct())
+    if (fs.exists(p)) Some(SegmentStore.parquet(spark, dir(genDir)).distinct())
     else None
   }
 

@@ -1,19 +1,26 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, Dataset}
+import org.apache.spark.sql.{Column, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** Minimal bridge into Spark's `private[sql]` / `private[spark]` internals: the
   * Column↔Expression converters (Spark 4 removed the public
   * `Column(expr)` constructor), the materialized RDD behind a
   * checkpointed Dataset (needed to release a superseded
   * `localCheckpoint`'s blocks eagerly — `Dataset.unpersist` only talks to
-  * the CacheManager, which never sees checkpoint storage), and the
-  * blocking form of `Broadcast.destroy`. This is the only file outside
+  * the CacheManager, which never sees checkpoint storage), the
+  * blocking form of `Broadcast.destroy`, and the schema of one parquet
+  * file read from its footer. This is the only file outside
   * the `graft` namespace; it contains no logic.
   */
 object Bridge {
@@ -25,6 +32,22 @@ object Bridge {
     * the caller's next job.
     */
   def destroy(b: Broadcast[_]): Unit = b.destroy(blocking = true)
+
+  /** The Spark schema of one parquet file, read from its footer on the
+    * calling thread with the converter and footer rules Spark's own
+    * schema inference uses, made nullable as a file-source relation
+    * makes it. Inference runs the same read as a Spark job.
+    */
+  def parquetFileSchema(spark: SparkSession, file: FileStatus): StructType = {
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(file, spark.sparkContext.hadoopConfiguration),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    val conf = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf
+    ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(conf)).asNullable
+  }
 
   /** The RDD backing a `df.localCheckpoint(...)` / `df.checkpoint(...)`
     * result (eager or LAZY) — None for any other plan shape.
