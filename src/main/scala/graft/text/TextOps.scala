@@ -1,7 +1,8 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Text-analysis operators for a large-scale training-data pipeline:
   * tokenization, token counting, n-gram shingling, language ID (stopword
@@ -1072,11 +1073,14 @@ object TextOps {
     * service pays per call; this pays it once.
     *
     * Layout at `path`:
-    *   - `postings/` — (term, doc_id, dl, tf), the full inverted index,
+    *   - `postings/` — (doc_id, dl, term, tf), the full inverted index,
     *     partitioned by `tbucket = pmod(hash(term), nBuckets)`: a query
     *     prunes to the few buckets its terms hash into (partition-level
-    *     file pruning), while directory count stays `nBuckets`, not
-    *     vocabulary-sized.
+    *     file pruning). The bucket count is derived from the index
+    *     itself, ⌈postings rows / targetFileRows⌉
+    *     ([[graft.util.SegmentStore.fileCount]], the compactor's rule),
+    *     so directories and write tasks grow with the postings, never
+    *     with the vocabulary, and a small corpus is one bucket.
     *   - `terms/`    — (term, df), same bucketing.
     *   - `stats/`    — (n, sum_dl, n_buckets) rows of exact integer
     *     sums, so query time derives the identical avgdl double the
@@ -1088,25 +1092,38 @@ object TextOps {
     *     writer's bucketing from the store itself (a mis-passed bucket
     *     count cannot silently mis-prune).
     *
-    * One corpus text scan builds all three (the postings aggregate is
-    * cached; terms and nothing else reduce off it).
+    * One corpus text scan builds all three: one collect over the cached
+    * tokenized corpus gives n, Σdl and the postings row count (which
+    * sizes the buckets); one shuffle, on `tbucket`, feeds the cached
+    * postings aggregate, and terms reduce off that cache with no second
+    * exchange. Each bucket is one task, so each component writes one
+    * file per bucket directory. A build runs at most 8 jobs, all on the
+    * caller's thread. An empty corpus is refused before anything at
+    * `path` is touched.
     */
-  def writeBm25Index(docs: DataFrame, path: String, nBuckets: Int = 64): Unit = {
-    require(nBuckets > 0, "nBuckets must be positive")
-    // loud degenerate-input refusal (one limit-1 probe, negligible next
-    // to the index build's tokenize pass): a zero-row postings/terms
-    // partitionBy write produces NO part files, so the store would fail
-    // only later, at read time, with an opaque schema-inference error
-    require(!docs.isEmpty,
-      "writeBm25Index: empty corpus — an empty index would be " +
-        "schema-less on disk; nothing to index")
+  def writeBm25Index(
+      docs: DataFrame,
+      path: String,
+      targetFileRows: Long = 4L * 1024 * 1024): Unit = {
+    require(targetFileRows > 0, "targetFileRows must be positive")
     val spark = docs.sparkSession
-    // full rebuild resets to the legacy flat layout: component-wise
-    // overwrite alone would leave a stale generation manifest pointing
-    // past the rebuild on a previously-compacted store
-    graft.util.GenStore.reset(spark, path)
-    writeBm25Segment(docs, path, nBuckets, overwrite = true)
-    graft.util.OpCaches.releaseAll(spark)
+    try {
+      val batch = tokenizeBm25(docs)
+      // loud degenerate-input refusal: a zero-row postings/terms
+      // partitionBy write produces NO part files, so the store would
+      // fail only later, at read time, with an opaque schema-inference
+      // error
+      require(batch.n > 0,
+        "writeBm25Index: empty corpus — an empty index would be " +
+          "schema-less on disk; nothing to index")
+      // full rebuild resets to the legacy flat layout: component-wise
+      // overwrite alone would leave a stale generation manifest pointing
+      // past the rebuild on a previously-compacted store
+      graft.util.GenStore.reset(spark, path)
+      writeBm25Segment(batch, path,
+        graft.util.SegmentStore.fileCount(batch.postingsRows, targetFileRows),
+        overwrite = true)
+    } finally graft.util.OpCaches.releaseAll(spark)
   }
 
   /** Append a batch of documents to a BM25 index written by
@@ -1119,21 +1136,23 @@ object TextOps {
     * [[bm25TopKFromStore]], so an appended store answers queries
     * bit-identically to a full rebuild over the union (asserted in
     * TextDedupSpec). The bucket count comes from the store's own stats,
-    * so a batch cannot mis-bucket. `doc_id`s must be NEW to the store —
-    * re-appending a document double-counts its tf, df, and stats
-    * contributions. Parquet `append` is not transactional: a failed
-    * append can leave a partial segment; exactly-once is the caller's
-    * contract, as with the sibling stores. Small segments accumulate
-    * files — [[compactBm25Index]] folds them.
+    * so a batch cannot mis-bucket, and the segment lands one file per
+    * bucket directory per component; a store that outgrows its bucket
+    * count is re-bucketed by its next [[compactBm25Index]]. `doc_id`s
+    * must be NEW to the store — re-appending a document double-counts
+    * its tf, df, and stats contributions. Parquet `append` is not
+    * transactional: a failed append can leave a partial segment;
+    * exactly-once is the caller's contract, as with the sibling stores.
+    * Small segments accumulate files — [[compactBm25Index]] folds them.
     */
   def appendToBm25Index(docs: DataFrame, path: String): Unit = {
     val spark = docs.sparkSession
     // segments land INSIDE the active generation, so a reader resolving
     // the manifest sees them
     val base = graft.util.GenStore.resolve(spark, path)
-    writeBm25Segment(docs, base, readBm25Stats(spark, base).nBuckets,
-      overwrite = false)
-    graft.util.OpCaches.releaseAll(spark)
+    try writeBm25Segment(tokenizeBm25(docs), base,
+      readBm25Stats(spark, base).nBuckets, overwrite = false)
+    finally graft.util.OpCaches.releaseAll(spark)
   }
 
   /** DELETE a batch of documents from a BM25 index — the
@@ -1149,7 +1168,9 @@ object TextOps {
     * anti-joins postings against. Queries on the deleted store answer
     * BIT-IDENTICALLY to a full rebuild over the remaining corpus
     * (oracle-gated as `tx_bm25_delete`); the next [[compactBm25Index]]
-    * run folds the tombstones away physically.
+    * run folds the tombstones away physically. The writes run in turn
+    * on the caller's thread: tombstones, then the df deltas (one
+    * shuffle, on `tbucket`), then the stats row.
     *
     * Contract (mirror of append's "ids must be NEW"): each deleted
     * `doc_id` must be LIVE in the store with exactly this `text` — the
@@ -1161,118 +1182,109 @@ object TextOps {
     val spark = docs.sparkSession
     val base = graft.util.GenStore.resolve(spark, path)
     val nBuckets = readBm25Stats(spark, base).nBuckets
-    // one tokenize pass over the batch (stats + per-term deltas both
-    // reduce off it; OpCaches-tracked like the build/append pass)
-    val b = graft.util.OpCaches.cache(
-      docs
-        .select(col("doc_id"), tokens(col("text")).as("t"))
-        .select(col("doc_id"), size(col("t")).cast("long").as("dl"),
-          col("t")))
-    // tombstones touch only doc_ids (never the tokenize cache `b`), so
-    // the write overlaps the delta writes below; postings rows can't be
-    // unwritten, so readers anti-join
-    alongside(
-      graft.util.Tombstones.write(docs.select(col("doc_id")), base)) {
-      // negated per-term df deltas FIRST — its pass computes and pins `b`,
-      // so the stats write after it is a pure cache reader (the
-      // writeBm25Segment materialization-order discipline): -1 per
-      // (deleted doc, distinct term), the exact inverse of the df the doc
-      // contributed
-      b.select(col("doc_id"), explode(col("t")).as("term"))
-        .groupBy(col("doc_id"), col("term")).agg(count(lit(1)))
-        .groupBy(col("term"))
+    try {
+      val batch = tokenizeBm25(docs)
+      // postings rows can't be unwritten, so readers anti-join
+      graft.util.Tombstones.write(docs.select(col("doc_id")), base)
+      // negated per-term df deltas: -1 per (deleted doc, distinct term),
+      // the exact inverse of the df the doc contributed
+      bucketBy(batch.tokens.select(col("doc_id"), explode(col("t")).as("term")),
+          nBuckets)
+        .groupBy(col("tbucket"), col("doc_id"), col("term")).agg(count(lit(1)))
+        .groupBy(col("tbucket"), col("term"))
         .agg((count(lit(1)).cast("double") * -1.0).as("df"))
-        .withColumn("tbucket", pmod(hash(col("term")), lit(nBuckets)))
-        .repartition(nBuckets, col("tbucket"))
+        .select(col("term"), col("df"), col("tbucket"))
         .write.mode("append").partitionBy("tbucket")
         .parquet(s"$base/terms")
       // negated stats segment: zero-token docs count in n here exactly as
       // they did at index time
-      b.agg(
-        (count(lit(1)) * -1L).as("n"),
-        (coalesce(sum(col("dl")), lit(0L)) * -1L).as("sum_dl"))
-        .withColumn("n_buckets", lit(nBuckets))
-        .write.mode("append").parquet(s"$base/stats")
-    }
-    graft.util.OpCaches.releaseAll(spark)
+      writeBm25Stats(spark, s"$base/stats", -batch.n,
+        Some(-batch.sumDl.getOrElse(0L)), nBuckets, "append")
+    } finally graft.util.OpCaches.releaseAll(spark)
   }
 
-  /** Runs `background` on a Future while `body` runs on the caller
-    * thread, and returns only once both have ended, so no write of the
-    * call outlives it. A failure of `body` is rethrown with the
-    * background failure, if any, added as suppressed; otherwise the
-    * background failure is rethrown.
+  /** A batch's tokenized frame (doc_id, dl, t), cached, with n, Σdl (None
+    * for an empty batch, as SQL `sum` gives) and the number of distinct
+    * (doc, term) pairs — its postings rows — from one collect over it.
+    * Zero-token docs count in n, as the inline path's N counts them.
     */
-  private def alongside(background: => Unit)(body: => Unit): Unit = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val bg = Future(background)
-    val failed =
-      try { body; None }
-      catch { case t: Throwable => Some(t) }
-    Await.ready(bg, scala.concurrent.duration.Duration.Inf)
-    val bgFailed = bg.value.flatMap(_.failed.toOption)
-    failed match {
-      case Some(t) => bgFailed.foreach(t.addSuppressed); throw t
-      case None => bgFailed.foreach(t => throw t)
-    }
-  }
+  private final case class Bm25Batch(
+      tokens: DataFrame, n: Long, sumDl: Option[Long], postingsRows: Long)
 
-  /** One corpus/batch tokenize pass fanned into the three store
-    * components (shared by [[writeBm25Index]] / [[appendToBm25Index]];
-    * caller releases the OpCaches entries after both writes land).
-    */
-  private def writeBm25Segment(
-      docs: DataFrame, path: String, nBuckets: Int,
-      overwrite: Boolean): Unit = {
-    val mode = if (overwrite) "overwrite" else "append"
-    // ONE text scan: the tokenized doc-level frame feeds stats AND the
-    // posting explode (OpCaches-tracked, as bm25TopK's base is)
-    val base = graft.util.OpCaches.cache(
+  private def tokenizeBm25(docs: DataFrame): Bm25Batch = {
+    // ONE text scan: the cache feeds the collect and every write after it
+    // (OpCaches-tracked, as bm25TopK's base is)
+    val tok = graft.util.OpCaches.cache(
       docs
         .select(col("doc_id"), tokens(col("text")).as("t"))
         .select(col("doc_id"), size(col("t")).cast("long").as("dl"),
           col("t")))
-    val postings = graft.util.OpCaches.cache(
-      base
-        .select(col("doc_id"), col("dl"), explode(col("t")).as("term"))
-        .groupBy(col("doc_id"), col("dl"), col("term"))
-        .agg(count(lit(1)).cast("double").as("tf")))
-    // WRITE ORDER + OVERLAP (r20, guide §2.6): the postings write runs
-    // FIRST and alone — its single pass computes and pins BOTH shared
-    // caches (`postings` reads through `base`), so every later consumer
-    // is a pure cache reader and no two jobs ever race to compute the
-    // same cached partition (the materialization-order proof the r19
-    // checklist asked for). The stats and terms writes — independent
-    // cache readers landing in different store subdirectories — then
-    // run CONCURRENTLY from the caller thread + one Future ([[alongside]]
-    // waits for both before returning or rethrowing): Spark's FIFO
-    // scheduler back-fills the second job's tasks into the first job's
-    // tail instead of serializing three write barriers.
-    // repartition BY BUCKET before partitionBy: without it every write
-    // task opens a file in every bucket directory — tasks × nBuckets
-    // small files per segment, which on a 1000-executor writer is an
-    // object-store metadata storm. Bucket-aligned, each bucket's rows
-    // land in one task, so a segment writes ~one file per bucket (the
-    // same layout the compactor restores).
-    postings
-      .withColumn("tbucket", pmod(hash(col("term")), lit(nBuckets)))
+    val r = tok.agg(count(lit(1)), sum(col("dl")),
+      coalesce(sum(size(array_distinct(col("t"))).cast("long")), lit(0L)))
+      .collect()(0)
+    Bm25Batch(tok, r.getLong(0), Option.when(!r.isNullAt(1))(r.getLong(1)),
+      r.getLong(2))
+  }
+
+  /** `df` with its writer bucket `pmod(hash(term), nBuckets)`, hash
+    * partitioned on it into nBuckets tasks: every bucket's rows sit in
+    * one task, so a `partitionBy("tbucket")` write lands one file per
+    * bucket directory (unaligned, every task opens a file in every
+    * bucket it holds rows of: tasks × buckets small files), and an
+    * aggregate keyed by `tbucket` and more columns needs no further
+    * exchange.
+    */
+  private def bucketBy(df: DataFrame, nBuckets: Int): DataFrame =
+    df.withColumn("tbucket", pmod(hash(col("term")), lit(nBuckets)))
       .repartition(nBuckets, col("tbucket"))
+
+  private val Bm25StatsSchema = StructType(Seq(
+    StructField("n", LongType, nullable = false),
+    StructField("sum_dl", LongType, nullable = true),
+    StructField("n_buckets", IntegerType, nullable = false)))
+
+  /** One `stats/` segment row, written from driver-side values (one
+    * single-task job, one file). */
+  private def writeBm25Stats(
+      spark: org.apache.spark.sql.SparkSession, dir: String, n: Long,
+      sumDl: Option[Long], nBuckets: Int, mode: String): Unit =
+    spark.createDataFrame(
+      java.util.List.of(Row(n, sumDl.map(Long.box).orNull, nBuckets)),
+      Bm25StatsSchema)
+      .write.mode(mode).parquet(dir)
+
+  /** One tokenized batch written as a store segment (shared by
+    * [[writeBm25Index]] / [[appendToBm25Index]]; the caller releases the
+    * OpCaches entries). The writes run in turn on the caller's thread —
+    * postings, stats, terms — so a failure surfaces with no job of the
+    * call still running. Postings take the batch's one shuffle: exploded
+    * tokens hash-partitioned on `tbucket` ([[bucketBy]]), then the tf
+    * aggregate keyed by (tbucket, doc_id, dl, term), which that
+    * partitioning already satisfies; it is cached, and the df aggregate
+    * keyed by (tbucket, term) reads the cache with no exchange either.
+    */
+  private def writeBm25Segment(
+      batch: Bm25Batch, path: String, nBuckets: Int,
+      overwrite: Boolean): Unit = {
+    val mode = if (overwrite) "overwrite" else "append"
+    val postings = graft.util.OpCaches.cache(
+      bucketBy(batch.tokens
+          .select(col("doc_id"), col("dl"), explode(col("t")).as("term")),
+          nBuckets)
+        .groupBy(col("tbucket"), col("doc_id"), col("dl"), col("term"))
+        .agg(count(lit(1)).cast("double").as("tf")))
+    postings
+      .select(col("doc_id"), col("dl"), col("term"), col("tf"), col("tbucket"))
       .write.mode(mode).partitionBy("tbucket")
       .parquet(s"$path/postings")
-    // stats over ALL docs (zero-token docs included — the inline path's
-    // N counts them too), exact integer sums so avgdl is engine-stable
-    alongside(
-      base.agg(count(lit(1)).as("n"), sum(col("dl")).as("sum_dl"))
-        .withColumn("n_buckets", lit(nBuckets))
-        .write.mode(mode).parquet(s"$path/stats")) {
-      postings.groupBy(col("term"))
-        .agg(count(lit(1)).cast("double").as("df"))
-        .withColumn("tbucket", pmod(hash(col("term")), lit(nBuckets)))
-        .repartition(nBuckets, col("tbucket"))
-        .write.mode(mode).partitionBy("tbucket")
-        .parquet(s"$path/terms")
-    }
+    // exact integer sums, so avgdl is engine-stable
+    writeBm25Stats(batch.tokens.sparkSession, s"$path/stats", batch.n,
+      batch.sumDl, nBuckets, mode)
+    postings.groupBy(col("tbucket"), col("term"))
+      .agg(count(lit(1)).cast("double").as("df"))
+      .select(col("term"), col("df"), col("tbucket"))
+      .write.mode(mode).partitionBy("tbucket")
+      .parquet(s"$path/terms")
   }
 
   /** A BM25 store's statistics: n and Σdl summed over the `stats/`
@@ -1301,16 +1313,19 @@ object TextOps {
   }
 
   /** Compact a BM25 index in place: daily [[appendToBm25Index]] runs
-    * each add a stats segment row, per-term df-delta rows, and a
-    * handful of small postings files per bucket; after months the
-    * store read pays more in file listing + footer opens + per-term
-    * delta rows than in bytes. Folds `stats/` to one row, `terms/` to
-    * one row per term (the summed df the reader would compute), and
-    * rewrites `postings/` hash-distributed on `tbucket` into
-    * ⌈rows / targetFileRows⌉ tasks — each bucket lands in exactly one
-    * task, so every partition directory compacts to a single file —
-    * then atomically repoints the store's generation manifest at the
-    * rewrite ([[graft.util.GenStore.compactInto]]). Query results are
+    * each add a stats segment row, per-term df-delta rows, and one
+    * small postings file per bucket; after months the store read pays
+    * more in file listing + footer opens + per-term delta rows than in
+    * bytes. Folds `stats/` to one row, `terms/` to one row per term (the
+    * summed df the reader would compute), and re-buckets the live
+    * postings: the bucket count is re-derived as
+    * ⌈live postings rows / targetFileRows⌉ (the rule [[writeBm25Index]]
+    * sizes a build with), `tbucket` is recomputed for postings and terms,
+    * and the new `n_buckets` is recorded — so a store grown by appends
+    * past its build's sizing is re-bucketed here. Each bucket is one
+    * task, so every partition directory compacts to a single file. The
+    * rewrite then atomically repoints the store's generation manifest
+    * ([[graft.util.GenStore.compactInto]]). Query results are
     * bit-identical pre/post (asserted in TextDedupSpec), and the swap
     * is ATOMIC FOR READERS — a mid-query reader keeps its resolved
     * generation's complete file set (kept one further compaction
@@ -1323,7 +1338,7 @@ object TextOps {
       targetFileRows: Long = 4L * 1024 * 1024): Unit = {
     require(targetFileRows > 0, "targetFileRows must be positive")
     val src = graft.util.GenStore.resolve(spark, path)
-    val nBuckets = readBm25Stats(spark, src).nBuckets
+    val stats = readBm25Stats(spark, src)
     // fold tombstones physically: deleted docs' postings drop from the
     // rewrite, and the new generation carries no _tombstones directory
     // (the old generation keeps its own for in-flight readers, under
@@ -1331,26 +1346,23 @@ object TextOps {
     val postings = graft.util.Tombstones.filter(
       graft.util.SegmentStore.parquet(spark, s"$src/postings"),
       spark, src, "doc_id")
-    val nFiles =
+    val nBuckets =
       graft.util.SegmentStore.fileCount(postings.count(), targetFileRows)
     graft.util.GenStore.compactInto(spark, path) { genDir =>
-      postings.repartition(nFiles, col("tbucket"))
+      bucketBy(postings, nBuckets)
         .write.mode("overwrite").partitionBy("tbucket")
         .parquet(s"$genDir/postings")
-      graft.util.SegmentStore.parquet(spark, s"$src/terms")
-        .groupBy(col("term")).agg(sum(col("df")).as("df"))
+      bucketBy(graft.util.SegmentStore.parquet(spark, s"$src/terms"), nBuckets)
+        .groupBy(col("tbucket"), col("term")).agg(sum(col("df")).as("df"))
         // a term whose every bearing doc was deleted folds to df = 0
         // (+1 build contributions exactly cancelled by -1 delete
         // deltas) — drop the husk row rather than carry it forever
         .filter(col("df") =!= 0.0)
-        .withColumn("tbucket", pmod(hash(col("term")), lit(nBuckets)))
-        .repartition(nFiles, col("tbucket"))
+        .select(col("term"), col("df"), col("tbucket"))
         .write.mode("overwrite").partitionBy("tbucket")
         .parquet(s"$genDir/terms")
-      graft.util.SegmentStore.parquet(spark, s"$src/stats")
-        .agg(sum(col("n")).as("n"), sum(col("sum_dl")).as("sum_dl"))
-        .withColumn("n_buckets", lit(nBuckets))
-        .write.mode("overwrite").parquet(s"$genDir/stats")
+      writeBm25Stats(spark, s"$genDir/stats", stats.n, Some(stats.sumDl),
+        nBuckets, "overwrite")
     }
   }
 

@@ -31,8 +31,11 @@ import org.apache.spark.sql.graftshim.Bridge
   */
 object SegmentStore {
 
-  /** ⌈total / targetFileRows⌉ clamped to Int — the standard sizing for
-    * compaction rewrites (one task per ~targetFileRows rows).
+  /** ⌈total / targetFileRows⌉, at least 1, clamped to Int — the one
+    * sizing rule for store writes: one task, and so one file, per
+    * ~targetFileRows rows. Compaction rewrites size their files with it,
+    * and the BM25 build and compaction size their term-hash bucket count
+    * with it (from the postings rows), so the count follows the data.
     */
   def fileCount(total: Long, targetFileRows: Long): Int = {
     require(targetFileRows > 0, "targetFileRows must be positive")

@@ -96,7 +96,7 @@ class StoreCompactionAtomicitySpec extends AnyFunSuite {
         (1L, "spark shuffles data across the cluster"),
         (2L, "spark spark spark and more spark"),
         (3L, "the cluster runs jobs")),
-      store, nBuckets = 8)
+      store, targetFileRows = 2L)
     TextOps.appendToBm25Index(docs((4L, "cluster cluster spark again")), store)
     def topkDf() =
       TextOps.bm25TopKFromStore(spark, Seq("spark", "cluster"), store, k = 10)

@@ -73,9 +73,9 @@ class StoreDeleteSpec extends AnyFunSuite {
     val remaining = fresh("bm25_del_remaining")
     val deletedPred = col("doc_id") % 3 === 1
 
-    TextOps.writeBm25Index(docs, full, nBuckets = 8)
+    TextOps.writeBm25Index(docs, full, targetFileRows = 64L)
     TextOps.deleteFromBm25Index(docs.filter(deletedPred), full)
-    TextOps.writeBm25Index(docs.filter(!deletedPred), remaining, nBuckets = 8)
+    TextOps.writeBm25Index(docs.filter(!deletedPred), remaining, targetFileRows = 64L)
 
     val afterDeleteDf = TextOps.bm25TopKFromStore(spark, terms, full, k = 10)
     assert(afterDeleteDf.filter(col("doc_id") % 3 === 1).count() == 0L,
@@ -97,7 +97,7 @@ class StoreDeleteSpec extends AnyFunSuite {
   test("bm25 delete: a term whose every bearing doc is deleted folds to " +
     "a dropped df row at compaction") {
     val store = fresh("bm25_del_term")
-    TextOps.writeBm25Index(docs, store, nBuckets = 4)
+    TextOps.writeBm25Index(docs, store, targetFileRows = 130L)
     // drift5 occurs only in doc 5
     TextOps.deleteFromBm25Index(docs.filter(col("doc_id") === 5), store)
     TextOps.compactBm25Index(spark, store)

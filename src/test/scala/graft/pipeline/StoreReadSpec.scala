@@ -49,8 +49,8 @@ class StoreReadSpec extends AnyFunSuite {
     dir.toString
   }
 
-  // 120 docs over a 150-word vocabulary: enough distinct terms that the
-  // default 64 buckets almost all get a directory
+  // 120 docs over a 150-word vocabulary: enough distinct terms that a
+  // store sized to 72 buckets gives almost all of them a directory
   private def text(i: Int): String =
     (0 until 6).map(j => s"v${(i * 7 + j * 13) % 150}").mkString(" ")
 
@@ -87,7 +87,7 @@ class StoreReadSpec extends AnyFunSuite {
       "component") {
     // BM25: build, append, delete (tombstones)
     val bm = fresh("schema_bm25")
-    TextOps.writeBm25Index(docsFrom("schema_docs", 0 until 60), bm, nBuckets = 8)
+    TextOps.writeBm25Index(docsFrom("schema_docs", 0 until 60), bm, targetFileRows = 45L)
     TextOps.appendToBm25Index(docsFrom("schema_batch", 60 until 70), bm)
     TextOps.deleteFromBm25Index(docsFrom("schema_del", 3 until 5), bm)
     Seq("postings", "terms", "stats", "_tombstones")
@@ -160,7 +160,7 @@ class StoreReadSpec extends AnyFunSuite {
   test("a warm BM25 request runs at most 5 jobs, a warm IVF request at " +
       "most 4") {
     val bm = fresh("jobs_bm25")
-    TextOps.writeBm25Index(docsFrom("jobs_docs", 0 until 120), bm)
+    TextOps.writeBm25Index(docsFrom("jobs_docs", 0 until 120), bm, targetFileRows = 10L)
     TextOps.appendToBm25Index(docsFrom("jobs_batch", 120 until 130), bm)
     val buckets = new java.io.File(s"$bm/postings").list().count(_.startsWith("tbucket="))
     assert(buckets > 32, "the store must be past Spark's parallel-listing threshold")
@@ -189,14 +189,15 @@ class StoreReadSpec extends AnyFunSuite {
       "schema included") {
     val docs = docsFrom("prune_docs", 0 until 12)
     val bm = fresh("prune_bm25")
-    TextOps.writeBm25Index(docs, bm, nBuckets = 64)
+    TextOps.writeBm25Index(docs, bm, targetFileRows = 1L)
+    val nb = TextOps.readBm25Stats(spark, bm).nBuckets
     val present = new java.io.File(s"$bm/postings").list()
       .filter(_.startsWith("tbucket=")).map(_.stripPrefix("tbucket=").toInt).toSet
-    assert(present.size < 64)
+    assert(present.size < nb)
     // terms absent from the corpus whose bucket has no directory, by the
     // writer's own expression
     val absent = (0 until 400).map(i => s"absent$i").toDF("term")
-      .select(col("term"), pmod(hash(col("term")), lit(64)).as("b"))
+      .select(col("term"), pmod(hash(col("term")), lit(nb)).as("b"))
       .as[(String, Int)].collect().filterNot(t => present(t._2)).map(_._1)
     assert(absent.length >= 2)
     for (terms <- Seq(Seq("v0", "v13", absent(0)), absent.take(2).toSeq)) {
@@ -211,7 +212,7 @@ class StoreReadSpec extends AnyFunSuite {
 
   test("an empty append batch (null sum_dl) keeps n and avgdl") {
     val bm = fresh("empty_append")
-    TextOps.writeBm25Index(docsFrom("empty_docs", 0 until 30), bm, nBuckets = 8)
+    TextOps.writeBm25Index(docsFrom("empty_docs", 0 until 30), bm, targetFileRows = 23L)
     val before = TextOps.readBm25Stats(spark, bm)
     val terms = Seq("v0", "v13", "v26")
     val want = rows(TextOps.bm25TopKFromStore(spark, terms, bm, k = 10))
@@ -283,7 +284,7 @@ class StoreReadSpec extends AnyFunSuite {
   test("a failed append or delete waits for its background write before " +
       "the failure surfaces") {
     val bm = fresh("fail_append")
-    TextOps.writeBm25Index(docsFrom("fail_docs", 0 until 40), bm, nBuckets = 8)
+    TextOps.writeBm25Index(docsFrom("fail_docs", 0 until 40), bm, targetFileRows = 30L)
     breakComponent(s"$bm/terms")
     val batch = docsFrom("fail_batch", 40 until 50)
     val statsFiles = parts(s"$bm/stats")
@@ -293,7 +294,7 @@ class StoreReadSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$bm/stats").count() === 2)
 
     val del = fresh("fail_delete")
-    TextOps.writeBm25Index(docsFrom("fail_docs2", 0 until 40), del, nBuckets = 8)
+    TextOps.writeBm25Index(docsFrom("fail_docs2", 0 until 40), del, targetFileRows = 30L)
     breakComponent(s"$del/terms")
     val deleted = docsFrom("fail_del", 0 until 5)
     failsWithNoJobLeft(TextOps.deleteFromBm25Index(deleted, del))(

@@ -511,7 +511,7 @@ class TextDedupSpec extends AnyFunSuite {
       (3L, "the cluster runs jobs"),
       (4L, "nothing relevant here at all"))
     val store = java.nio.file.Files.createTempDirectory("bm25idx").toString
-    TextOps.writeBm25Index(d, store, nBuckets = 8)
+    TextOps.writeBm25Index(d, store, targetFileRows = 3L)
     val inline = TextOps.bm25TopK(d, Seq("spark", "cluster"), k = 10)
       .as[(Long, Double)].collect().toSeq
     val stored = TextOps.bm25TopKFromStore(
@@ -567,11 +567,11 @@ class TextDedupSpec extends AnyFunSuite {
       (5L, "nothing relevant here at all"))
     val store = java.nio.file.Files.createTempDirectory("bm25app").toString
     val full = java.nio.file.Files.createTempDirectory("bm25full").toString
-    TextOps.writeBm25Index(d1, store, nBuckets = 8)
+    TextOps.writeBm25Index(d1, store, targetFileRows = 2L)
     // simulate the daily-ingest loop: two append segments
     TextOps.appendToBm25Index(d2.filter($"doc_id" === 4L), store)
     TextOps.appendToBm25Index(d2.filter($"doc_id" === 5L), store)
-    TextOps.writeBm25Index(d1.unionByName(d2), full, nBuckets = 8)
+    TextOps.writeBm25Index(d1.unionByName(d2), full, targetFileRows = 2L)
     def topk(path: String): Seq[(Long, Double)] = {
       val r = TextOps.bm25TopKFromStore(
           spark, Seq("spark", "cluster"), path, k = 10)
@@ -616,7 +616,7 @@ class TextDedupSpec extends AnyFunSuite {
     assert(topk(store) === appended)
     // a store with inconsistent bucket counts is refused, not mis-pruned
     val bad = java.nio.file.Files.createTempDirectory("bm25bad").toString
-    TextOps.writeBm25Index(d1, bad, nBuckets = 8)
+    TextOps.writeBm25Index(d1, bad, targetFileRows = 2L)
     Seq((0L, 0L, 16)).toDF("n", "sum_dl", "n_buckets")
       .write.mode("append").parquet(s"$bad/stats")
     intercept[IllegalArgumentException] {
