@@ -586,12 +586,10 @@ object Dedup {
     * a 2-universal family over a 120-bit key. ONE md5 per shingle, then
     * integer arithmetic per hash function (~12× cheaper than hashing per
     * (i, s)); each product is reduced mod P before summing so nothing
-    * exceeds 2⁶² in any engine; expressible verbatim in DuckDB.
+    * exceeds 2⁶² in any engine; expressible verbatim in DuckDB. The
+    * coefficients a_i, b_i, c_i live in [[graft.expr.MinHashSignature]].
     */
   val MinHashP: Long = 2147483647L
-  def minHashA(i: Int): Long = (2654435761L * (i + 1)) % MinHashP
-  def minHashB(i: Int): Long = (2246822519L * (i + 1)) % MinHashP
-  def minHashC(i: Int): Long = (104729L * (i + 1)) % MinHashP
 
   /** Per-token (u, v) keys: two md5-prefix ints reduced mod P — ONE md5
     * per token occurrence, from which every shingle key derives
@@ -1459,13 +1457,6 @@ object Dedup {
       graft.expr.SimHashPack
         .blocks(array_distinct(TextOps.tokens(col("text"))))
         .as("blocks"))
-
-  /** Hamming distance between two equal-length bit strings. */
-  def hammingDist(a: Column, b: Column): Column =
-    size(
-      filter(
-        sequence(lit(1), length(a)),
-        i => a.substr(i, lit(1)) =!= b.substr(i, lit(1))))
 
   /** SimHash near-dup pairs with hamming distance <= maxDist (< 16): by
     * pigeonhole over 4 16-bit blocks, candidates must match at least one

@@ -6,20 +6,26 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{InterpretedOrdering, UnsafeProjection}
-import org.apache.spark.sql.graftshim.Bridge
 import org.apache.spark.sql.types.DataType
-import org.apache.spark.storage.StorageLevel
 
 /** The one Lloyd loop behind [[Lloyd]] and [[LloydN]] (reference
-  * `master.py:215-258`). One job reads the input once: it packs each
-  * partition's features into one row-major `Array[Double]`, persisted for
-  * the fit, and returns the partition's first k keys, from which the
-  * driver takes the first-K init of [[Ops.initFirstK]] /
-  * [[OpsN.initFirstKN]]. Each iteration is one job over the blocks with
-  * the model broadcast: the argmin per row and, per partition, (Σ, n) of
+  * `master.py:215-258`). A fit of i steps is i + 1 jobs and broadcasts
+  * nothing of its own. The first job reads the input once: it packs each
+  * partition's features into one row-major `Array[Double]`, kept for the
+  * fit, and returns the partition's first k rows (keys and coordinates),
+  * from which the driver takes the first-K init of [[Ops.initFirstK]] /
+  * [[OpsN.initFirstKN]]. Each step is one job over the blocks, the model
+  * riding in the job's function (Spark ships that in the task binary it
+  * broadcasts per job): the argmin per row and, per partition, (Σ, n) of
   * the clusters it hit (the in-mapper combiner for k-means, VLDB'12
-  * *MapReduce Algorithms for Big Data Analysis*). No query is planned
-  * and nothing is shuffled per iteration.
+  * *MapReduce Algorithms for Big Data Analysis*). No query is planned and
+  * nothing is shuffled per step.
+  *
+  * The blocks are locally checkpointed, so a step task carries no SQL
+  * lineage, and a block lost between the pack and a step (an executor
+  * gone, its blocks removed) cannot be recomputed: the step's job fails
+  * and the fit throws, returning no model. It never answers from the
+  * partitions that are left.
   *
   * Bit-identical to iterating `Ops.update(Ops.assign(..))` /
   * `OpsN.updateN(OpsN.assignN(..))` over the same partitions: the argmin
@@ -33,7 +39,11 @@ private[kmeans] object LloydCore {
   /** One packed partition: `width` coordinates per row (-1 when empty),
     * and its first k rows as (init key, row index).
     */
-  private final case class Block(width: Int, coords: Array[Double], first: Array[(InternalRow, Int)])
+  private final case class Block(width: Int, coords: Array[Double], first: Array[(InternalRow, Int)]) {
+    /** The first k rows as (init key, row index, coordinates). */
+    def heads: Array[(InternalRow, Int, Array[Double])] =
+      first.map { case (key, row) => (key, row, coords.slice(row * width, (row + 1) * width)) }
+  }
 
   /** One partition's (model index, n, Σ) for each cluster it hit, ascending. */
   private[kmeans] type Partial = Array[(Int, Long, Array[Double])]
@@ -47,9 +57,15 @@ private[kmeans] object LloydCore {
     * ORDER BY), which become cids 0..k-1. `cfg.f32Wire` rounds each model
     * through float32 (`master.py:64-66`); the input's rounding is the
     * caller's. Null, ragged or non-finite input is refused with an
-    * IllegalArgumentException.
+    * IllegalArgumentException. `afterPack` sees the packed blocks before the
+    * first step (a seam for the lost-block spec).
     */
-  def run(points: DataFrame, features: Column, key: Seq[Column], cfg: KMeansConfig): KMeansResultN = {
+  def run(
+      points: DataFrame,
+      features: Column,
+      key: Seq[Column],
+      cfg: KMeansConfig,
+      afterPack: RDD[_] => Unit = _ => ()): KMeansResultN = {
     def wire(cs: Seq[CentroidN]) =
       if (!cfg.f32Wire) cs
       else cs.map(c => CentroidN(c.cid, c.features.map(_.toFloat.toDouble)))
@@ -58,12 +74,13 @@ private[kmeans] object LloydCore {
     val k = cfg.k
     val blocks = q.queryExecution.toRdd
       .mapPartitions(rows => Iterator.single(pack(rows, keyTypes, k)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .localCheckpoint()
     try {
-      val heads = refusing(blocks.sparkContext.runJob(blocks, OnBlock((_, b) => (b.width, b.first))))
+      val heads = refusing(blocks.sparkContext.runJob(blocks, OnBlock(b => (b.width, b.heads))))
       val widths = heads.map(_._1).filter(_ >= 0).distinct
       require(widths.size <= 1, s"feature rows differ in width: ${widths.sorted.mkString(", ")}")
-      var centroids = wire(init(blocks, heads.map(_._2), keyTypes, k))
+      afterPack(blocks)
+      var centroids = wire(init(heads.map(_._2), keyTypes, k))
       require(centroids.nonEmpty, s"fewer than 1 point available for k=$k init")
       var iter = 0
       var done = false
@@ -90,8 +107,8 @@ private[kmeans] object LloydCore {
     * (SparkContext's own too, for runJob's iterator-only forms), which
     * took most of the driver thread's time in a profiled 2-D fit.
     */
-  private final case class OnBlock[U](f: (Int, Block) => U) extends ((TaskContext, Iterator[Block]) => U) {
-    def apply(ctx: TaskContext, it: Iterator[Block]): U = f(ctx.partitionId(), it.next())
+  private final case class OnBlock[U](f: Block => U) extends ((TaskContext, Iterator[Block]) => U) {
+    def apply(ctx: TaskContext, it: Iterator[Block]): U = f(it.next())
   }
 
   /** Ascending over a row's leading `keyTypes` fields, nulls first. */
@@ -135,26 +152,19 @@ private[kmeans] object LloydCore {
   }
 
   /** The first k rows over all partitions by (key, partition, row), as
-    * cids 0..k-1, fetched from the packed blocks.
+    * cids 0..k-1, from each partition's first k (key, row, coordinates).
     */
   private def init(
-      blocks: RDD[Block],
-      first: Array[Array[(InternalRow, Int)]],
+      first: Array[Array[(InternalRow, Int, Array[Double])]],
       keyTypes: Seq[DataType],
-      k: Int): Seq[CentroidN] = {
-    val chosen = first.zipWithIndex
-      .flatMap { case (f, p) => f.map { case (key, row) => (key, p, row) } }
-      .sorted(byKey(keyTypes).on[(InternalRow, Int, Int)](_._1).orElseBy(t => (t._2, t._3)))
+      k: Int): Seq[CentroidN] =
+    first.zipWithIndex
+      .flatMap { case (f, p) => f.map { case (key, row, xs) => (key, p, row, xs) } }
+      .sorted(byKey(keyTypes).on[(InternalRow, Int, Int, Array[Double])](_._1).orElseBy(t => (t._2, t._3)))
       .take(k)
-      .map { case (_, p, row) => (p, row) }
-    val rowsOf = chosen.groupMap(_._1)(_._2)
-    val parts = rowsOf.keys.toSeq.sorted
-    val got = blocks.sparkContext.runJob(blocks, OnBlock { (p, b) =>
-      rowsOf(p).map(r => r -> b.coords.slice(r * b.width, (r + 1) * b.width))
-    }, parts)
-    val coords = parts.zip(got).flatMap { case (p, rs) => rs.map { case (r, xs) => (p, r) -> xs } }.toMap
-    chosen.toSeq.zipWithIndex.map { case (pr, cid) => CentroidN(cid, coords(pr)) }
-  }
+      .toSeq
+      .zipWithIndex
+      .map { case (t, cid) => CentroidN(cid, t._4) }
 
   /** One Lloyd step: the model after assign + mean, empty clusters
     * dropped, ascending cid.
@@ -162,8 +172,7 @@ private[kmeans] object LloydCore {
   private def step(blocks: RDD[Block], model: IndexedSeq[CentroidN]): Seq[CentroidN] = {
     val k = model.size
     val d = model.head.features.length
-    val sc = blocks.sparkContext
-    val bc = sc.broadcast(model.flatMap(_.features).toArray)
+    val c = model.flatMap(_.features).toArray
     val sum = new Array[Double](k * d)
     val n = new Array[Long](k)
     // fold partials in partition-index order as they arrive, holding only
@@ -180,8 +189,7 @@ private[kmeans] object LloydCore {
         next += 1
       }
     }
-    try refusing(sc.runJob(blocks, OnBlock((_, b) => partial(b.coords, bc.value, k, d)), merge _))
-    finally Bridge.destroy(bc)
+    refusing(blocks.sparkContext.runJob(blocks, OnBlock(b => partial(b.coords, c, k, d)), merge _))
     (0 until k).filter(n(_) > 0).map { j =>
       CentroidN(model(j).cid, Array.tabulate(d)(i => sum(j * d + i) / n(j)))
     }

@@ -4,7 +4,6 @@ import org.apache.hadoop.fs.FileStatus
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -18,20 +17,13 @@ import org.apache.spark.sql.types.StructType
   * `Column(expr)` constructor), the materialized RDD behind a
   * checkpointed Dataset (needed to release a superseded
   * `localCheckpoint`'s blocks eagerly — `Dataset.unpersist` only talks to
-  * the CacheManager, which never sees checkpoint storage), the
-  * blocking form of `Broadcast.destroy`, and the schema of one parquet
-  * file read from its footer. This is the only file outside
-  * the `graft` namespace; it contains no logic.
+  * the CacheManager, which never sees checkpoint storage), and the
+  * schema of one parquet file read from its footer. This is the only
+  * file outside the `graft` namespace; it contains no logic.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-
-  /** Destroy a broadcast and wait until its blocks are gone: the public
-    * `destroy()` returns at once and leaves the removal running beside
-    * the caller's next job.
-    */
-  def destroy(b: Broadcast[_]): Unit = b.destroy(blocking = true)
 
   /** The Spark schema of one parquet file, read from its footer on the
     * calling thread with the converter and footer rules Spark's own

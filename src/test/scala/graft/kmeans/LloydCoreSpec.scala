@@ -1,5 +1,7 @@
 package graft.kmeans
 
+import org.apache.spark.SparkException
+import org.apache.spark.rdd.RDD
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
@@ -192,12 +194,57 @@ class LloydCoreSpec extends AnyFunSuite {
       eventually(timeout(30.seconds))(assert(drained.get))
       assert(bits(got.map(g => (g.cid, g.features.toSeq))) ===
         bits(want.map(g => (g.cid, g.features.toSeq))))
-      // pack, init fetch and step tasks; a dense partial alone is k · 64 · 8 ≈ 61 KB
-      assert(tasks.get > 1000)
+      // the pack's and the one step's tasks; a dense partial alone is
+      // k · 64 · 8 ≈ 61 KB
+      assert(tasks.get === 1000)
       assert(maxBytes.get < 16 * 1024, s"${maxBytes.get} bytes from one task")
     } finally {
       sc.removeSparkListener(listener)
       c.unpersist(blocking = true)
+    }
+  }
+
+  test("a 2-D fit of i steps is i + 1 jobs: the pack, then one per step") {
+    val sc = spark.sparkContext
+    val df = points(2).map { case (pid, f) => (pid, f(0), f(1)) }.toDF("pid", "x", "y")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.atomic.AtomicBoolean
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.properties.getProperty("spark.jobGroup.id") match {
+          case "core-jobs" => jobs.incrementAndGet()
+          case "core-jobs-drain" => drained.set(true)
+          case _ =>
+        }
+    }
+    cached(df, 3) { pts =>
+      sc.addSparkListener(listener)
+      try for (iters <- Seq(1, 3, 5)) {
+        jobs.set(0)
+        drained.set(false)
+        sc.setJobGroup("core-jobs", "core-jobs")
+        val got = try Lloyd.fit(pts, LloydCore.fixed(8, iters)) finally sc.clearJobGroup()
+        sc.setJobGroup("core-jobs-drain", "core-jobs-drain")
+        try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+        eventually(timeout(30.seconds))(assert(drained.get))
+        assert(got.iterations === iters)
+        assert(jobs.get === iters + 1, s"$iters steps")
+      } finally sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a fit whose packed blocks are lost throws and returns no model") {
+    val df = points(3).toDF("pid", "features")
+    cached(df, 3) { pts =>
+      def fit(afterPack: RDD[_] => Unit) =
+        LloydCore.run(pts, col("features"), Seq(col("pid")), LloydCore.fixed(4, 3), afterPack)
+      assert(fit(_ => ()).iterations === 3)
+      // the blocks go between the pack job and the first step: the step
+      // cannot recompute them, so the fit must fail, not fit what is left
+      var model: Option[KMeansResultN] = None
+      val e = intercept[SparkException] { model = Some(fit(_.unpersist(blocking = true))) }
+      assert(model.isEmpty)
+      assert(e.getMessage.contains("Checkpoint block"), e.getMessage)
     }
   }
 }
