@@ -1239,28 +1239,21 @@ object Dedup {
     * aggregations + joins; the edge set converges to stars centered at each
     * component's minimum node in O(log²n) rounds REGARDLESS of component
     * diameter — a 10⁶-node chain converges in ~20 rounds where per-hop
-    * min-label propagation would need 10⁶. `localCheckpoint` after every
-    * round truncates the lineage so plans stay flat across iterations.
+    * min-label propagation would need 10⁶. An eager checkpoint after every
+    * round truncates the lineage so plans stay flat across iterations:
+    * local by default, or reliable (to the context's checkpoint dir,
+    * surviving executor loss at the price of a distributed-FS write per
+    * round) under the session's `spark.graft.checkpoint=reliable`
+    * ([[graft.util.Checkpoints]]). Same groups, same round count, either
+    * way — asserted in `TextDedupSpec` and `CheckpointModeSpec`.
     *
     * Only docs that are in some pair appear. Output: (doc_id, gid).
     *
     * @param maxRounds safety bound only — log₂²(n) rounds suffice, so 50
     *   covers any realistic graph; exceeded ⇒ exception, never truncation.
-    * @param reliable checkpoint each round to the session's configured
-    *   `sparkContext.setCheckpointDir` (HDFS/object store) instead of
-    *   executor-local blocks. `localCheckpoint` blocks die with their
-    *   executor, so one lost executor mid-iteration fails a multi-hour
-    *   100 TB CC job; reliable checkpoints survive executor loss at the
-    *   price of a distributed-FS write per round. Same groups, same
-    *   round count — asserted in `TextDedupSpec`. The session-wide
-    *   `spark.graft.checkpoint=reliable` knob ([[graft.util.Checkpoints]])
-    *   selects the same posture without the explicit param.
     */
-  def dupGroups(
-      pairs: DataFrame,
-      maxRounds: Int = 50,
-      reliable: Boolean = false): DataFrame =
-    dupGroupsWithRounds(pairs, maxRounds, reliable)._1
+  def dupGroups(pairs: DataFrame, maxRounds: Int = 50): DataFrame =
+    dupGroupsWithRounds(pairs, maxRounds)._1
 
   /** [[dupGroups]] plus the number of large-star/small-star rounds it took
     * to converge — the observable for the O(log²n) contract (a 50-node
@@ -1269,40 +1262,21 @@ object Dedup {
     */
   def dupGroupsWithRounds(
       pairs: DataFrame,
-      maxRounds: Int = 50,
-      reliable: Boolean = false): (DataFrame, Int) = {
-    // the explicit param (tests, library callers) OR the session-wide
-    // posture knob (spark.graft.checkpoint=reliable) — either selects
-    // fault-tolerant round barriers
-    val rel = reliable ||
-      graft.util.Checkpoints.reliableEnabled(pairs.sparkSession)
-    if (rel) require(
-      pairs.sparkSession.sparkContext.getCheckpointDir.isDefined,
-      "reliable dupGroups requires sparkContext.setCheckpointDir(...) " +
-        "(a fault-tolerant FS path); without it use reliable = false")
-    def ckpt(df: DataFrame): DataFrame =
-      if (rel) df.checkpoint(eager = true) else df.localCheckpoint(true)
+      maxRounds: Int = 50): (DataFrame, Int) = {
+    import graft.util.Checkpoints.checkpoint
     // eager-checkpoint storage is invisible to the CacheManager, so each
     // SUPERSEDED round is released explicitly the moment the next round
     // materializes — storage stays bounded at ~2 rounds of edges instead
     // of every round accumulating until the async ContextCleaner runs.
     // (local mode: unpersist the blocks; reliable mode: delete the
     // round's checkpoint files)
-    def releaserOf(df: DataFrame): () => Unit =
-      if (rel)
-        () => org.apache.spark.sql.graftshim.Bridge.cleanReliableCheckpoint(df)
-      else
-        org.apache.spark.sql.graftshim.Bridge.checkpointedRdd(df)
-          .map(r => () => { r.unpersist(blocking = false); () })
-          .getOrElse(() => ())
     // canonical edges (u > v), no self-loops
-    var e = ckpt(pairs
+    var (e, releaseE) = checkpoint(pairs
       .select(
         greatest(col("d1"), col("d2")).as("u"),
         least(col("d1"), col("d2")).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct())
-    var releaseE = releaserOf(e)
+      .distinct(), eager = true)
 
     // large-star: every node connects its strictly-larger neighbors to the
     // minimum of its neighborhood (incl. itself). Output stays canonical
@@ -1350,13 +1324,13 @@ object Dedup {
     var converged = prev._1 == 0L // no edges: nothing to contract
     while (round < maxRounds && !converged) {
       round += 1
-      val next = ckpt(smallStar(largeStar(e)))
+      val (next, releaseNext) = checkpoint(smallStar(largeStar(e)), eager = true)
       val cur = checksum(next)
       converged = cur == prev
       prev = cur
       releaseE() // `next` is materialized; the old round is unreachable
       e = next
-      releaseE = releaserOf(next)
+      releaseE = releaseNext
     }
     if (!converged) {
       releaseE() // drop the final round's checkpoint blocks before failing

@@ -1,8 +1,12 @@
 package graft.sim
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.kmeans.{CentroidN, LloydN, OpsN}
+import graft.util.{GenStore, OpCaches, SegmentStore}
 
 /** Similarity search over embedding columns (`ARRAY<DOUBLE>`/`ARRAY<FLOAT>`):
   * brute-force cosine top-k as the exact baseline, a random-hyperplane
@@ -163,7 +167,7 @@ object Similarity {
   }
 
   /** IVF (inverted-file) approximate top-k: coarse-quantize the corpus
-    * with the engine's own k-means ([[graft.kmeans.LloydN]], `nlist`
+    * with the engine's own k-means ([[fitQuantizer]], `nlist`
     * centroids), then search each query only against the `nprobe` nearest
     * cells. The standard billion-scale ANN layout: the corpus is
     * partitioned by cell once; each query touches nprobe/nlist of the
@@ -175,34 +179,51 @@ object Similarity {
       corpus: DataFrame,
       k: Int,
       nlist: Int,
-      nprobe: Int,
-      maxIter: Int = 5,
-      fitSampleCap: Long = 100000L): DataFrame = {
+      nprobe: Int): DataFrame = {
     require(nprobe >= 1 && nprobe <= nlist, "need 1 <= nprobe <= nlist")
-    import graft.kmeans.{LloydN, OpsN}
-    val pts = corpus.select(col("id").as("pid"), col("vec").as("features"))
-    // fixed-iteration quantizer (no early stop): deterministic AND
-    // unrollable into an exact SQL oracle, cf. LloydN.iterateN. The fit
-    // trains on a deterministic hash-sample of <= fitSampleCap points
-    // (FAISS-style) — below the cap the sample IS the corpus, so
-    // oracle-checked fixture runs are bit-identical to an uncapped fit
-    val model = LloydN.iterateNSampled(pts, nlist, maxIter, fitSampleCap)
-    // corpus side: cell assignment (shuffle-free projection). The norm is
-    // computed HERE, below the probe join, so it costs O(d) once per
-    // corpus row — not once per (query-probe × corpus-row) candidate
-    // (same hoist as lshTopK's signature projection).
-    val cells = OpsN.assignN(pts, model)
+    val pts = points(corpus)
+    val model = fitQuantizer(pts, nlist, None)
+    ivfProbeScore(queries, assignCells(pts, model), model, k, nprobe)
+  }
+
+  /** (id, vec) rows as the (pid, features) points the Lloyd core reads. */
+  private def points(vectors: DataFrame): DataFrame =
+    vectors.select(col("id").as("pid"), col("vec").as("features"))
+
+  /** Lloyd iterations and sample cap of [[fitQuantizer]]. */
+  private val QuantizerIters = 5
+  private val QuantizerSample = 100000L
+
+  /** The coarse-quantizer fit of every IVF build, [[ivfTopK]],
+    * [[semDedup]] and [[knnJoin]]: [[QuantizerIters]] fixed Lloyd
+    * iterations (no early stop: deterministic AND unrollable into an
+    * exact SQL oracle, cf. [[graft.kmeans.LloydN.iterateN]]) on a
+    * deterministic hash-sample of at most [[QuantizerSample]] points
+    * (FAISS-style). Below the cap the sample IS the corpus, so
+    * oracle-checked fixture runs are bit-identical to an uncapped fit.
+    * `knownCount` forwards a corpus count the caller already ran.
+    */
+  private def fitQuantizer(
+      pts: DataFrame, nlist: Int, knownCount: Option[Long]): Seq[CentroidN] =
+    LloydN.iterateNSampled(pts, nlist, QuantizerIters, QuantizerSample, knownCount)
+
+  /** Each point's cell under `model`, as the (cid_id, cv, cn, cell) rows
+    * every IVF scan tier holds. The norm is computed here, below any
+    * probe join, so it costs O(d) once per corpus row — not once per
+    * (query-probe × corpus-row) candidate (same hoist as lshTopK's
+    * signature projection).
+    */
+  private def assignCells(pts: DataFrame, model: Seq[CentroidN]): DataFrame =
+    OpsN.assignN(pts, model)
       .select(col("pid").as("cid_id"), col("features").as("cv"),
         norm(col("features")).as("cn"), col("cid").as("cell"))
-    ivfProbeScore(queries, cells, model, k, nprobe)
-  }
 
   /** The nprobe nearest cells of a query vector, nearest first, as
     * struct(d2, cell) (shared by the exact and quantized probe paths and
     * [[probeLegs]]): one [[graft.expr.NearestCells]] node.
     */
   private def probeCells(
-      v: Column, model: Seq[graft.kmeans.CentroidN], nprobe: Int): Column =
+      v: Column, model: Seq[CentroidN], nprobe: Int): Column =
     graft.expr.ArrayVector.nearestCells(v, model.map(c => (c.cid, c.features)), nprobe)
 
   /** The probe+score half of IVF search, shared by [[ivfTopK]] (inline
@@ -217,7 +238,7 @@ object Similarity {
   private def ivfProbeScore(
       queries: DataFrame,
       cells: DataFrame,
-      model: Seq[graft.kmeans.CentroidN],
+      model: Seq[CentroidN],
       k: Int,
       nprobe: Int): DataFrame = {
     val q = broadcast(
@@ -239,93 +260,75 @@ object Similarity {
   }
 
   /** Persist an IVF index for [[ivfTopKFromStore]]: `path/centroids` holds
-    * the quantizer (cell, cv — O(nlist) rows) and `path/cells` the
-    * assigned corpus (cid_id, cv, cn, cell) with norms precomputed, so
-    * query time never re-clusters, re-assigns, or re-norms — and never
-    * reads the original embeddings table (plan-locked in PlanShapeSpec).
-    * The same split a FAISS-style serving layout uses: build once, search
-    * many. Parquet both sides; `cells` is what a real deployment would
-    * additionally partition by `cell` on disk — at 100 TB pass
-    * `partitionCells = true` so each probe prunes to its cell's files
-    * instead of scanning the full index.
+    * the quantizer (cell, cv — O(nlist) rows), `path/meta` the fit count
+    * and nlist, and `path/cells` the assigned corpus (cid_id, cv, cn,
+    * cell) as flat part-files with norms precomputed, so query time never
+    * re-clusters, re-assigns, or re-norms — and never reads the original
+    * embeddings table (plan-locked in PlanShapeSpec). The same split a
+    * FAISS-style serving layout uses: build once, search many. The cells
+    * are written by one uncached pass over the corpus.
     */
-  def writeIvfIndex(
-      corpus: DataFrame,
-      nlist: Int,
-      path: String,
-      maxIter: Int = 5,
-      partitionCells: Boolean = false,
-      fitSampleCap: Long = 100000L): Unit = {
-    import graft.kmeans.{LloydN, OpsN}
-    val spark = corpus.sparkSession
+  def writeIvfIndex(corpus: DataFrame, nlist: Int, path: String): Unit = {
+    val pts = points(corpus)
+    buildIvf(pts, nlist, path, pts.count())
+      .write.mode("overwrite").parquet(s"$path/cells")
+  }
+
+  /** The prefix every IVF build shares: fit the quantizer on the `n`-row
+    * corpus, write `centroids/` and `meta/` (`n` is the fit count that
+    * [[appendToIvfIndex]]'s growth check compares against), and return
+    * the corpus's cells rows ([[assignCells]]) for the caller to write.
+    */
+  private def buildIvf(
+      pts: DataFrame, nlist: Int, path: String, n: Long): DataFrame = {
+    val spark = pts.sparkSession
     import spark.implicits._
-    val pts = corpus.select(col("id").as("pid"), col("vec").as("features"))
-    // count once here, forward into the sampled fit (which would
-    // otherwise count), and RECORD it: the fit count is the baseline the
-    // append path's refit check compares index growth against
-    val n = pts.count()
-    val model = LloydN.iterateNSampled(pts, nlist, maxIter, fitSampleCap, Some(n))
+    val model = fitQuantizer(pts, nlist, Some(n))
     model.map(c => (c.cid, c.features.toSeq)).toDF("cell", "cv")
       .write.mode("overwrite").parquet(s"$path/centroids")
     Seq((n, nlist)).toDF("fit_count", "nlist")
       .write.mode("overwrite").parquet(s"$path/meta")
-    val cells = OpsN.assignN(pts, model)
-      .select(col("pid").as("cid_id"), col("features").as("cv"),
-        norm(col("features")).as("cn"), col("cid").as("cell"))
-    writeCells(cells, s"$path/cells", partitionCells, "overwrite")
+    assignCells(pts, model)
   }
 
-  /** Shared cells writer: the `cell=`-partitioned layout repartitions
-    * BY CELL first so each cell directory gets its rows from one task
-    * (~one file per cell) — without it every writer task opens a file
-    * in every cell directory, tasks × nlist small files per write, an
-    * object-store metadata storm on a wide cluster. Same layout the
-    * compactor restores.
+  /** The scan tiers of the IVF store at `path`, each with how cells rows
+    * ([[assignCells]]) are encoded into it under the STORED quantizer:
+    * `cells` (the rows as they are) always, `cells_sq`
+    * ([[quantizeCells]] with the stored bounds) when `quant/` exists,
+    * and `cells_pq` ([[encodePq]] with the stored codebooks) when
+    * `pq_meta/` exists. An encoder reads its quantizer only when called.
+    * Every append, segment write, delete and compaction iterates this
+    * list, so a tier cannot be left out of one of them.
     */
-  private def writeCells(
-      cells: DataFrame, cellsDir: String, partitionCells: Boolean,
-      mode: String): Unit = {
-    val out =
-      (if (partitionCells) cells.repartition(col("cell")) else cells)
-        .write.mode(mode)
-    (if (partitionCells) out.partitionBy("cell") else out)
-      .parquet(cellsDir)
+  private def ivfTiers(
+      spark: SparkSession,
+      path: String): Seq[(String, DataFrame => DataFrame)] = {
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Seq[(String, Option[String], DataFrame => DataFrame)](
+      ("cells", None, rows => rows),
+      ("cells_sq", Some("quant"), rows => {
+        val (mins, maxs) = readSqBounds(spark, path)
+        quantizeCells(rows, mins, maxs)
+      }),
+      ("cells_pq", Some("pq_meta"), rows => {
+        val (m, _, dsub) = readPqMeta(spark, path)
+        encodePq(rows, readPqCodebooks(spark, path, m), dsub)
+      }))
+      .collect {
+        case (tier, meta, encode) if meta.forall(d => fs.exists(new Path(s"$path/$d"))) =>
+          tier -> encode
+      }
   }
-
-  /** The active cells directory of an IVF index: `path/cells` for a
-    * never-compacted store, or the generation directory its manifest
-    * names ([[graft.util.GenStore]]) after a [[compactIvfCells]] run.
-    */
-  private def resolveCells(
-      spark: org.apache.spark.sql.SparkSession, path: String): String =
-    graft.util.GenStore.resolve(spark, s"$path/cells")
-
-  /** Read a scan tier's active generation uniformly across layouts:
-    * flat part-files, `cell=`-partitioned directories, and flat +
-    * streaming segment subdirectories ([[appendIvfSegment]]) — the
-    * partition-aware shared read ([[graft.util.SegmentStore]]), always
-    * with the tier's delete tombstones anti-joined
-    * ([[deleteFromIvfIndex]]; zero plan change when none exist).
-    */
-  private def readTier(
-      spark: org.apache.spark.sql.SparkSession,
-      tierStore: String): DataFrame =
-    graft.util.SegmentStore.readPartitionAware(spark, tierStore, "cid_id")
 
   /** Append a new batch to an existing IVF index: the batch is assigned
     * with the STORED quantizer (centroids are immutable post-build — the
     * standard IVF serving contract; rebuild via [[writeIvfIndex]] when
-    * distribution drift warrants) and its rows append to `path/cells`.
-    * The daily loop of a growing ANN corpus: O(batch) assignment work,
-    * the existing index is never rewritten. Exactly-once is the
-    * caller's contract (a re-run of the same batch appends duplicates),
-    * same as [[graft.dedup.Dedup.appendToSignatureStore]].
-    *
-    * `partitionCells` must MATCH the layout [[writeIvfIndex]] was given —
-    * appending flat files into a `cell=`-partitioned store (or vice
-    * versa) silently splits the index across two incompatible layouts,
-    * the same writer/reader parameter contract the signature store
-    * documents.
+    * distribution drift warrants), encoded into every scan tier
+    * ([[ivfTiers]]), and appended to each tier's active generation. The
+    * daily loop of a growing ANN corpus: O(batch) assignment work, the
+    * existing index is never rewritten. Exactly-once is the caller's
+    * contract (a re-run of the same batch appends duplicates), same as
+    * [[graft.dedup.Dedup.appendToSignatureStore]].
     *
     * '''Refit discipline.''' The stored quantizer only fits the
     * distribution and density it was trained on: once appends grow the
@@ -334,53 +337,20 @@ object Similarity {
     * fixed-parameter saturation the sized operators exist to avoid —
     * silently, because the index still "works". So each append compares
     * the post-append row count against the fit count recorded by
-    * [[writeIvfIndex]] (`path/meta`): past `maxGrowthFactor` (FAISS lore
-    * says re-train somewhere around 2–10× growth; default 4×) it WARNS,
-    * or refuses when `refuseBeyondGrowth` is set, naming the remedy —
-    * re-run [[writeIvfIndex]] to refit on the grown corpus. Indexes
-    * written before `meta` existed skip the check (logged once).
+    * [[writeIvfIndex]] (`path/meta`): past 4× (FAISS lore says re-train
+    * somewhere around 2–10× growth) it WARNS, naming the remedy — re-run
+    * [[writeIvfIndex]] to refit on the grown corpus — and still appends.
+    * Indexes written before `meta` existed skip the check (logged).
     */
-  def appendToIvfIndex(
-      newVectors: DataFrame,
-      path: String,
-      partitionCells: Boolean = false,
-      maxGrowthFactor: Double = 4.0,
-      refuseBeyondGrowth: Boolean = false): Unit = {
-    import graft.kmeans.OpsN
+  def appendToIvfIndex(newVectors: DataFrame, path: String): Unit = {
     val spark = newVectors.sparkSession
-    val model = readIvfCentroids(spark, path)
-    val rows = graft.util.OpCaches.cache(
-      OpsN.assignN(
-          newVectors.select(col("id").as("pid"), col("vec").as("features")),
-          model)
-        .select(col("pid").as("cid_id"), col("features").as("cv"),
-          norm(col("features")).as("cn"), col("cid").as("cell")))
+    val rows = assignBatch(newVectors, path)
     // counting the cached batch also pins it for the writes below
-    checkIvfGrowth(spark, path, rows.count(),
-      maxGrowthFactor, refuseBeyondGrowth)
-    writeCells(rows, resolveCells(spark, path), partitionCells, "append")
-    // a writeIvfIndexSq store also carries the quantized scan tier:
-    // encode the batch with the STORED bounds (clamped — the quantizer
-    // is immutable post-build, same contract as the centroids)
-    val quantMeta = new org.apache.hadoop.fs.Path(s"$path/quant")
-    val fs = quantMeta.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(quantMeta)) {
-      val (mins, maxs) = readSqBounds(spark, path)
-      writeCells(quantizeCells(rows, mins, maxs),
-        graft.util.GenStore.resolve(spark, s"$path/cells_sq"),
-        partitionCells, "append")
-    }
-    // a writeIvfIndexPq store also carries the PQ scan tier: encode the
-    // batch with the STORED codebooks (immutable post-build, same
-    // contract as the centroids and SQ bounds)
-    val pqMeta = new org.apache.hadoop.fs.Path(s"$path/pq_meta")
-    if (fs.exists(pqMeta)) {
-      val (m, _, dsub) = readPqMeta(spark, path)
-      writeCells(encodePq(rows, readPqCodebooks(spark, path, m), dsub),
-        graft.util.GenStore.resolve(spark, s"$path/cells_pq"),
-        partitionCells, "append")
-    }
-    graft.util.OpCaches.releaseAll(spark)
+    checkIvfGrowth(spark, path, rows.count())
+    for ((tier, encode) <- ivfTiers(spark, path))
+      encode(rows).write.mode("append")
+        .parquet(GenStore.resolve(spark, s"$path/$tier"))
+    OpCaches.releaseAll(spark)
   }
 
   /** One micro-batch of [[graft.streaming.StreamOps.runStreamingIvfAppend]]
@@ -390,76 +360,57 @@ object Similarity {
     * (`<tier-generation>/<segment>/`), so an at-least-once foreachBatch
     * replay rewrites identical bytes instead of double-appending — the
     * same replay discipline as the signature store's streaming runner.
-    * Flat tier layout only (segment subdirectories and `cell=`
-    * partition discovery can't share a directory); the quantizer must
-    * already exist (streaming into an unbuilt index has no assignment
-    * basis and fails fast). [[compactIvfCells]] folds segment buildup
-    * back into flat files, after which reads stop paying the recursive
-    * listing.
+    * The quantizer must already exist (streaming into an unbuilt index
+    * has no assignment basis and fails fast). No growth check runs per
+    * segment. [[compactIvfCells]] folds segment buildup back into flat
+    * files.
     */
   private[graft] def appendIvfSegment(
       batch: DataFrame, path: String, segment: String): Unit = {
-    import graft.kmeans.OpsN
     require(!segment.startsWith("_") && !segment.contains("/"),
       s"bad segment name: $segment")
     val spark = batch.sparkSession
-    val model = readIvfCentroids(spark, path)
-    val rows = graft.util.OpCaches.cache(
-      OpsN.assignN(
-          batch.select(col("id").as("pid"), col("vec").as("features")),
-          model)
-        .select(col("pid").as("cid_id"), col("features").as("cv"),
-          norm(col("features")).as("cn"), col("cid").as("cell")))
-    rows.write.mode("overwrite")
-      .parquet(s"${resolveCells(spark, path)}/$segment")
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/quant"))) {
-      val (mins, maxs) = readSqBounds(spark, path)
-      quantizeCells(rows, mins, maxs).write.mode("overwrite")
-        .parquet(graft.util.GenStore.resolve(spark, s"$path/cells_sq") +
-          s"/$segment")
-    }
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/pq_meta"))) {
-      val (m, _, dsub) = readPqMeta(spark, path)
-      encodePq(rows, readPqCodebooks(spark, path, m), dsub)
-        .write.mode("overwrite")
-        .parquet(graft.util.GenStore.resolve(spark, s"$path/cells_pq") +
-          s"/$segment")
-    }
-    graft.util.OpCaches.releaseAll(spark)
+    val rows = assignBatch(batch, path)
+    for ((tier, encode) <- ivfTiers(spark, path))
+      encode(rows).write.mode("overwrite")
+        .parquet(s"${GenStore.resolve(spark, s"$path/$tier")}/$segment")
+    OpCaches.releaseAll(spark)
   }
 
-  /** [[appendToIvfIndex]]'s growth check: post-append rows vs the
-    * recorded fit count. Row counts are parquet-footer metadata reads,
-    * not data scans.
+  /** A batch's cells rows under the stored quantizer, cached: every scan
+    * tier encodes from them.
+    */
+  private def assignBatch(batch: DataFrame, path: String): DataFrame =
+    OpCaches.cache(
+      assignCells(points(batch), readIvfCentroids(batch.sparkSession, path)))
+
+  /** The growth past the fit count at which [[appendToIvfIndex]] warns. */
+  private val MaxGrowth = 4.0
+
+  /** [[appendToIvfIndex]]'s growth check: post-append rows vs the fit
+    * count recorded in `meta/`. The fit count is a one-row read; the
+    * index's rows are counted by a full scan of the cells tier (delete
+    * tombstones anti-joined), an O(index) job on every append.
     */
   private def checkIvfGrowth(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      batchCount: Long,
-      maxGrowthFactor: Double,
-      refuseBeyondGrowth: Boolean): Unit = {
-    val metaPath = new org.apache.hadoop.fs.Path(s"$path/meta")
+      spark: SparkSession, path: String, batchCount: Long): Unit = {
+    val metaPath = new Path(s"$path/meta")
     val fs = metaPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(metaPath)) {
       log.warn(s"IVF index at $path has no meta (pre-refit-check layout); " +
         "growth vs fit cannot be checked — rebuild with writeIvfIndex to " +
         "record the fit count")
     } else {
-      val fitCount = graft.util.SegmentStore.parquet(spark, s"$path/meta")
+      val fitCount = SegmentStore.parquet(spark, s"$path/meta")
         .select(col("fit_count")).head().getLong(0)
       val afterAppend =
-        readTier(spark, s"$path/cells").count() + batchCount
-      if (fitCount > 0 && afterAppend > maxGrowthFactor * fitCount) {
-        val msg = s"IVF index at $path has grown to $afterAppend rows, > " +
-          f"$maxGrowthFactor%.1fx its fit-time corpus of $fitCount rows: " +
+        SegmentStore.read(spark, s"$path/cells", "cid_id").count() + batchCount
+      if (fitCount > 0 && afterAppend > MaxGrowth * fitCount)
+        log.warn(s"IVF index at $path has grown to $afterAppend rows, > " +
+          f"$MaxGrowth%.1fx its fit-time corpus of $fitCount rows: " +
           "cell occupancy is drifting past what the stored quantizer was " +
           "trained for (probe cost rises with the largest cells). Refit " +
-          "with writeIvfIndex on the grown corpus."
-        if (refuseBeyondGrowth) throw new IllegalStateException(msg)
-        else log.warn(msg)
-      }
+          "with writeIvfIndex on the grown corpus.")
     }
   }
 
@@ -468,9 +419,8 @@ object Similarity {
     * delete / [[compactIvfCells]]), the FAISS `remove_ids` shape: a
     * physical rewrite per takedown batch is an O(index) job, this is
     * O(batch). The deleted ids land as a tombstone segment
-    * ([[graft.util.Tombstones]]) inside EACH existing scan tier's
-    * active generation (`cells/`, and `cells_sq/` / `cells_pq/` when
-    * the quantized tiers exist), and every probe path anti-joins its
+    * ([[graft.util.Tombstones]]) inside EACH scan tier's active
+    * generation ([[ivfTiers]]), and every probe path anti-joins its
     * tier's tombstones before scoring, so a deleted vector can never
     * surface in a result or displace a live candidate from the re-rank
     * buffer. The next [[compactIvfCells]] folds each tier's tombstones
@@ -483,64 +433,38 @@ object Similarity {
     * nothing. Single-writer vs compaction, as with appends.
     */
   def deleteFromIvfIndex(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String,
-      ids: DataFrame): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    for (tier <- Seq("cells", "cells_sq", "cells_pq"))
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/$tier")))
-        graft.util.SegmentStore.delete(spark, s"$path/$tier", ids)
-  }
+      ids: DataFrame): Unit =
+    for ((tier, _) <- ivfTiers(spark, path))
+      SegmentStore.delete(spark, s"$path/$tier", ids)
 
-  /** Compact an IVF index's `cells` after a season of
-    * [[appendToIvfIndex]] runs — each daily append adds a handful of
-    * small parquet files (per cell, in the partitioned layout), and the
-    * probe-time scan eventually pays more in listing + footers than
-    * bytes; the signature store has the same maintenance pass
-    * ([[graft.dedup.Dedup.compactSignatureStore]]). Flat layout
-    * coalesces to ⌈rows / targetFileRows⌉ files; the `cell=`-partitioned
-    * layout repartitions BY CELL first, so each cell directory collapses
-    * to one file while partition pruning is preserved. The quantizer,
-    * meta, and search results are untouched (asserted in
+  /** Compact an IVF index's scan tiers ([[ivfTiers]]) after a season of
+    * appends, streaming segments and deletes — each daily append adds a
+    * handful of small parquet files, and the probe-time scan eventually
+    * pays more in listing + footers than bytes; the signature store has
+    * the same maintenance pass
+    * ([[graft.dedup.Dedup.compactSignatureStore]]). Each tier is read
+    * with its segments and tombstones folded in and rewritten as
+    * ⌈rows / targetFileRows⌉ flat files ([[graft.util.SegmentStore.compactFlat]]).
+    * The quantizer, meta, and search results are untouched (asserted in
     * SimilaritySpec). The rewrite lands in a new generation directory
-    * and the cells manifest is repointed atomically
+    * and the tier's manifest is repointed atomically
     * ([[graft.util.GenStore.compactInto]]): ATOMIC FOR READERS — a
     * mid-query reader keeps its resolved generation's complete file
     * set for one further compaction cycle. Writers stay single-writer:
     * no concurrent appends during compaction.
     */
   def compactIvfCells(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String,
-      partitionCells: Boolean = false,
       targetFileRows: Long = 4L * 1024 * 1024): Unit = {
     require(targetFileRows > 0, "targetFileRows must be positive")
-    def compactTier(cellsStore: String): Unit = {
-      // readTier folds delete tombstones and streaming segments
-      // physically: deleted rows drop from the rewrite, segment subdirs
-      // flatten, and the new generation carries neither (the old
-      // generation keeps its own for in-flight readers)
-      val rows = readTier(spark, cellsStore)
-      if (partitionCells)
-        // cell=-partitioned layout keeps its pruning: repartition BY
-        // CELL so each cell directory collapses to one file
-        graft.util.GenStore.compactInto(spark, cellsStore) { genDir =>
-          rows.repartition(col("cell")).write.mode("overwrite")
-            .partitionBy("cell").parquet(genDir)
-        }
-      else
-        graft.util.SegmentStore.compactFlat(
-          spark, cellsStore, rows, targetFileRows)
+    for ((tier, _) <- ivfTiers(spark, path)) {
+      val store = s"$path/$tier"
+      SegmentStore.compactFlat(
+        spark, store, SegmentStore.read(spark, store, "cid_id"), targetFileRows)
     }
-    compactTier(s"$path/cells")
-    // a writeIvfIndexSq / writeIvfIndexPq store compacts its quantized
-    // scan tier(s) too
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    for (tier <- Seq("cells_sq", "cells_pq"))
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/$tier")))
-        compactTier(s"$path/$tier")
   }
 
   // -------------------------------------------------------------------
@@ -576,9 +500,9 @@ object Similarity {
   }
 
   private def readSqBounds(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String): (Seq[Double], Seq[Double]) = {
-    val row = graft.util.SegmentStore.parquet(spark, s"$path/quant").collect()(0)
+    val row = SegmentStore.parquet(spark, s"$path/quant").collect()(0)
     (row.getSeq[Double](row.fieldIndex("mins")),
       row.getSeq[Double](row.fieldIndex("maxs")))
   }
@@ -601,28 +525,12 @@ object Similarity {
     * as the centroids, with the same [[appendToIvfIndex]] refit
     * discipline when the corpus drifts.
     */
-  def writeIvfIndexSq(
-      corpus: DataFrame,
-      nlist: Int,
-      path: String,
-      maxIter: Int = 5,
-      partitionCells: Boolean = false,
-      fitSampleCap: Long = 100000L): Unit = {
-    import graft.kmeans.{LloydN, OpsN}
+  def writeIvfIndexSq(corpus: DataFrame, nlist: Int, path: String): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val pts = corpus.select(col("id").as("pid"), col("vec").as("features"))
-    val n = pts.count()
-    val model = LloydN.iterateNSampled(pts, nlist, maxIter, fitSampleCap, Some(n))
-    model.map(c => (c.cid, c.features.toSeq)).toDF("cell", "cv")
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    Seq((n, nlist)).toDF("fit_count", "nlist")
-      .write.mode("overwrite").parquet(s"$path/meta")
-    val cells = graft.util.OpCaches.cache(
-      OpsN.assignN(pts, model)
-        .select(col("pid").as("cid_id"), col("features").as("cv"),
-          norm(col("features")).as("cn"), col("cid").as("cell")))
-    writeCells(cells, s"$path/cells", partitionCells, "overwrite")
+    val pts = points(corpus)
+    val cells = OpCaches.cache(buildIvf(pts, nlist, path, pts.count()))
+    cells.write.mode("overwrite").parquet(s"$path/cells")
     val bounds = cells
       .select(posexplode(col("cv")).as(Seq("i", "v")))
       .groupBy(col("i")).agg(min(col("v")).as("mn"), max(col("v")).as("mx"))
@@ -631,9 +539,9 @@ object Similarity {
     val maxs = bounds.map(_.getDouble(2)).toSeq
     Seq((mins, maxs)).toDF("mins", "maxs")
       .write.mode("overwrite").parquet(s"$path/quant")
-    writeCells(quantizeCells(cells, mins, maxs), s"$path/cells_sq",
-      partitionCells, "overwrite")
-    graft.util.OpCaches.releaseAll(spark)
+    quantizeCells(cells, mins, maxs)
+      .write.mode("overwrite").parquet(s"$path/cells_sq")
+    OpCaches.releaseAll(spark)
   }
 
   /** [[ivfTopKFromStore]] against the QUANTIZED tier of a
@@ -646,10 +554,9 @@ object Similarity {
     * Σ qᵢ(minᵢ + Δᵢ(bᵢ+128)) = dot(q, mins) + 128·Σ qᵢΔᵢ + dot(qΔ, b),
     * where qΔᵢ = qᵢ·Δᵢ rides the broadcast query row. The top `rerank`
     * candidates per query (approx-sim order, deterministic id
-    * tiebreak) then join the EXACT tier on (cell, cid_id) — a
-    * broadcast-candidate probe that partition-prunes to the probed
-    * cells in the `partitionCells` layout — and the final top-k uses
-    * exact cosine with the plain path's exact ordering.
+    * tiebreak) then join the EXACT tier on (cell, cid_id)
+    * ([[rerankExact]]), and the final top-k uses exact cosine with the
+    * plain path's exact ordering.
     *
     * CONTRACT: output equals [[ivfTopKFromStore]] whenever each true
     * within-probe top-k candidate ranks inside `rerank` by quantized
@@ -686,10 +593,10 @@ object Similarity {
             lit(128.0) * aggregate(col("qdelta"), lit(0.0), (acc, x) => acc + x))
             .as("qconst"),
           col("probe.cell").as("cell")))
-    // readTier filters delete tombstones BEFORE the approximate
+    // the tier read filters delete tombstones BEFORE the approximate
     // ranking, so a deleted vector can't occupy one of the `depth`
     // re-rank slots (and absorbs streaming segments)
-    val cellsSq = readTier(spark, s"$path/cells_sq")
+    val cellsSq = SegmentStore.read(spark, s"$path/cells_sq", "cid_id")
     val approx = cellsSq.join(q, Seq("cell"))
       .filter(col("qid") =!= col("cid_id"))
       .withColumn("adot",
@@ -708,18 +615,18 @@ object Similarity {
     rerankExact(spark, path, cand, k)
   }
 
-  /** Exact re-rank shared by the SQ and PQ probe paths: candidates are
-    * O(queries · rerank) — they probe the exact tier by (cell, cid_id),
-    * so the partitioned layout prunes to the probed cells and never
-    * rescans the full exact index. `cand` must carry
-    * (qid, cell, cid_id, qvec, qn).
+  /** Exact re-rank shared by the SQ and PQ probe paths: the
+    * O(queries · rerank) candidates join the exact tier on
+    * (cell, cid_id) — one scan of the flat exact tier, its segments and
+    * tombstones folded in — and only they are scored with exact cosine.
+    * `cand` must carry (qid, cell, cid_id, qvec, qn).
     */
   private def rerankExact(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String,
       cand: DataFrame,
       k: Int): DataFrame = {
-    val exact = readTier(spark, s"$path/cells")
+    val exact = SegmentStore.read(spark, s"$path/cells", "cid_id")
       .select(col("cell"), col("cid_id"), col("cv"), col("cn"))
     val rer = cand.join(exact, Seq("cell", "cid_id"))
       .withColumn("sim",
@@ -736,16 +643,12 @@ object Similarity {
   // Product-quantized (PQ) IVF tier — sub-byte-per-dim compression
   // -------------------------------------------------------------------
 
-  /** The j-th subspace of a vector column (1-based slice). */
-  private def pqSub(v: Column, j: Int, dsub: Int): Column =
-    slice(v, j * dsub + 1, dsub)
-
   /** Codebooks in [[graft.expr.PqEncode]]'s flattened form: per
     * subspace, surviving (id, vector) entries sorted by id (the sort is
     * what gives the encoder its lowest-id tiebreak).
     */
   private def pqBooks(
-      codebooks: IndexedSeq[Seq[graft.kmeans.CentroidN]])
+      codebooks: IndexedSeq[Seq[CentroidN]])
       : IndexedSeq[Seq[(Int, Array[Double])]] =
     codebooks.map(_.sortBy(_.cid).map(c => c.cid -> c.features))
 
@@ -761,7 +664,7 @@ object Similarity {
     */
   private def encodePq(
       cells: DataFrame,
-      codebooks: IndexedSeq[Seq[graft.kmeans.CentroidN]],
+      codebooks: IndexedSeq[Seq[CentroidN]],
       dsub: Int): DataFrame =
     cells.select(
       col("cid_id"), col("cn"), col("cell"),
@@ -774,25 +677,24 @@ object Similarity {
     * the update step one (sub, cid, dim) mean aggregation collected to
     * the driver (m·ksub·dsub rows — 16k doubles at the defaults).
     * Training m separate [[graft.kmeans.LloydN]] fits would scan the
-    * corpus m·maxIter times (the 100-TB non-starter) and pay m
-    * independent job chains; this shape costs maxIter scans total, the
-    * same discipline as the engine's own Lloyd loop. Semantics match
-    * the per-subspace fits: first-ksub init in id order (every subspace
-    * initializes from the same sampled rows), argmin with lowest-id
-    * tiebreak, mean update, empty sub-cells drop. The fit trains on a
-    * deterministic hash-sample of ≤ max(sampleCap, ksub·39) rows
-    * (FAISS-style floor, as [[graft.kmeans.LloydN.iterateNSampled]]).
+    * corpus m·[[QuantizerIters]] times (the 100-TB non-starter) and pay
+    * m independent job chains; this shape costs [[QuantizerIters]]
+    * scans total, the same discipline as the engine's own Lloyd loop.
+    * Semantics match the per-subspace fits: first-ksub init in id order
+    * (every subspace initializes from the same sampled rows), argmin
+    * with lowest-id tiebreak, mean update, empty sub-cells drop. The fit
+    * trains on a deterministic hash-sample of
+    * ≤ max([[QuantizerSample]], ksub·39) rows (FAISS-style floor, as
+    * [[graft.kmeans.LloydN.iterateNSampled]]).
     */
   private def fitPqCodebooks(
       cells: DataFrame,
       m: Int,
       dsub: Int,
       ksub: Int,
-      maxIter: Int,
-      sampleCap: Long,
-      knownCount: Long): IndexedSeq[Seq[graft.kmeans.CentroidN]] = {
+      knownCount: Long): IndexedSeq[Seq[CentroidN]] = {
     val effectiveCap = math.max(
-      sampleCap, ksub.toLong * graft.kmeans.LloydN.minPointsPerCentroid)
+      QuantizerSample, ksub.toLong * LloydN.minPointsPerCentroid)
     val pts0 = cells.select(col("cid_id").as("pid"), col("cv"))
     val pts =
       if (knownCount <= effectiveCap) pts0
@@ -802,12 +704,12 @@ object Similarity {
     val initRows = pts.orderBy(col("pid")).limit(ksub)
       .select(col("cv")).collect()
       .map(_.getSeq[Double](0).toArray)
-    var books: IndexedSeq[Seq[graft.kmeans.CentroidN]] = (0 until m).map { j =>
+    var books: IndexedSeq[Seq[CentroidN]] = (0 until m).map { j =>
       initRows.toSeq.zipWithIndex.map { case (v, i) =>
-        graft.kmeans.CentroidN(i, v.slice(j * dsub, j * dsub + dsub))
+        CentroidN(i, v.slice(j * dsub, j * dsub + dsub))
       }
     }
-    for (_ <- 0 until maxIter) {
+    for (_ <- 0 until QuantizerIters) {
       val assigned = pts.select(
         col("cv"),
         posexplode(
@@ -825,7 +727,7 @@ object Similarity {
           .map { case (cid, rows) =>
             val vec = new Array[Double](dsub)
             rows.foreach(r => vec(r.getInt(2)) = r.getDouble(3))
-            graft.kmeans.CentroidN(cid, vec)
+            CentroidN(cid, vec)
           }
           .sortBy(_.cid)
       }
@@ -834,9 +736,9 @@ object Similarity {
   }
 
   private def readPqMeta(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String): (Int, Int, Int) = {
-    val row = graft.util.SegmentStore.parquet(spark, s"$path/pq_meta").collect()(0)
+    val row = SegmentStore.parquet(spark, s"$path/pq_meta").collect()(0)
     (row.getInt(row.fieldIndex("m")),
       row.getInt(row.fieldIndex("ksub")),
       row.getInt(row.fieldIndex("dsub")))
@@ -848,12 +750,12 @@ object Similarity {
     * surviving ids, and the LUT leaves missing slots at 0.
     */
   private def readPqCodebooks(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String,
-      m: Int): IndexedSeq[Seq[graft.kmeans.CentroidN]] = {
-    val rows = graft.util.SegmentStore.parquet(spark, s"$path/pq_codebooks").collect()
+      m: Int): IndexedSeq[Seq[CentroidN]] = {
+    val rows = SegmentStore.parquet(spark, s"$path/pq_codebooks").collect()
       .map(r => (r.getInt(r.fieldIndex("sub")),
-        graft.kmeans.CentroidN(
+        CentroidN(
           r.getInt(r.fieldIndex("cell")),
           r.getSeq[Double](r.fieldIndex("cv")).toArray)))
       .groupBy(_._1)
@@ -885,16 +787,12 @@ object Similarity {
       nlist: Int,
       path: String,
       m: Int = 8,
-      ksub: Int = 256,
-      maxIter: Int = 5,
-      partitionCells: Boolean = false,
-      fitSampleCap: Long = 100000L): Unit = {
+      ksub: Int = 256): Unit = {
     require(m > 0, s"m=$m")
     require(ksub > 0 && ksub <= 256, s"ksub=$ksub out of (0, 256]")
-    import graft.kmeans.{LloydN, OpsN}
     val spark = corpus.sparkSession
     import spark.implicits._
-    val pts = corpus.select(col("id").as("pid"), col("vec").as("features"))
+    val pts = points(corpus)
     // ONE scan for corpus count + dimensionality (was a count() job plus
     // a separate head() job, r19); min(size) rides in the same buffers
     // so RAGGED input is refused loudly here instead of surfacing later
@@ -916,29 +814,20 @@ object Similarity {
         s", max $d) — PQ subspace slicing needs uniform dimensionality")
     require(d % m == 0, s"dim $d not divisible into m=$m subspaces")
     val dsub = d / m
-    val model = LloydN.iterateNSampled(pts, nlist, maxIter, fitSampleCap, Some(n))
-    model.map(c => (c.cid, c.features.toSeq)).toDF("cell", "cv")
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    Seq((n, nlist)).toDF("fit_count", "nlist")
-      .write.mode("overwrite").parquet(s"$path/meta")
-    val cells = graft.util.OpCaches.cache(
-      OpsN.assignN(pts, model)
-        .select(col("pid").as("cid_id"), col("features").as("cv"),
-          norm(col("features")).as("cn"), col("cid").as("cell")))
-    writeCells(cells, s"$path/cells", partitionCells, "overwrite")
+    val cells = OpCaches.cache(buildIvf(pts, nlist, path, n))
+    cells.write.mode("overwrite").parquet(s"$path/cells")
     // per-subspace codebooks, fit JOINTLY: one corpus pass per Lloyd
     // iteration covers all m subspaces (see fitPqCodebooks)
-    val codebooks = fitPqCodebooks(cells, m, dsub, ksub, maxIter,
-      fitSampleCap, n)
+    val codebooks = fitPqCodebooks(cells, m, dsub, ksub, n)
     codebooks.zipWithIndex
       .flatMap { case (cb, j) => cb.map(c => (j, c.cid, c.features.toSeq)) }
       .toDF("sub", "cell", "cv")
       .write.mode("overwrite").parquet(s"$path/pq_codebooks")
     Seq((m, ksub, dsub)).toDF("m", "ksub", "dsub")
       .write.mode("overwrite").parquet(s"$path/pq_meta")
-    writeCells(encodePq(cells, codebooks, dsub), s"$path/cells_pq",
-      partitionCells, "overwrite")
-    graft.util.OpCaches.releaseAll(spark)
+    encodePq(cells, codebooks, dsub)
+      .write.mode("overwrite").parquet(s"$path/cells_pq")
+    OpCaches.releaseAll(spark)
   }
 
   /** [[ivfTopKFromStore]] against the PQ tier of a [[writeIvfIndexPq]]
@@ -988,19 +877,19 @@ object Similarity {
 
   /** The structural coverage bound behind [[CoverProbed]]: Σ of the
     * `nprobe` largest live cell populations in the PQ tier (read
-    * through [[readTier]], so appends and delete tombstones are
-    * folded). No query's probed set can exceed it, so an ADC
+    * through [[graft.util.SegmentStore.read]], so appends and delete
+    * tombstones are folded). No query's probed set can exceed it, so an ADC
     * preselection of this depth passes EVERY probed candidate to the
     * exact re-rank. Costs one O(tier) count + an O(nlist) TakeOrdered —
     * a harness/audit price; production approximate serving keeps the
     * fixed FAISS-style depth and buys recall, not equality.
     */
   private[graft] def coveredRerankDepth(
-      spark: org.apache.spark.sql.SparkSession,
+      spark: SparkSession,
       path: String,
       nprobe: Int,
       k: Int): Int = {
-    val top = readTier(spark, s"$path/cells_pq")
+    val top = SegmentStore.read(spark, s"$path/cells_pq", "cid_id")
       .groupBy(col("cell")).agg(count(lit(1)).as("n"))
       .orderBy(desc("n"), asc("cell")).limit(nprobe)
       .agg(coalesce(sum(col("n")), lit(0L)))
@@ -1040,7 +929,7 @@ object Similarity {
         .select(col("qid"), col("qvec"), col("qn"), col("lut"),
           col("probe.cell").as("cell")))
     // same pre-ranking tombstone/segment handling as the SQ tier
-    val cellsPq = readTier(spark, s"$path/cells_pq")
+    val cellsPq = SegmentStore.read(spark, s"$path/cells_pq", "cid_id")
     val approx = cellsPq.join(q, Seq("cell"))
       .filter(col("qid") =!= col("cid_id"))
       .withColumn("adot",
@@ -1059,11 +948,11 @@ object Similarity {
   }
 
   private def readIvfCentroids(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[graft.kmeans.CentroidN] = {
-    val model = graft.util.SegmentStore.parquet(spark, s"$path/centroids")
+      spark: SparkSession,
+      path: String): Seq[CentroidN] = {
+    val model = SegmentStore.parquet(spark, s"$path/centroids")
       .collect()
-      .map(r => graft.kmeans.CentroidN(
+      .map(r => CentroidN(
         r.getInt(r.fieldIndex("cell")),
         r.getSeq[Double](r.fieldIndex("cv")).toArray))
       .sortBy(_.cid)
@@ -1080,7 +969,7 @@ object Similarity {
     * (O(nlist) driver rows, one job; they re-enter the plan as the probe
     * node's model, exactly as in the inline path), and the cells tier is
     * read with its schema from a footer
-    * ([[graft.util.SegmentStore.parquet]]), streaming segments and delete
+    * ([[SegmentStore.parquet]]), streaming segments and delete
     * tombstones folded in. The scoring query reads only
     * (cid_id, cv, cn, cell) from the store. A warm request runs 4 jobs:
     * the centroids collect and the scoring query's 3 (broadcast query
@@ -1096,9 +985,10 @@ object Similarity {
     val model = readIvfCentroids(spark, path)
     require(nprobe >= 1 && nprobe <= model.size,
       s"need 1 <= nprobe <= ${model.size} (stored nlist)")
-    // readTier: streaming segments absorbed, delete tombstones
-    // anti-joined — zero plan change on a plain store
-    ivfProbeScore(queries, readTier(spark, s"$path/cells"), model, k, nprobe)
+    // streaming segments absorbed, delete tombstones anti-joined —
+    // zero plan change on a plain store
+    ivfProbeScore(queries, SegmentStore.read(spark, s"$path/cells", "cid_id"),
+      model, k, nprobe)
   }
 
   /** SemDeDup (Abbas et al., arXiv:2303.09540): semantic deduplication by
@@ -1122,22 +1012,16 @@ object Similarity {
       vectors: DataFrame,
       nlist: Int,
       threshold: Double,
-      maxIter: Int = 5,
-      fitSampleCap: Long = 100000L,
       knownCount: Option[Long] = None): DataFrame = {
-    import graft.kmeans.{LloydN, OpsN}
-    val pts = vectors.select(col("id").as("pid"), col("vec").as("features"))
-    // FAISS-style sample-capped fit: below the cap (every oracle fixture)
-    // the sample is the corpus — bit-identical to an uncapped fit.
+    val pts = points(vectors)
     // knownCount forwards a count the caller already ran (semDedupSized)
     // so the sizing+sampling pair costs ONE corpus count, not two
-    val model =
-      LloydN.iterateNSampled(pts, nlist, maxIter, fitSampleCap, knownCount)
+    val model = fitQuantizer(pts, nlist, knownCount)
     val assigned = OpsN.assignN(pts, model)
     // cache: both sides of the within-cell self-join and the surviving
     // anti-join read the assignment (else it computes three times);
     // OpCaches-tracked for post-materialize release
-    val cells = graft.util.OpCaches.cache(
+    val cells = OpCaches.cache(
       assigned.select(
         col("pid").as("id"), col("features").as("v"),
         norm(col("features")).as("nn"), col("cid").as("cell")))
@@ -1179,13 +1063,11 @@ object Similarity {
   def semDedupSized(
       vectors: DataFrame,
       threshold: Double,
-      targetCellSize: Long = 4096L,
-      maxIter: Int = 5,
-      fitSampleCap: Long = 100000L): DataFrame = {
+      targetCellSize: Long = 4096L): DataFrame = {
     require(targetCellSize > 0, s"targetCellSize=$targetCellSize")
     val n = vectors.count()
     val nlist = math.max((n + targetCellSize - 1) / targetCellSize, 1L).toInt
-    semDedup(vectors, nlist, threshold, maxIter, fitSampleCap, Some(n))
+    semDedup(vectors, nlist, threshold, Some(n))
   }
 
   /** Cell-confined k-nearest-neighbor SELF-join: for EVERY vector, its
@@ -1235,20 +1117,16 @@ object Similarity {
       vectors: DataFrame,
       nlist: Int,
       k: Int,
-      maxIter: Int = 5,
-      fitSampleCap: Long = 100000L,
       knownCount: Option[Long] = None,
       nprobe: Int = 1): DataFrame = {
     require(k >= 1, s"k=$k")
     require(nprobe >= 1, s"nprobe=$nprobe")
-    import graft.kmeans.{LloydN, OpsN}
-    val pts = vectors.select(col("id").as("pid"), col("vec").as("features"))
-    val model =
-      LloydN.iterateNSampled(pts, nlist, maxIter, fitSampleCap, knownCount)
+    val pts = points(vectors)
+    val model = fitQuantizer(pts, nlist, knownCount)
     val assigned = OpsN.assignN(pts, model)
     // both sides of the within-cell join read the assignment;
     // OpCaches-tracked for post-materialize release
-    val cells = graft.util.OpCaches.cache(
+    val cells = OpCaches.cache(
       assigned.select(
         col("pid").as("id"), col("features").as("v"),
         norm(col("features")).as("nn"), col("cid").as("cell")))
@@ -1283,7 +1161,7 @@ object Similarity {
     */
   private[graft] def probeLegs(
       cells: DataFrame,
-      model: Seq[graft.kmeans.CentroidN],
+      model: Seq[CentroidN],
       nprobe: Int): DataFrame =
     cells
       .select(col("id"), col("v"), col("nn"),
@@ -1299,13 +1177,11 @@ object Similarity {
       vectors: DataFrame,
       k: Int,
       targetCellSize: Long = 4096L,
-      maxIter: Int = 5,
-      fitSampleCap: Long = 100000L,
       nprobe: Int = 1): DataFrame = {
     require(targetCellSize > 0, s"targetCellSize=$targetCellSize")
     val n = vectors.count()
     val nlist = math.max((n + targetCellSize - 1) / targetCellSize, 1L).toInt
-    knnJoin(vectors, nlist, k, maxIter, fitSampleCap, Some(n), nprobe)
+    knnJoin(vectors, nlist, k, Some(n), nprobe)
   }
 
   /** Embedding-cosine near-duplicate pairs: all (id1 < id2) with
@@ -1424,11 +1300,11 @@ object Similarity {
       maxBucket: Int = 4096): DataFrame = {
     require(maxBucket >= 1, "maxBucket must be >= 1")
     checkDims(vectors, d, "cosineNearDedupHardened")
-    val grp = graft.util.OpCaches.cache(
+    val grp = OpCaches.cache(
       vectors.groupBy(col("vec")).agg(min(col("id")).as("rep")))
     val reps = grp.select(col("rep").as("id"), col("vec"))
     val planes = hyperplanes(bands * bitsPerBand, d)
-    val sig = graft.util.OpCaches.cache(
+    val sig = OpCaches.cache(
       reps.select(col("id"), col("vec"), norm(col("vec")).as("nn"),
         lshSignature(col("vec"), planes).as("s")))
     val banded = sig.select(
@@ -1438,7 +1314,7 @@ object Similarity {
           sequence(lit(0), lit(bands - 1)),
           b => col("s").substr(b * bitsPerBand + 1, lit(bitsPerBand)))))
       .toDF("id", "band", "bucket")
-    val bandedCached = graft.util.OpCaches.cache(banded)
+    val bandedCached = OpCaches.cache(banded)
     val w = Window.partitionBy(col("band"), col("bucket")).orderBy(col("id"))
     val head = bandedCached
       .withColumn("_rn", row_number().over(w))
@@ -1533,7 +1409,7 @@ object Similarity {
     val planes = hyperplanes(bands * bitsPerBand, d)
     // cache: consumed by both sides of the band join AND the verify joins
     // (else the signature pass runs four times); OpCaches-tracked
-    val sig = graft.util.OpCaches.cache(
+    val sig = OpCaches.cache(
       vectors.select(col("id"), col("vec"), norm(col("vec")).as("nn"),
         lshSignature(col("vec"), planes).as("s")))
     val banded = sig.select(

@@ -364,9 +364,9 @@ object StreamOps {
     * instead of double-appending — checkpoint-resumable AND
     * replay-idempotent, the same discipline as the signature-store
     * runner. No streaming state: ingest is append-only, so there is
-    * nothing to watermark. Flat tier layout only; the index must be
-    * built before the stream starts (no quantizer, no assignment —
-    * fails fast). The [[graft.sim.Similarity.appendToIvfIndex]] refit
+    * nothing to watermark. The index must be built before the stream
+    * starts (no quantizer, no assignment — fails fast). The
+    * [[graft.sim.Similarity.appendToIvfIndex]] refit
     * discipline applies across the stream's lifetime: a long-lived
     * stream grows the index past its fit, and the remedy is a refit +
     * fresh checkpoint. [[graft.sim.Similarity.compactIvfCells]] folds

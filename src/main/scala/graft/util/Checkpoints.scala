@@ -29,8 +29,8 @@ import org.apache.spark.sql.SparkSession
   * Both modes compute the SAME rows from the same plan — the mode only
   * changes where the materialized partitions live (executor block store
   * vs fault-tolerant FS), never values (asserted for all three consumers
-  * in CheckpointModeSpec; dupGroups' older `reliable` param keeps working
-  * and is OR-ed with the session knob).
+  * in CheckpointModeSpec). The knob is the only selector: no operator
+  * takes a mode parameter of its own.
   */
 object Checkpoints {
 

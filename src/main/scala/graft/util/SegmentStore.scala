@@ -95,70 +95,18 @@ object SegmentStore {
     walk(roots.filter(fs.exists).map(fs.getFileStatus))
   }
 
-  /** Whether the directory carries streaming segment subdirectories
-    * (per-batch appends) — one listing call; `k=v` partition directories
-    * and `_`/`.`-hidden entries don't count.
-    */
-  def hasSegmentDirs(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists(st =>
-      st.isDirectory && {
-        val n = st.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".") && !n.contains("=")
-      })
-  }
-
   /** Read a store's active generation with per-batch segment
     * subdirectories folded in (`recursiveFileLookup` — no partition
     * inference) and the generation's tombstones anti-joined on `idCol`
     * (zero plan change when no delete has landed). The read for stores
     * whose layout is always flat part-files + optional segment dirs
-    * (signature store).
+    * (signature store, IVF scan tiers). A `k=v` directory is read as a
+    * segment, without its partition column, so a query that names that
+    * column fails analysis instead of answering without it.
     */
   def read(spark: SparkSession, store: String, idCol: String): DataFrame = {
     val base = GenStore.resolve(spark, store)
     Tombstones.filter(parquet(spark, base, recursive = true), spark, base, idCol)
-  }
-
-  /** Whether the directory carries `k=v` partition subdirectories —
-    * one listing call, the dual of [[hasSegmentDirs]].
-    */
-  def hasPartitionDirs(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) && fs.listStatus(p).exists(st =>
-      st.isDirectory && st.getPath.getName.contains("="))
-  }
-
-  /** [[read]] for stores that may use a `k=v`-PARTITIONED layout:
-    * `recursiveFileLookup` disables partition inference (it would drop
-    * the partition column), so it is applied only when segment
-    * subdirectories actually exist — the plain layouts pay one listing
-    * call and keep their pruning (the IVF tier read).
-    *
-    * MIXED layouts (partition dirs AND segment subdirs in one
-    * generation) are REJECTED: neither read mode is correct there —
-    * recursive lookup silently drops the partition column, plain read
-    * silently drops the segments. No writer in this repo produces the
-    * mix (partitioned stores append partitioned data; segment appends
-    * go to flat stores), so hitting this is a store-corruption signal,
-    * and the fix is compacting the segments into the partitioned
-    * layout before reading.
-    */
-  def readPartitionAware(
-      spark: SparkSession, store: String, idCol: String): DataFrame = {
-    val base = GenStore.resolve(spark, store)
-    val recursive = hasSegmentDirs(spark, base)
-    if (recursive)
-      require(!hasPartitionDirs(spark, base),
-        s"mixed store layout at $base: both k=v partition directories " +
-          "and streaming segment subdirectories are present — " +
-          "recursiveFileLookup would silently drop the partition " +
-          "column; compact the segments into the partitioned layout " +
-          "before reading")
-    Tombstones.filter(parquet(spark, base, recursive = recursive),
-      spark, base, idCol)
   }
 
   /** The DELETE leg shared by every store: the batch's ids land as a

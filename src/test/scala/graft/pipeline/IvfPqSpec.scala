@@ -23,6 +23,9 @@ import graft.util.GenStore
   *  - APPEND/COMPACTION: batches encode with the STORED codebooks into
   *    all tiers; compaction folds all tiers; results track the exact
   *    path throughout.
+  *  - SEGMENTS: a streaming segment written twice under one name carries
+  *    the PQ tier and answers as a plain append, through a delete and a
+  *    compaction.
   */
 class IvfPqSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -168,6 +171,49 @@ class IvfPqSpec extends AnyFunSuite {
     assert(GenStore.currentGen(spark, s"$pq/cells").nonEmpty)
     assert(GenStore.currentGen(spark, s"$pq/cells_pq").nonEmpty)
     assert(rows(Similarity.ivfTopKFromStorePq(q, pq, k = 5, nprobe = 2)) === want)
+  }
+
+  test("streaming segments carry the PQ tier: a replayed appendIvfSegment " +
+      "answers as appendToIvfIndex, through a delete and a compaction") {
+    val seg = "target/graft_stores/ivfpq_spec_segment"
+    val app = "target/graft_stores/ivfpq_spec_segment_append"
+    Seq(seg, app).foreach(p => rm(new java.io.File(p)))
+    val base = corpus.filter($"id" < 400)
+    val batch = corpus.filter($"id" >= 400)
+      .select(($"id" + 100000L).as("id"), $"vec")
+    Seq(seg, app).foreach(p =>
+      Similarity.writeIvfIndexPq(base, nlist = 4, path = p, m = 8))
+    // the same segment name twice: an at-least-once replay rewrites it
+    Similarity.appendIvfSegment(batch, seg, "batch-0")
+    Similarity.appendIvfSegment(batch, seg, "batch-0")
+    Similarity.appendToIvfIndex(batch, app)
+    assert(new java.io.File(s"$seg/cells_pq/batch-0").isDirectory)
+    def live(p: String): Long = {
+      val n = graft.util.SegmentStore.read(spark, s"$p/cells_pq", "cid_id").count()
+      assert(graft.util.SegmentStore.read(spark, s"$p/cells", "cid_id").count() === n)
+      n
+    }
+    assert(live(seg) === live(app))
+    val q = corpus.filter($"id" < 10)
+    def answers(p: String) = rows(Similarity.ivfTopKFromStorePq(
+      q, p, k = 5, nprobe = 2, rerank = Similarity.CoverProbed))
+    val before = answers(app)
+    assert(answers(seg) === before)
+    // delete the first query's hits and some appended rows
+    val hits = Similarity.ivfTopKFromStorePq(q.filter($"id" === 0), app, k = 3,
+      nprobe = 2, rerank = Similarity.CoverProbed).select($"cid").as[Long].collect()
+    graft.util.OpCaches.releaseAll(spark)
+    val deleted = (hits.toSeq ++ Seq(100400L, 100401L)).toDF("id")
+    Seq(seg, app).foreach(p => Similarity.deleteFromIvfIndex(spark, p, deleted))
+    assert(live(seg) === live(app))
+    val afterDelete = answers(app)
+    assert(afterDelete !== before)
+    assert(answers(seg) === afterDelete)
+    Seq(seg, app).foreach(p => Similarity.compactIvfCells(spark, p))
+    assert(!new java.io.File(
+      s"${GenStore.resolve(spark, s"$seg/cells_pq")}/batch-0").exists)
+    assert(answers(seg) === afterDelete)
+    assert(answers(app) === afterDelete)
   }
 
   test("CoverProbed derives a probed-set-covering re-rank depth from live " +

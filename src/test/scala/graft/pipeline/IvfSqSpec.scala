@@ -101,7 +101,7 @@ class IvfSqSpec extends AnyFunSuite {
       (3L, Seq(5.0, 0.0, 3.0, 0.0))).toDF("id", "vec")
     val store = "target/graft_stores/ivfsq_spec_roundtrip"
     rm(new java.io.File(store))
-    Similarity.writeIvfIndexSq(vecs, nlist = 1, path = store, maxIter = 1)
+    Similarity.writeIvfIndexSq(vecs, nlist = 1, path = store)
     val quant = spark.read.parquet(s"$store/quant").collect()(0)
     val mins = quant.getSeq[Double](quant.fieldIndex("mins"))
     val maxs = quant.getSeq[Double](quant.fieldIndex("maxs"))

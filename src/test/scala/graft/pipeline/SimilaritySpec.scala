@@ -236,46 +236,8 @@ class SimilaritySpec extends AnyFunSuite {
     assert(top.head._1 === 100000L && math.abs(top.head._2 - 1.0) < 1e-12)
   }
 
-  test("cell-partitioned IVF store: write + append keep one layout, " +
-      "queries match the flat store") {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    val flat = "target/graft_stores/ivf_flat_spec"
-    val part = "target/graft_stores/ivf_part_spec"
-    Seq(flat, part).foreach(p => rm(new java.io.File(p)))
-    val corpus = graft.kmeans.OpsN.pointsFromEmbeddings(
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet"))
-      .select($"pid".as("id"), $"features".as("vec"))
-    val batch = corpus.filter($"id" >= 490)
-      .select(($"id" + 100000L).as("id"), $"vec")
-    Similarity.writeIvfIndex(corpus, nlist = 4, path = flat)
-    Similarity.appendToIvfIndex(batch, flat)
-    Similarity.writeIvfIndex(corpus, nlist = 4, path = part,
-      partitionCells = true)
-    Similarity.appendToIvfIndex(batch, part, partitionCells = true)
-    val q = corpus.filter($"id" < 5)
-    val a = Similarity.ivfTopKFromStore(q, flat, k = 5, nprobe = 2)
-      .select($"qid", $"cid", $"rank").as[(Long, Long, Int)].collect().toSet
-    val b = Similarity.ivfTopKFromStore(q, part, k = 5, nprobe = 2)
-      .select($"qid", $"cid", $"rank").as[(Long, Long, Int)].collect().toSet
-    assert(a === b)
-    // the partitioned layout is real: cells live under cell= directories
-    val dirs = new java.io.File(s"$part/cells").listFiles
-      .filter(_.isDirectory).map(_.getName).toSet
-    assert(dirs.exists(_.startsWith("cell=")))
-    // cell-aligned writes: build + append land at most one file each
-    // per cell dir — not one per nonempty (write-task, cell) pair
-    for (d <- new java.io.File(s"$part/cells").listFiles
-           if d.isDirectory && d.getName.startsWith("cell=")) {
-      val n = d.listFiles.count(_.getName.endsWith(".parquet"))
-      assert(n <= 2, s"cells/${d.getName}: $n files for build + append")
-    }
-  }
-
-  test("appendToIvfIndex refit discipline: appends past maxGrowthFactor x " +
-      "the recorded fit count refuse when asked to, append otherwise") {
+  test("appendToIvfIndex refit discipline: appends past 4x the recorded " +
+      "fit count warn and still append") {
     val store = "target/graft_stores/ivf_growth_spec"
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles.foreach(rm)
@@ -289,17 +251,11 @@ class SimilaritySpec extends AnyFunSuite {
       .select($"fit_count").as[Long].head() === 10L)
     // growth to 2x of fit: under the 4x default, appends fine
     val b1 = vecs((100L to 109L).map(i => i -> Seq(i * 1.0, 1.0)): _*)
-    Similarity.appendToIvfIndex(b1, store, refuseBeyondGrowth = true)
+    Similarity.appendToIvfIndex(b1, store)
     assert(spark.read.parquet(s"$store/cells").count() === 20L)
-    // a batch that would take the index past 4x the fit count: refused
-    // when the flag is set, store untouched
+    // a batch that takes the index past 4x the fit count warns but
+    // appends (results stay searchable)
     val big = vecs((200L to 230L).map(i => i -> Seq(i * 1.0, 1.0)): _*)
-    val e = intercept[IllegalStateException] {
-      Similarity.appendToIvfIndex(big, store, refuseBeyondGrowth = true)
-    }
-    assert(e.getMessage.contains("writeIvfIndex"))
-    assert(spark.read.parquet(s"$store/cells").count() === 20L)
-    // default policy warns but appends (results stay searchable)
     Similarity.appendToIvfIndex(big, store)
     assert(spark.read.parquet(s"$store/cells").count() === 51L)
   }
@@ -322,8 +278,8 @@ class SimilaritySpec extends AnyFunSuite {
     assert(got === want)
   }
 
-  test("compactIvfCells: file count drops in both layouts, search results " +
-      "and quantizer identical pre/post") {
+  test("compactIvfCells: file count drops, search results and quantizer " +
+      "identical pre/post") {
     def rm(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles.foreach(rm)
       f.delete(); ()
@@ -337,43 +293,31 @@ class SimilaritySpec extends AnyFunSuite {
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet"))
       .select($"pid".as("id"), $"features".as("vec"))
     val q = corpus.filter($"id" < 5)
-    Seq(false, true).foreach { part =>
-      val store = s"target/graft_stores/ivf_compact_$part"
-      rm(new java.io.File(store))
-      Similarity.writeIvfIndex(corpus, nlist = 4, path = store,
-        partitionCells = part)
-      // a week of daily appends: small files accumulate
-      (0 until 3).foreach { day =>
-        val batch = corpus.filter($"id" >= 490)
-          .select(($"id" + 100000L * (day + 1)).as("id"), $"vec")
-        Similarity.appendToIvfIndex(batch, store, partitionCells = part)
-      }
-      val before = Similarity.ivfTopKFromStore(q, store, k = 5, nprobe = 2)
-        .collect().map(_.toString).sorted.toSeq
-      val centroidsBefore =
-        spark.read.parquet(s"$store/centroids").collect().toSeq
-      val filesBefore = parquetFiles(s"$store/cells")
-      Similarity.compactIvfCells(spark, store, partitionCells = part)
-      // reader-visible layout: probes resolve the cells generation
-      // manifest to the compacted copy (legacy files linger one cycle
-      // as the mid-query readers' grace copy)
-      val active = graft.util.GenStore.resolve(spark, s"$store/cells")
-      assert(active !== s"$store/cells")
-      assert(parquetFiles(active) < filesBefore)
-      assert(Similarity.ivfTopKFromStore(q, store, k = 5, nprobe = 2)
-        .collect().map(_.toString).sorted.toSeq === before)
-      assert(spark.read.parquet(s"$store/centroids").collect().toSeq
-        === centroidsBefore)
-      if (part) {
-        // partition pruning survives: cells still live under cell= dirs,
-        // one file each after compaction
-        val dirs = new java.io.File(active).listFiles
-          .filter(_.isDirectory).filter(_.getName.startsWith("cell="))
-        assert(dirs.nonEmpty)
-        assert(dirs.forall(d =>
-          d.listFiles.count(_.getName.endsWith(".parquet")) === 1))
-      }
+    val store = "target/graft_stores/ivf_compact_false"
+    rm(new java.io.File(store))
+    Similarity.writeIvfIndex(corpus, nlist = 4, path = store)
+    // a week of daily appends: small files accumulate
+    (0 until 3).foreach { day =>
+      val batch = corpus.filter($"id" >= 490)
+        .select(($"id" + 100000L * (day + 1)).as("id"), $"vec")
+      Similarity.appendToIvfIndex(batch, store)
     }
+    val before = Similarity.ivfTopKFromStore(q, store, k = 5, nprobe = 2)
+      .collect().map(_.toString).sorted.toSeq
+    val centroidsBefore =
+      spark.read.parquet(s"$store/centroids").collect().toSeq
+    val filesBefore = parquetFiles(s"$store/cells")
+    Similarity.compactIvfCells(spark, store)
+    // reader-visible layout: probes resolve the cells generation
+    // manifest to the compacted copy (legacy files linger one cycle
+    // as the mid-query readers' grace copy)
+    val active = graft.util.GenStore.resolve(spark, s"$store/cells")
+    assert(active !== s"$store/cells")
+    assert(parquetFiles(active) < filesBefore)
+    assert(Similarity.ivfTopKFromStore(q, store, k = 5, nprobe = 2)
+      .collect().map(_.toString).sorted.toSeq === before)
+    assert(spark.read.parquet(s"$store/centroids").collect().toSeq
+      === centroidsBefore)
   }
 
   test("ivfTopKFromStore validates nprobe against the stored nlist") {

@@ -5,13 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.kmeans.SparkTestSession
 
-/** The round-16 store-corruption guards (ADVICE items): both turn a
-  * silently-wrong read into a named failure.
+/** Store-corruption guards: each turns a silently-wrong read into a
+  * named failure.
   *
-  *  - [[graft.util.SegmentStore.readPartitionAware]] REJECTS a mixed
-  *    layout (k=v partition dirs + streaming segment subdirs in one
-  *    generation): recursive lookup would silently drop the partition
-  *    column, a plain read would silently drop the segments.
+  *  - [[graft.util.SegmentStore.read]] folds streaming segment subdirs
+  *    into a flat store, and reads a `k=v` directory as a segment without
+  *    its partition column, so a query on that column fails analysis
+  *    instead of answering without it.
   *  - [[graft.text.TextOps.classifierScoreFromStore]] validates every
   *    stored bucket against the meta-declared n_buckets instead of
   *    throwing a raw ArrayIndexOutOfBounds on a corrupt store.
@@ -25,28 +25,21 @@ class StoreGuardsSpec extends AnyFunSuite {
     f.delete(); ()
   }
 
-  test("readPartitionAware rejects mixed partitioned+segment layouts " +
-      "and still reads each pure layout") {
-    val dir = "target/graft_stores/mixed_layout_spec"
-    rm(new java.io.File(dir))
-    // pure partitioned layout: reads fine, partition column preserved
-    Seq((1L, 0), (2L, 1)).toDF("cid_id", "cell")
-      .write.partitionBy("cell").parquet(dir)
-    val pure = graft.util.SegmentStore.readPartitionAware(spark, dir, "cid_id")
-    assert(pure.columns.contains("cell") && pure.count() === 2)
-    // drop a streaming-segment subdir next to the k=v dirs -> mixed
-    Seq((3L, 2)).toDF("cid_id", "cell")
-      .write.parquet(s"$dir/batch-0")
-    val e = intercept[IllegalArgumentException](
-      graft.util.SegmentStore.readPartitionAware(spark, dir, "cid_id")
-        .count())
-    assert(e.getMessage.contains("mixed store layout"))
-    // pure segment layout (no k=v): folds the segment, no complaint
+  test("SegmentStore.read folds segments into a flat store and never " +
+      "answers from a cell= layout") {
+    // flat store plus a segment: reads both
     val flat = "target/graft_stores/flat_layout_spec"
     rm(new java.io.File(flat))
     Seq((1L, "a")).toDF("cid_id", "v").write.parquet(flat)
     Seq((2L, "b")).toDF("cid_id", "v").write.parquet(s"$flat/batch-0")
     assert(graft.util.SegmentStore.read(spark, flat, "cid_id").count() === 2)
+    // a cell=-partitioned layout has no cell column under this read
+    val parted = "target/graft_stores/parted_layout_spec"
+    rm(new java.io.File(parted))
+    Seq((1L, 0), (2L, 1)).toDF("cid_id", "cell")
+      .write.partitionBy("cell").parquet(parted)
+    intercept[org.apache.spark.sql.AnalysisException](
+      graft.util.SegmentStore.read(spark, parted, "cid_id").select($"cell"))
   }
 
   test("classifierScoreFromStore names the store on an out-of-range " +

@@ -4,7 +4,8 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobEnd,
+  SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -25,7 +26,9 @@ import graft.util.SegmentStore
   *  - SCHEMA: the footer schema equals Spark's inferred schema for every
   *    component of every store layout.
   *  - JOBS: a warm BM25 request runs at most 5 jobs, a warm IVF request
-  *    at most 4 (no listing, schema or metadata-aggregate jobs).
+  *    at most 4 (no listing, schema or metadata-aggregate jobs); a plain
+  *    IVF build and append run a pinned number of jobs and store the
+  *    blocks of one RDD each.
   *  - PRUNING: queries whose buckets lack directories answer as the
   *    inline path does, schema included.
   *  - STATS: an empty append batch (null Σdl) leaves n and avgdl as
@@ -95,7 +98,7 @@ class StoreReadSpec extends AnyFunSuite {
     // a bucket-pruned read keeps the partition column
     assert(SegmentStore.parquet(spark, s"$bm/postings", Seq("tbucket=1")).schema ===
       spark.read.parquet(s"$bm/postings").schema)
-    // IVF: flat, cell=-partitioned, streaming segments, SQ and PQ tiers
+    // IVF: flat, streaming segments, SQ and PQ tiers
     val corpus = vectors(0 until 80, 8)
     val flat = fresh("schema_ivf_flat")
     Similarity.writeIvfIndex(corpus, nlist = 4, path = flat)
@@ -104,10 +107,6 @@ class StoreReadSpec extends AnyFunSuite {
       .foreach(c => sameSchema(s"$flat/$c"))
     Similarity.appendIvfSegment(vectors(100 until 110, 8), flat, "seg-0")
     sameSchema(s"$flat/cells", recursive = true)
-    val parted = fresh("schema_ivf_parted")
-    Similarity.writeIvfIndex(corpus, nlist = 4, path = parted,
-      partitionCells = true)
-    sameSchema(s"$parted/cells")
     val sq = fresh("schema_ivf_sq")
     Similarity.writeIvfIndexSq(corpus, nlist = 4, path = sq)
     Seq("cells_sq", "quant").foreach(c => sameSchema(s"$sq/$c"))
@@ -131,12 +130,14 @@ class StoreReadSpec extends AnyFunSuite {
     sameSchema(s"$sig/_tombstones")
   }
 
-  /** Jobs started while `body` runs on this thread, counted by a
-    * listener once a marker job after it has been seen.
+  /** Jobs started while `body` runs on this thread, and the RDDs whose
+    * blocks were stored meanwhile (a cache or a local checkpoint),
+    * counted by a listener once a marker job after it has been seen.
     */
-  private def jobsOf(body: => Unit): Int = {
+  private def jobsAndStoredRdds(body: => Unit): (Int, Int) = {
     val group = "store-read-jobs"
     val jobs = ConcurrentHashMap.newKeySet[Int]()
+    val rdds = ConcurrentHashMap.newKeySet[Int]()
     val marker = new java.util.concurrent.atomic.AtomicBoolean
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -145,6 +146,9 @@ class StoreReadSpec extends AnyFunSuite {
           case "store-read-marker" => marker.set(true)
           case _ =>
         }
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        if (!marker.get && e.blockUpdatedInfo.storageLevel.isValid)
+          e.blockUpdatedInfo.blockId.asRDDId.foreach(b => rdds.add(b.rddId))
     }
     sc.addSparkListener(listener)
     try {
@@ -153,9 +157,11 @@ class StoreReadSpec extends AnyFunSuite {
       sc.setJobGroup("store-read-marker", "marker")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       eventually(timeout(30.seconds))(assert(marker.get))
-      jobs.size
+      (jobs.size, rdds.size)
     } finally sc.removeSparkListener(listener)
   }
+
+  private def jobsOf(body: => Unit): Int = jobsAndStoredRdds(body)._1
 
   test("a warm BM25 request runs at most 5 jobs, a warm IVF request at " +
       "most 4") {
@@ -183,6 +189,26 @@ class StoreReadSpec extends AnyFunSuite {
     assert(bmJobs >= 1 && bmJobs <= 5, s"BM25 request ran $bmJobs jobs")
     assert(ivfJobs >= 1 && ivfJobs <= 4, s"IVF request ran $ivfJobs jobs")
     graft.util.OpCaches.releaseAll(spark)
+  }
+
+  test("a plain IVF build and append run a pinned number of jobs") {
+    val ivf = fresh("jobs_ivf_write")
+    val corpus = vectors(0 until 200, 16)
+    val batch = vectors(300 until 320, 16)
+    val (writeJobs, writeRdds) =
+      jobsAndStoredRdds(Similarity.writeIvfIndex(corpus, 8, ivf))
+    val (appendJobs, appendRdds) =
+      jobsAndStoredRdds(Similarity.appendToIvfIndex(batch, ivf))
+    info(s"IVF build: $writeJobs jobs, $writeRdds stored RDDs; " +
+      s"IVF append: $appendJobs jobs, $appendRdds stored RDDs")
+    // the counts the build and the append ran before every tier write
+    // shared one path: an added job or cache materialization fails here.
+    // The build stores only the quantizer fit's packed points, the append
+    // only its cached batch.
+    assert(writeJobs === 11, "IVF build jobs")
+    assert(appendJobs === 8, "IVF append jobs")
+    assert(writeRdds === 1, "IVF build stored RDDs")
+    assert(appendRdds === 1, "IVF append stored RDDs")
   }
 
   test("queries whose buckets have no directory answer as inline bm25TopK, " +

@@ -346,9 +346,14 @@ class TextDedupSpec extends AnyFunSuite {
     val (gl, roundsLocal) = Dedup.dupGroupsWithRounds(chain)
     val local = gl.as[(Long, Long)].collect().toMap
     graft.util.OpCaches.releaseAll(spark)
-    val (gr, roundsReliable) = Dedup.dupGroupsWithRounds(chain, reliable = true)
+    // reliable mode is the session knob, set on a session of its own so
+    // it never leaks into other suites on the shared context
+    val rs = spark.newSession()
+    rs.conf.set(graft.util.Checkpoints.ModeKey, "reliable")
+    val (gr, roundsReliable) = Dedup.dupGroupsWithRounds(
+      rs.createDataFrame((1L until 30L).map(i => (i, i + 1))).toDF("d1", "d2"))
     val reliable = gr.as[(Long, Long)].collect().toMap
-    graft.util.OpCaches.releaseAll(spark)
+    graft.util.OpCaches.releaseAll(rs)
     assert(reliable === local)
     assert(roundsReliable === roundsLocal)
     // superseded rounds were deleted during the run, the final round by
