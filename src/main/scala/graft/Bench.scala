@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR.
   *
   * Measurement discipline (round-2 finding: single-pass timings of a JVM
@@ -132,16 +130,7 @@ object Bench {
       if (budgeted && sys.env.get("SPARK_GRAFT_BENCH_RUNS").isEmpty)
         math.min(runs, 3)
       else runs
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // UTC explicitly, not via the sbt javaOptions -D: normalizeTs casts
-      // TIMESTAMP_NTZ under the SESSION zone, so a bare `java -cp` launch
-      // on a non-UTC host would silently shift event instants
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     // dev-only subset filter (comma-separated names): iterate on one

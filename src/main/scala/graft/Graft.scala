@@ -11,24 +11,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Graft {
 
-  /** Canonical local session for tests / standalone runs. The driver's
-    * Verify/Bench mains build their own sessions with harness-provided CPU
-    * counts; this one mirrors their config.
+  /** The one local session every main starts from: `cores` local
+    * threads and as many shuffle partitions, sessions in UTC (normalizeTs
+    * casts TIMESTAMP_NTZ under the session zone, so a bare `java -cp`
+    * launch on a non-UTC host would shift event instants), nanos
+    * timestamps read as long, and no UI. Each main sets its own log level.
     */
-  def session(cores: Int = 32, appName: String = "graft"): SparkSession = {
-    val spark = SparkSession
+  def session(cores: Int): SparkSession =
+    SparkSession
       .builder()
       .master(s"local[$cores]")
-      .appName(appName)
       .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 
   /** Cached inferred schema per (sfDir, table) — METADATA, never data:
     * without it every `table()` call pays a driver-side parquet footer

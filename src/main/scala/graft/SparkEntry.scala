@@ -405,10 +405,10 @@ object SparkEntry {
     * 13.6 s → 0.6 s for the BPE pack at sf0.1), and the BPE key
     * consumes the frame on two join legs. Checkpoint blocks are
     * invisible to `clearCache`, so the release is OpCaches-tracked (the
-    * `Dedup.dupGroups` discipline); at 100 TB set
-    * `spark.graft.checkpoint=reliable` (+ a checkpoint dir) and the same
-    * barrier becomes a reliable checkpoint ([[graft.util.Checkpoints]]),
-    * so a lost executor can't drop survivor blocks mid-pipeline.
+    * `Dedup.dupGroups` discipline); at 100 TB set a checkpoint dir on
+    * the context and the same barrier becomes a reliable checkpoint
+    * ([[graft.util.Checkpoints]]), so a lost executor can't drop
+    * survivor blocks mid-pipeline.
     * `truncate = false` returns the
     * raw chain — the plan-shape specs inspect the narrowing joins that
     * a checkpoint scan would hide.
@@ -429,7 +429,7 @@ object SparkEntry {
     // same single job. With truncate = false (the plan-lock path) the
     // frames stay plain caches so the RAW chain — the narrowing
     // semi/anti joins — remains assertable end to end; the local-vs-
-    // reliable posture is the session knob Checkpoints.ModeKey.
+    // reliable posture follows the context's checkpoint dir.
     def stage(df: DataFrame): DataFrame =
       if (!truncate) graft.util.OpCaches.cache(df)
       else graft.util.Checkpoints.checkpointTracked(df, eager = false)

@@ -1243,7 +1243,7 @@ object Dedup {
     * round truncates the lineage so plans stay flat across iterations:
     * local by default, or reliable (to the context's checkpoint dir,
     * surviving executor loss at the price of a distributed-FS write per
-    * round) under the session's `spark.graft.checkpoint=reliable`
+    * round) once the context has a checkpoint dir
     * ([[graft.util.Checkpoints]]). Same groups, same round count, either
     * way — asserted in `TextDedupSpec` and `CheckpointModeSpec`.
     *

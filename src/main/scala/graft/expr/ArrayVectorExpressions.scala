@@ -206,7 +206,8 @@ case class PqEncode(
     org.apache.spark.sql.types.ArrayType(
       org.apache.spark.sql.types.ByteType, containsNull = false)
 
-  private def encode(v: ArrayData): Array[Byte] = {
+  /** The m codes of `v`. */
+  def encode(v: ArrayData): ArrayData = {
     val out = new Array[Byte](m)
     val nDims = v.numElements()
     var j = 0
@@ -231,53 +232,16 @@ case class PqEncode(
       out(j) = best.toByte
       j += 1
     }
-    out
+    new GenericArrayData(out)
   }
 
-  override def nullSafeEval(input: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      encode(input.asInstanceOf[ArrayData]))
+  override def nullSafeEval(input: Any): Any = encode(input.asInstanceOf[ArrayData])
 
+  // the generated code calls the same loop, with this node (and so its
+  // codebooks) as a runtime reference, not inlined source
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // the codebook arrays are shared runtime references, not inlined
-    // source (16k doubles would blow the 64 KB method limit)
-    val flatRef = ctx.addReferenceObj("pqFlat", flat, "double[]")
-    val cidsRef = ctx.addReferenceObj("pqCids", cids, "int[]")
-    val offsRef = ctx.addReferenceObj("pqOffs", offsets, "int[]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val out = ctx.freshName("out")
-      val nDims = ctx.freshName("nDims")
-      val j = ctx.freshName("j")
-      val e = ctx.freshName("e")
-      val i = ctx.freshName("i")
-      val dim = ctx.freshName("dim")
-      val d2 = ctx.freshName("d2")
-      val diff = ctx.freshName("diff")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      s"""
-         |byte[] $out = new byte[${m}];
-         |int $nDims = $v.numElements();
-         |for (int $j = 0; $j < ${m}; $j++) {
-         |  int $best = -128;
-         |  double $bestD = Double.MAX_VALUE;
-         |  for (int $e = $offsRef[$j]; $e < $offsRef[$j + 1]; $e++) {
-         |    double $d2 = 0.0;
-         |    for (int $i = 0; $i < $dsub; $i++) {
-         |      int $dim = $j * $dsub + $i;
-         |      if ($dim < $nDims) {
-         |        double $diff = $v.getDouble($dim) - $flatRef[$e * $dsub + $i];
-         |        $d2 += $diff * $diff;
-         |      }
-         |    }
-         |    if ($d2 < $bestD) { $bestD = $d2; $best = $cidsRef[$e] - 128; }
-         |  }
-         |  $out[$j] = (byte) $best;
-         |}
-         |${ev.value} =
-         |  new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    val self = ctx.addReferenceObj("pqEncode", this)
+    nullSafeCodeGen(ctx, ev, v => s"${ev.value} = $self.encode($v);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
@@ -309,7 +273,8 @@ case class PqLut(
   override def dataType: DataType =
     org.apache.spark.sql.types.ArrayType(DoubleType, containsNull = false)
 
-  private def build(v: ArrayData): Array[Double] = {
+  /** The m·ksub lookup table of query `v`. */
+  def build(v: ArrayData): ArrayData = {
     val out = new Array[Double](m * ksub)
     val nDims = v.numElements()
     var j = 0
@@ -328,42 +293,15 @@ case class PqLut(
       }
       j += 1
     }
-    out
+    new GenericArrayData(out)
   }
 
-  override def nullSafeEval(input: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      build(input.asInstanceOf[ArrayData]))
+  override def nullSafeEval(input: Any): Any = build(input.asInstanceOf[ArrayData])
 
+  // the generated code calls the same loop ([[PqEncode]]'s discipline)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val flatRef = ctx.addReferenceObj("pqLutFlat", flat, "double[]")
-    val cidsRef = ctx.addReferenceObj("pqLutCids", cids, "int[]")
-    val offsRef = ctx.addReferenceObj("pqLutOffs", offsets, "int[]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val out = ctx.freshName("out")
-      val nDims = ctx.freshName("nDims")
-      val j = ctx.freshName("j")
-      val e = ctx.freshName("e")
-      val i = ctx.freshName("i")
-      val dim = ctx.freshName("dim")
-      val acc = ctx.freshName("acc")
-      s"""
-         |double[] $out = new double[${m * ksub}];
-         |int $nDims = $v.numElements();
-         |for (int $j = 0; $j < ${m}; $j++) {
-         |  for (int $e = $offsRef[$j]; $e < $offsRef[$j + 1]; $e++) {
-         |    double $acc = 0.0;
-         |    for (int $i = 0; $i < $dsub; $i++) {
-         |      int $dim = $j * $dsub + $i;
-         |      if ($dim < $nDims) $acc += $v.getDouble($dim) * $flatRef[$e * $dsub + $i];
-         |    }
-         |    $out[$j * $ksub + $cidsRef[$e]] = $acc;
-         |  }
-         |}
-         |${ev.value} =
-         |  new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    val self = ctx.addReferenceObj("pqLut", this)
+    nullSafeCodeGen(ctx, ev, v => s"${ev.value} = $self.build($v);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

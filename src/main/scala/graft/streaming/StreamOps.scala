@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.kmeans.{Centroid2, Ops}
 
@@ -194,23 +194,18 @@ object StreamOps {
       lateness: String,
       sinkName: String,
       statePartitions: Option[Int] = None,
-      inspect: org.apache.spark.sql.streaming.StreamingQuery => Unit =
-        _ => ()): DataFrame = {
+      inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
     val spark = left.sparkSession
     val joined = watermarkedTimeBoundJoin(
       left, right, leftKey, rightKey, leftTs, rightTs, window, lateness)
     spark.catalog.dropTempView(sinkName) // stale sink from a prior run
     withShufflePartitions(spark, statePartitions) {
-      val q = joined.writeStream
-        .format("memory")
-        .queryName(sinkName)
-        .outputMode(OutputMode.Append())
-        // bounded inputs: plan all available data up front and terminate,
-        // instead of paying default-trigger micro-batch scheduling overhead
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try { q.awaitTermination(); inspect(q) }
-      finally q.stop()
+      runAvailableNow(
+        joined.writeStream
+          .format("memory")
+          .queryName(sinkName)
+          .outputMode(OutputMode.Append()),
+        inspect)
     }
     spark.table(sinkName)
   }
@@ -254,20 +249,30 @@ object StreamOps {
     val joined = watermarkedTimeBoundJoin(
       left, right, leftKey, rightKey, leftTs, rightTs, window, lateness)
     withShufflePartitions(spark, statePartitions) {
-      val q = joined.writeStream
+      runAvailableNow(joined.writeStream
         .format("parquet")
         .option("path", outPath)
         .option("checkpointLocation", checkpointDir)
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
-      finally q.stop()
+        .outputMode(OutputMode.Append()))
     }
     // explicit schema: an empty join commits a metadata log with zero data
     // files, and schema inference over that throws instead of returning an
     // empty frame
     spark.read.schema(joined.schema).parquet(outPath)
+  }
+
+  /** Start `writer` over the currently-available input and run it to
+    * completion: bounded inputs plan all available data up front and
+    * terminate (`Trigger.AvailableNow`) instead of paying default-trigger
+    * micro-batch scheduling overhead. `inspect` sees the finished query
+    * before it stops.
+    */
+  private def runAvailableNow(
+      writer: DataStreamWriter[_],
+      inspect: StreamingQuery => Unit = _ => ()): Unit = {
+    val q = writer.trigger(Trigger.AvailableNow()).start()
+    try { q.awaitTermination(); inspect(q) }
+    finally q.stop()
   }
 
   /** Run `f` with `spark.sql.shuffle.partitions` temporarily overridden —
@@ -342,16 +347,12 @@ object StreamOps {
       numHashes: Int,
       bands: Int,
       threshold: Double): Unit = {
-    val q = stream.writeStream
+    runAvailableNow(stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         dedupBatchAgainstStore(
           batch, batchId, storePath, outPath, n, numHashes, bands, threshold)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
+      .option("checkpointLocation", checkpointDir))
   }
 
   /** Streaming ingestion into a persisted IVF index
@@ -386,16 +387,12 @@ object StreamOps {
       stream: DataFrame,
       storePath: String,
       checkpointDir: String): Unit = {
-    val q = stream.writeStream
+    runAvailableNow(stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.sim.Similarity.appendIvfSegment(
           batch, storePath, f"batch-$batchId%09d")
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
+      .option("checkpointLocation", checkpointDir))
   }
 
   /** Streaming Count–Min sketch: maintain a running token-frequency
@@ -424,17 +421,13 @@ object StreamOps {
       checkpointDir: String,
       depth: Int,
       width: Int): Unit = {
-    val q = stream.writeStream
+    runAvailableNow(stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.text.TextOps.cmSketch(batch, depth, width)
           .write.mode("overwrite")
           .parquet(f"$storePath/batch-$batchId%09d")
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally q.stop()
+      .option("checkpointLocation", checkpointDir))
   }
 
   /** The merged sketch of a [[runStreamingCmSketch]] store: every
@@ -573,20 +566,17 @@ object StreamOps {
       docsStream: DataFrame,
       modelPath: String,
       sinkName: String,
-      inspect: org.apache.spark.sql.streaming.StreamingQuery => Unit =
-        _ => ()): DataFrame = {
+      inspect: StreamingQuery => Unit = _ => ()): DataFrame = {
     val spark = docsStream.sparkSession
     val scored =
       graft.text.TextOps.classifierScoreFromStore(docsStream, modelPath)
     spark.catalog.dropTempView(sinkName) // stale sink from a prior run
-    val q = scored.writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try { q.awaitTermination(); inspect(q) }
-    finally q.stop()
+    runAvailableNow(
+      scored.writeStream
+        .format("memory")
+        .queryName(sinkName)
+        .outputMode(OutputMode.Append()),
+      inspect)
     spark.table(sinkName)
   }
 }

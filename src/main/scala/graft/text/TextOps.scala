@@ -2859,8 +2859,8 @@ object TextOps {
     * mid-loop can't orphan the live step's blocks (idempotent thunks;
     * the harness sweep is the failure-path cleanup and releases the
     * returned dict). Local checkpoints trade executor-loss recompute
-    * for the flat plan — on a multi-node 100 TB run set
-    * `spark.graft.checkpoint=reliable` ([[graft.util.Checkpoints]]),
+    * for the flat plan — on a multi-node 100 TB run set a checkpoint
+    * dir on the context ([[graft.util.Checkpoints]]),
     * exactly as in the e2e pipeline (SparkEntry's pipelineSurvivors
     * note).
     */

@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` for named queries to individual
   * files — the per-round plan evidence (`plans/rNN/<query>_{before,after}.txt`)
   * the optimization rounds commit.
@@ -16,13 +14,7 @@ object DumpPlanFiles {
       "usage: DumpPlanFiles <sfDir> <outDir> <suffix> <k1,k2,...>")
     val Array(sfDir, outDir, suffix, csv) = args.take(4)
     val names = csv.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(4)
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>

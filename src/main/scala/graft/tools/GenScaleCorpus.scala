@@ -85,20 +85,4 @@ object GenScaleCorpus {
     Files.writeString(marker, markerContent)
     true
   }
-
-  /** Standalone entry: args = [baseSfDir] [outDir] [replicas]. */
-  def main(args: Array[String]): Unit = {
-    val base = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val out = args.lift(1).getOrElse("target/scale10")
-    val n = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val fresh = ensure(spark, base, out, n)
-    println(s"GenScaleCorpus: $out (replicas=$n, generated=$fresh)")
-    spark.stop()
-  }
 }

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 
 /** Dev measurement tool (guide §1: measure first): run named SparkEntry
   * queries through the noop sink and print a per-JOB timing breakdown —
@@ -22,13 +21,7 @@ object ProfileQuery {
       .getOrElse(Seq("tx_pipeline_e2e"))
     val repeats = args.lift(2).map(_.toInt).getOrElse(2)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     // (jobId, submitted-ns not available — use wall at events) -> desc/dur

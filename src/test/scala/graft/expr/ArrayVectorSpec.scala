@@ -83,34 +83,32 @@ class ArrayVectorSpec extends AnyFunSuite {
     val books: IndexedSeq[Seq[(Int, Array[Double])]] = IndexedSeq(
       Seq(3 -> Array(1.0, 0.0), 7 -> Array(-1.0, 0.0)),
       Seq(1 -> Array(5.0, 5.0)))
-    val df = Seq((1L, Seq(0.0, 0.0, 5.0, 5.0))).toDF("id", "vec")
-    val code = df.select(
-      ArrayVector.pqEncode(col("vec"), books, 2).as("c"))
-      .as[Seq[Byte]].head()
+    // each column interpreted and in generated code, which must agree
+    def eval[T: org.apache.spark.sql.Encoder](c: org.apache.spark.sql.Column): T = {
+      val (interp, gen) = bothPaths(
+        _.select(c).as[T].head(), Seq((1L, Seq(0.0, 0.0, 5.0, 5.0))).toDF("id", "vec"))
+      assert(interp === gen)
+      gen
+    }
+    val code = eval[Seq[Byte]](ArrayVector.pqEncode(col("vec"), books, 2))
     assert(code === Seq((3 - 128).toByte, (1 - 128).toByte)) // lowest id wins
     // empty subspace: no entries -> -128
     val books2: IndexedSeq[Seq[(Int, Array[Double])]] =
       IndexedSeq(Seq(0 -> Array(0.0, 0.0)), Seq.empty)
-    val code2 = df.select(
-      ArrayVector.pqEncode(col("vec"), books2, 2).as("c"))
-      .as[Seq[Byte]].head()
+    val code2 = eval[Seq[Byte]](ArrayVector.pqEncode(col("vec"), books2, 2))
     assert(code2 === Seq((-128).toByte, (-128).toByte))
     // LUT: ksub=8, sub-0 slots 3 and 7 filled, everything else 0;
     // sub-1 slot 1 = dot((5,5),(5,5)) = 50
-    val lut = df.select(
-      ArrayVector.pqLut(col("vec"), books, 2, 8).as("l"))
-      .as[Seq[Double]].head()
+    val lut = eval[Seq[Double]](ArrayVector.pqLut(col("vec"), books, 2, 8))
     assert(lut.length === 16)
     assert(lut(3) === 0.0 && lut(7) === 0.0) // dot with (0,0) probe
     assert(lut(8 + 1) === 50.0)
     assert(lut.zipWithIndex.collect {
       case (v, i) if i != 9 => v }.forall(_ === 0.0))
     // encode + ADC round trip: adc of own code = lut slots picked
-    val adc = df.select(
-      ArrayVector.pqAdc(
-        ArrayVector.pqEncode(col("vec"), books, 2),
-        ArrayVector.pqLut(col("vec"), books, 2, 8), 8).as("a"))
-      .as[Double].head()
+    val adc = eval[Double](ArrayVector.pqAdc(
+      ArrayVector.pqEncode(col("vec"), books, 2),
+      ArrayVector.pqLut(col("vec"), books, 2, 8), 8))
     assert(adc === lut(3) + lut(9))
   }
 
@@ -142,14 +140,17 @@ class ArrayVectorSpec extends AnyFunSuite {
     5L -> Some(Seq(Some(Double.NaN), Some(0.0))),
     6L -> Some(Seq(Some(1.0), Some(2.0)))).toDF("id", "v")
 
-  /** `body` over the fixture evaluated interpreted (a local relation folds
-    * the projection) and inside whole-stage codegen (above an exchange,
-    * with fallback off so a compile error fails the test).
+  /** `body` over `rows` (the odd-input fixture by default) evaluated
+    * interpreted (a local relation folds the projection) and inside
+    * whole-stage codegen (above an exchange, with fallback off so a
+    * compile error fails the test).
     */
-  private def bothPaths[T](body: org.apache.spark.sql.DataFrame => T): (T, T) = {
-    val interp = body(oddRows)
+  private def bothPaths[T](
+      body: org.apache.spark.sql.DataFrame => T,
+      rows: => org.apache.spark.sql.DataFrame = oddRows): (T, T) = {
+    val interp = body(rows)
     spark.conf.set("spark.sql.codegen.fallback", "false")
-    try (interp, body(oddRows.repartition(1)))
+    try (interp, body(rows.repartition(1)))
     finally spark.conf.unset("spark.sql.codegen.fallback")
   }
 

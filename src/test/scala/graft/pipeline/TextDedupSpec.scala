@@ -340,20 +340,22 @@ class TextDedupSpec extends AnyFunSuite {
 
   test("dupGroups reliable mode: same groups and rounds; checkpoint files " +
       "are released eagerly") {
+    def groups(): (Map[Long, Long], Int) = {
+      val (g, rounds) = Dedup.dupGroupsWithRounds(
+        (1L until 30L).map(i => (i, i + 1)).toDF("d1", "d2"))
+      val out = g.as[(Long, Long)].collect().toMap
+      graft.util.OpCaches.releaseAll(spark)
+      (out, rounds)
+    }
+    val (local, roundsLocal) = groups()
+    // reliable mode is a checkpoint dir on the shared context, cleared
+    // again so no later suite runs reliable
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
-    val chain = (1L until 30L).map(i => (i, i + 1)).toDF("d1", "d2")
-    val (gl, roundsLocal) = Dedup.dupGroupsWithRounds(chain)
-    val local = gl.as[(Long, Long)].collect().toMap
-    graft.util.OpCaches.releaseAll(spark)
-    // reliable mode is the session knob, set on a session of its own so
-    // it never leaks into other suites on the shared context
-    val rs = spark.newSession()
-    rs.conf.set(graft.util.Checkpoints.ModeKey, "reliable")
-    val (gr, roundsReliable) = Dedup.dupGroupsWithRounds(
-      rs.createDataFrame((1L until 30L).map(i => (i, i + 1))).toDF("d1", "d2"))
-    val reliable = gr.as[(Long, Long)].collect().toMap
-    graft.util.OpCaches.releaseAll(rs)
+    val (reliable, roundsReliable) =
+      try groups()
+      finally org.apache.spark.GraftTestAccess.clearCheckpointDir(spark.sparkContext)
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
     assert(reliable === local)
     assert(roundsReliable === roundsLocal)
     // superseded rounds were deleted during the run, the final round by

@@ -30,13 +30,7 @@ object EmptySweep {
   def main(args: Array[String]): Unit = {
     val from = args.headOption.getOrElse("/root/testdata/sf0.001")
     val dest = if (args.length > 1) args(1) else "target/empty-sf"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(8)
     spark.sparkContext.setLogLevel("ERROR")
     ensureEmptyFixture(spark, from, dest)
     graft.SparkEntry.queries.keys.toSeq.sorted.foreach { name =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only probe: ONE measured point at ~100× sf0.1 (≈500k docs /
   * 500k vectors via [[GenScaleCorpus]]) for the scalable dedup/ANN heads
   * — direct evidence for the "survives 100×" claim that the per-round
@@ -14,12 +12,7 @@ object ProbeScale100 {
     val base = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("target/scale100")
     val replicas = args.lift(2).map(_.toInt).getOrElse(100)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Graft.session(32)
     spark.sparkContext.setLogLevel("ERROR")
 
     val t0 = System.nanoTime()
