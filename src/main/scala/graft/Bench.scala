@@ -168,18 +168,29 @@ object Bench {
     // produced near-zero "passes" of instantly-failing queries)
     @volatile var shuttingDown = false
 
+    // per key that threw: the last cause ("<exception class>: <message>")
+    // and the number of attempts that threw, in first-failure order
+    val failures = scala.collection.mutable.LinkedHashMap.empty[String, (String, Int)]
+    def fail(name: String, cause: String): Double = {
+      val n = failures.get(name).fold(0)(_._2)
+      if (n == 0) System.err.println(s"[bench] $name failed: $cause")
+      failures(name) = (cause, n + 1)
+      -1.0
+    }
+
     // -1.0 = the query threw (or was force-failed); callers treat any
     // non-positive sample as a failure, exclude it from medians, and
-    // surface the name in "failed" when NO pass succeeded.
+    // surface the name in "failed" when NO pass succeeded. The cause is
+    // kept in `failures`.
     def runOnce(name: String): Double = {
       if (shuttingDown) return -1.0
       spark.catalog.clearCache()
       graft.util.OpCaches.releaseAll(spark) // drain the tracked-cache registry
-      if (forceFail(name)) return -1.0
+      if (forceFail(name)) return fail(name, "forced by SPARK_GRAFT_BENCH_FAIL")
       val t0 = System.nanoTime()
       try SparkEntry.queries(name)(spark, sfDir)
         .write.mode("overwrite").format("noop").save()
-      catch { case _: Throwable => return -1.0 }
+      catch { case e: Throwable => return fail(name, s"${e.getClass.getName}: ${e.getMessage}") }
       (System.nanoTime() - t0) / 1e9
     }
 
@@ -292,6 +303,13 @@ object Bench {
       val qs = names.map(n => s"\"$n\":${med(n)}").mkString("{", ",", "}")
       val mads = names.map(n => s"\"$n\":${mad(n)}").mkString("{", ",", "}")
       val failedJson = failed.map(n => s"\"$n\"").mkString("[", ",", "]")
+      // every key that threw in some attempt, with its last cause (the
+      // first 500 characters); absent when nothing threw
+      val causesJson =
+        if (failures.isEmpty) ""
+        else failures.map { case (n, (c, k)) =>
+          s""""$n":{"threw":$k,"cause":${Graft.jsonString(c.take(500))}}"""
+        }.mkString(""","failure_causes":{""", ",", "}")
       val totalsJson = passTotals.mkString("[", ",", "]")
       val warmupJson = warmupTotals.mkString("[", ",", "]")
       val rejectedJson = rejectedPasses
@@ -330,7 +348,7 @@ object Bench {
         s""""pass_cpu_sec":${passCpus.mkString("[", ",", "]")},""" +
         s""""load_gate":$loadGate,"rejected_passes":$rejectedJson,""" +
         s""""loadavg_end":${loadAvgJson()},"materialize":"noop"""" +
-        partialJson + fallbackJson + primaryJson + scaleJson + "}"
+        causesJson + partialJson + fallbackJson + primaryJson + scaleJson + "}"
     }
     // COMPACT SUMMARY LINE (round-19, the r18 verdict's #1): the
     // driver's log capture keeps only a bounded stdout TAIL, and the
@@ -897,6 +915,7 @@ object Bench {
       println(json)
       println(compact)
       System.out.flush()
+      System.err.println(s"[bench] failed ${failures.size} of ${names.length} keys")
     }
     // under teardown the shutdown hook owns the final print (and the
     // last emit() already wrote the partial snapshot to BENCH.json)

@@ -157,4 +157,19 @@ object Graft {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     normalizeTs(tableStream(spark, sfDir, "events"))
   }
+
+  /** `s` as a JSON string literal: quote, backslash and every control
+    * character (< 0x20) escaped, so a tab or CR in the text cannot break
+    * a reader's parse. Used by Verify's `oracle_sql.json` and Bench's
+    * failure causes.
+    */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -392,44 +392,43 @@ object SparkEntry {
     * composition costs no extra text scans beyond each stage's own. At
     * 100 TB the chain is exactly this plan: no stage introduces an
     * exchange the standalone operator doesn't already carry, and the
-    * narrowing joins are key-only (doc_id) semi/anti joins. Survivor
-    * frames that feed SEVERAL downstream consumers (the leak audit
-    * reads kept2 twice, the anti join and the cap read it again) are
-    * cached via OpCaches — without it every consumer re-runs the whole
-    * upstream dedup lineage.
+    * narrowing joins are key-only (doc_id) semi/anti joins.
     *
-    * The returned frame is LOCAL-CHECKPOINTED (lineage truncated), not
-    * just persisted: each downstream ACTION otherwise re-plans the full
-    * dedup/leakage tree — canonicalizing the deep HOF lineage against
-    * the cache registry costs seconds per action at any SF (probed
-    * 13.6 s → 0.6 s for the BPE pack at sf0.1), and the BPE key
-    * consumes the frame on two join legs. Checkpoint blocks are
-    * invisible to `clearCache`, so the release is OpCaches-tracked (the
-    * `Dedup.dupGroups` discipline); at 100 TB set a checkpoint dir on
-    * the context and the same barrier becomes a reliable checkpoint
-    * ([[graft.util.Checkpoints]]), so a lost executor can't drop
-    * survivor blocks mid-pipeline.
-    * `truncate = false` returns the
-    * raw chain — the plan-shape specs inspect the narrowing joins that
-    * a checkpoint scan would hide.
+    * One shingle-key pass: the exact-dedup survivors `kept1` carry their
+    * n = 3 shingle keys as a column, and near-dedup
+    * ([[graft.dedup.Dedup.nearDupIds]]) and the leak audit
+    * ([[graft.text.TextOps.splitLeakageKeys]]) both read that column;
+    * `kept3` drops it. The stage BARRIERS are the frames several
+    * consumers read: `kept1` (signatures, the Jaccard verify, the
+    * near-dedup anti join), `kept2` (the shingle index, the split
+    * labels, the decontamination anti join) and `kept3` (the cap's
+    * offsets collect and its semi join); the returned frame is one more,
+    * eager. Between barriers the chain holds no cache of its own: each
+    * self-join reads a barrier on both sides, so a cache of its input
+    * would save a cheap projection (the signatures, the exploded keys)
+    * and cost a materializing job under adaptive execution. The one
+    * cache left is the cap's range partitioning
+    * ([[graft.text.TextOps.sourceCap]]), which pins a sampled layout
+    * across its collect and its ranked plan.
+    *
+    * Under `truncate` (the production/bench form) a barrier is a
+    * checkpoint ([[graft.util.Checkpoints]]) — a LogicalRDD leaf, so
+    * every downstream action plans against a one-stage tree instead of
+    * re-analyzing the whole quality→dedup→decontamination chain
+    * (measured r19: ~8 s of the e2e key's 15 s wall was driver/Catalyst
+    * time; the BPE key consumes the result on two join legs). The stage
+    * barriers are lazy: the first action that reads one computes it
+    * inside that action's own job.
+    * Checkpoint blocks are invisible to `clearCache`, so their release is
+    * OpCaches-tracked; local or reliable follows the context's checkpoint
+    * dir, so at 100 TB a lost executor can't drop survivor blocks
+    * mid-pipeline. `truncate = false` makes the stage barriers plain
+    * OpCaches caches and returns the raw chain — the plan-shape specs
+    * inspect the narrowing joins that a checkpoint scan would hide.
     */
   private[graft] def pipelineSurvivors(
       s: SparkSession, dir: String,
       truncate: Boolean = true): DataFrame = {
-    // stage barrier: under `truncate` (the production/bench form) the
-    // multi-consumer stage frames are LAZY localCheckpoints — LogicalRDD
-    // LEAVES, so every downstream eager action (the cap stage's offsets
-    // collect, the final survivor checkpoint, the pack) plans against a
-    // one-stage tree instead of re-analyzing the whole quality→dedup→
-    // decontamination chain per action (measured r19: ~8 s of the e2e
-    // key's 15 s wall was driver/Catalyst time, the optimization guide's
-    // §7.3 planning-bottleneck case; blocks release via OpCaches exactly
-    // like the final checkpoint's). Materialization cost is zero: the
-    // first action computes the same DAG the caches computed, in the
-    // same single job. With truncate = false (the plan-lock path) the
-    // frames stay plain caches so the RAW chain — the narrowing
-    // semi/anti joins — remains assertable end to end; the local-vs-
-    // reliable posture follows the context's checkpoint dir.
     def stage(df: DataFrame): DataFrame =
       if (!truncate) graft.util.OpCaches.cache(df)
       else graft.util.Checkpoints.checkpointTracked(df, eager = false)
@@ -438,11 +437,13 @@ object SparkEntry {
       TextOps.analyze(docs).filter(col("quality") >= 0.5)
         .select(col("doc_id")),
       Seq("doc_id"), "left_semi")
-    val kept1 = Dedup.exactDedup(kept0)
-    val kept2 = stage(Dedup.nearDedup(kept1,
-      n = 3, numHashes = 12, bands = 4, threshold = 0.5))
-    val leaks = TextOps.splitLeakage(kept2,
-      n = 3, threshold = 0.4, maxShingleDf = Some(50L))
+    val kept1 = stage(Dedup.exactDedup(kept0).withColumn("keys",
+      graft.expr.ShingleKeys(TextOps.tokens(col("text")), 3)))
+    val kept2 = stage(kept1.join(
+      Dedup.nearDupIds(kept1, numHashes = 12, bands = 4, threshold = 0.5),
+      Seq("doc_id"), "left_anti"))
+    val leaks = TextOps.splitLeakageKeys(kept2,
+      threshold = 0.4, maxShingleDf = Some(50L))
     // ONE pass over the pair set: a leak pair has split1 != split2,
     // so at most one side is the train doc — a two-armed when()
     // instead of a union of two filters keeps the exact-Jaccard join
@@ -452,8 +453,8 @@ object SparkEntry {
         .when(col("split2") === "train", col("d2")).as("doc_id"))
       .filter(col("doc_id").isNotNull)
       .distinct()
-    val kept3 = stage(
-      kept2.join(contaminated, Seq("doc_id"), "left_anti"))
+    val kept3 = stage(kept2.drop("keys")
+      .join(contaminated, Seq("doc_id"), "left_anti"))
     val capped = kept3.join(
       TextOps.sourceCap(kept3, cap = 7).select(col("doc_id")),
       Seq("doc_id"), "left_semi")

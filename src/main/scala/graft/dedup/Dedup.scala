@@ -99,6 +99,14 @@ object Dedup {
     * the same formula, consistent). Joining on longs instead of shingle
     * strings keeps the index compact and the exchange cheap.
     *
+    * The entry point shingles `docs` once and holds the (doc_id, keys)
+    * frame behind a lazy checkpoint ([[graft.util.Checkpoints]],
+    * released by `OpCaches.releaseAll`): the body reads it up to five
+    * times, and a checkpoint scan, unlike a cache scan, runs no
+    * materializing job per read under adaptive execution.
+    * [[jaccardPairsKeys]] is the body, for callers that already hold
+    * the keys.
+    *
     * @param maxShingleDf if set, shingles appearing in more than this many
     *   docs are dropped before the self-join (bounds fan-out at scale;
     *   similarity becomes a lower bound).
@@ -108,39 +116,34 @@ object Dedup {
       docs: DataFrame,
       n: Int,
       threshold: Double,
+      maxShingleDf: Option[Long] = None): DataFrame =
+    jaccardPairsKeys(keyBarrier(docs, n), threshold, maxShingleDf)
+
+  /** [[jaccardPairs]] over a (doc_id, keys) frame ([[docShingleKeys]]'
+    * shape; other columns are ignored). Nothing is cached here: the
+    * exploded shingle stream is a cheap projection of `keys`, read by
+    * the size aggregate, the df cap's aggregate and semi join, and both
+    * sides of the self-join. Pass `keys` materialized (a checkpoint, as
+    * [[jaccardPairs]] does), or each of those reads re-shingles the text.
+    */
+  def jaccardPairsKeys(
+      keys: DataFrame,
+      threshold: Double,
       maxShingleDf: Option[Long] = None): DataFrame = {
-    val sh0raw = docShingleKeys(docs, n)
+    val sh0 = keys
       .select(
         col("doc_id"),
         explode(col("keys")).as("k"))
       .select(
         col("doc_id"),
         (col("k.u") * MinHashP + col("k.v")).as("shash"))
-    // under a df cap the raw shingle stream is consumed TWICE (the df
-    // aggregate and the semi-join's probe side) — cache it so the
-    // tokenize+md5+combine pass (the dominant per-doc cost) runs once,
-    // not per consumer (r19; same OpCaches discipline as `sh` below).
-    // SIZING NOTE: sh0 and its filtered subset `sh` are persisted
-    // SIMULTANEOUSLY until the harness releaseAll — with a cap that
-    // drops little the two are near-duplicates, so peak storage is ~2x
-    // the exploded shingle stream. The return is lazy, so this function
-    // cannot safely unpersist sh0 itself (sh materializes only under the
-    // caller's action); a 100 TB caller that cares should materialize
-    // the result and then release, exactly as the harnesses do.
-    val sh0 = maxShingleDf match {
-      case Some(_) => graft.util.OpCaches.cache(sh0raw)
-      case None => sh0raw
-    }
-    val shUnfiltered = maxShingleDf match {
+    val sh = maxShingleDf match {
       case Some(limit) =>
         val rare = sh0.groupBy(col("shash")).agg(count(lit(1)).as("df"))
           .filter(col("df") <= limit).select("shash")
         sh0.join(rare, Seq("shash"), "left_semi")
       case None => sh0
     }
-    // cache: consumed three times (sizes + both sides of the self-join);
-    // tracked in OpCaches so the caller can release it post-materialize
-    val sh = graft.util.OpCaches.cache(shUnfiltered)
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("sz"))
     val co = sh.as("a")
       .join(sh.as("b"), col("a.shash") === col("b.shash"))
@@ -635,6 +638,16 @@ object Dedup {
       col("doc_id"),
       graft.expr.ShingleKeys(TextOps.tokens(col("text")), n).as("keys"))
 
+  /** [[docShingleKeys]] behind a lazy checkpoint, released by
+    * `OpCaches.releaseAll`: the one shingle pass of an entry point whose
+    * body reads the keys several times. A checkpoint is a plan leaf,
+    * where under adaptive execution every scan of a cache is a query
+    * stage with jobs of its own. Like every checkpoint barrier, the
+    * result must be materialized before the release.
+    */
+  private[graft] def keyBarrier(docs: DataFrame, n: Int): DataFrame =
+    graft.util.Checkpoints.checkpointTracked(docShingleKeys(docs, n), eager = false)
+
   /** MinHash signatures via the codegen'd [[graft.expr.MinHashSignature]]
     * expression — all `numHashes` minima in one compiled loop over the
     * shingle keys. Output: (doc_id, sig ARRAY<BIGINT>). Docs with no
@@ -666,8 +679,8 @@ object Dedup {
           .as(Seq("band", "bucket")))
 
   /** Candidate pairs from shared (band, bucket) co-occurrence — the LSH
-    * OR-construction's equality self-join. Input must be cached: both
-    * join sides read it.
+    * OR-construction's equality self-join. Both join sides read `b`, so
+    * build it from materialized input.
     */
   private[graft] def bucketCandidates(b: DataFrame): DataFrame =
     b.as("a")
@@ -838,29 +851,45 @@ object Dedup {
     * SMALLER-id doc is near-identical to it. (One-step transitive closure:
     * the standard single-pass policy; full connected components would need
     * an iterative join.) Output: the surviving docs.
+    *
+    * The entry point runs ONE shingle-key pass (tokenize + md5 + n-gram
+    * combine, the dominant per-doc cost) behind a lazy checkpoint
+    * ([[keyBarrier]]): both sides of the signature self-join and the
+    * Jaccard verify read it. [[nearDupIds]] is the body, for callers
+    * that already hold the keys.
     */
   def nearDedup(
       docs: DataFrame,
       n: Int,
       numHashes: Int,
       bands: Int,
+      threshold: Double): DataFrame =
+    docs.join(
+      nearDupIds(keyBarrier(docs, n), numHashes, bands, threshold),
+      Seq("doc_id"), "left_anti")
+
+  /** [[nearDedup]]'s drops over a (doc_id, keys) frame ([[docShingleKeys]]'
+    * shape; other columns are ignored): the ids of docs with a verified
+    * SMALLER-id near-duplicate. Nothing is cached here: each side of the
+    * LSH-bucket self-join computes its signatures from `keys`, a cheap
+    * pass next to shingling. Pass `keys` materialized (a checkpoint, as
+    * [[nearDedup]] does), since both sides and the verify read it.
+    * Output: (doc_id) distinct.
+    */
+  def nearDupIds(
+      keys: DataFrame,
+      numHashes: Int,
+      bands: Int,
       threshold: Double): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    // ONE shingle-key pass (tokenize + md5 + n-gram combine — the
-    // dominant per-doc cost at scale) shared by the signature stage AND
-    // the Jaccard verify stage, which each ran their own docShingleKeys
-    // before; both caches are OpCaches-tracked
-    val keys = graft.util.OpCaches.cache(docShingleKeys(docs, n))
     val sigs = keys
       .filter(size(col("keys")) > 0)
       .select(
         col("doc_id"),
         graft.expr.MinHashSignature(col("keys"), numHashes).as("sig"))
-    val b = graft.util.OpCaches.cache(
-      lshBuckets(sigs, bands, numHashes / bands))
-    val verified = verifyJaccardKeys(keys, bucketCandidates(b), threshold)
-    val dropped = verified.select(col("d2").as("doc_id")).distinct()
-    docs.join(dropped, Seq("doc_id"), "left_anti")
+    val b = lshBuckets(sigs, bands, numHashes / bands)
+    verifyJaccardKeys(keys, bucketCandidates(b), threshold)
+      .select(col("d2").as("doc_id")).distinct()
   }
 
   /** INCREMENTAL near-dedup: dedup a NEW batch against an EXISTING corpus

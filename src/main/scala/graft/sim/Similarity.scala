@@ -389,8 +389,12 @@ object Similarity {
 
   /** [[appendToIvfIndex]]'s growth check: post-append rows vs the fit
     * count recorded in `meta/`. The fit count is a one-row read; the
-    * index's rows are counted by a full scan of the cells tier (delete
-    * tombstones anti-joined), an O(index) job on every append.
+    * index's rows come from the cells tier's parquet footers minus its
+    * tombstone rows ([[graft.util.SegmentStore.footerRowCount]]), read
+    * on the driver, so the check costs no job that grows with the index.
+    * That count is the live count unless a delete named an absent or
+    * already-deleted id (then it is low) or an id held by several rows
+    * (then high): close enough for a warning threshold.
     */
   private def checkIvfGrowth(
       spark: SparkSession, path: String, batchCount: Long): Unit = {
@@ -404,7 +408,7 @@ object Similarity {
       val fitCount = SegmentStore.parquet(spark, s"$path/meta")
         .select(col("fit_count")).head().getLong(0)
       val afterAppend =
-        SegmentStore.read(spark, s"$path/cells", "cid_id").count() + batchCount
+        SegmentStore.footerRowCount(spark, s"$path/cells") + batchCount
       if (fitCount > 0 && afterAppend > MaxGrowth * fitCount)
         log.warn(s"IVF index at $path has grown to $afterAppend rows, > " +
           f"$MaxGrowth%.1fx its fit-time corpus of $fitCount rows: " +

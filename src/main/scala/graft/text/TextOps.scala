@@ -364,11 +364,17 @@ object TextOps {
     * operator is the detector that proves whether that happened.)
     *
     * Composition: exact-Jaccard near-dup pairs
-    * ([[graft.dedup.Dedup.jaccardPairs]] — inverted index + stop-shingle
-    * cut, no all-pairs work) joined to the id-pure split assignment. The
-    * split side reads NO text (it is a projection of doc_id only), so the
-    * audit costs one near-dup pass plus two key-only joins against the
-    * (small) pair set.
+    * ([[graft.dedup.Dedup.jaccardPairsKeys]] — inverted index +
+    * stop-shingle cut, no all-pairs work) joined to the id-pure split
+    * assignment. The split side reads NO text (it is a projection of
+    * doc_id only), so the audit costs one near-dup pass plus two
+    * key-only joins against the (small) pair set.
+    *
+    * The entry point shingles `docs` once and holds the (doc_id, keys)
+    * frame behind a lazy checkpoint ([[graft.dedup.Dedup.keyBarrier]]),
+    * which the pair body reads several times; [[splitLeakageKeys]] is the
+    * body, for callers that already hold the keys (the e2e pipeline
+    * shares one key pass with its near-dedup).
     *
     * Output: (d1, d2, split1, split2, jac) with split1 != split2.
     */
@@ -376,8 +382,17 @@ object TextOps {
       docs: DataFrame,
       n: Int,
       threshold: Double,
+      maxShingleDf: Option[Long] = None): DataFrame =
+    splitLeakageKeys(graft.dedup.Dedup.keyBarrier(docs, n), threshold, maxShingleDf)
+
+  /** [[splitLeakage]] over a materialized (doc_id, keys) frame; other
+    * columns are ignored. Nothing is cached here.
+    */
+  def splitLeakageKeys(
+      keys: DataFrame,
+      threshold: Double,
       maxShingleDf: Option[Long] = None): DataFrame = {
-    val pairs = graft.dedup.Dedup.jaccardPairs(docs, n, threshold, maxShingleDf)
+    val pairs = graft.dedup.Dedup.jaccardPairsKeys(keys, threshold, maxShingleDf)
     // the split labels stay a JOIN against a docs-side label frame, NOT
     // per-row assignSplit(d1/d2) expressions on the pair set: measured in
     // r19, Catalyst pushes a deterministic filter over pair ids below the
@@ -385,7 +400,7 @@ object TextOps {
     // md5-per-row splits on every co-occurrence row (millions) instead of
     // every verified pair — 2.8 s → 6.6 s. The joins touch only the
     // O(pairs) rows.
-    val splits = docs.select(col("doc_id"), assignSplit(col("doc_id")).as("split"))
+    val splits = keys.select(col("doc_id"), assignSplit(col("doc_id")).as("split"))
     pairs
       .join(splits.select(col("doc_id").as("d1"), col("split").as("split1")), "d1")
       .join(splits.select(col("doc_id").as("d2"), col("split").as("split2")), "d2")
@@ -459,16 +474,16 @@ object TextOps {
       threshold: Double): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     import graft.dedup.Dedup
-    // ONE shingle-key pass shared by signatures and the Jaccard verify
+    // ONE shingle-key pass shared by signatures and the Jaccard verify;
+    // each side of the bucket self-join derives its buckets from it
     val keys = graft.util.OpCaches.cache(Dedup.docShingleKeys(docs, n))
     val sigs = keys
       .filter(size(col("keys")) > 0)
       .select(
         col("doc_id"),
         graft.expr.MinHashSignature(col("keys"), numHashes).as("sig"))
-    val b = graft.util.OpCaches.cache(
+    val crossSplit = Dedup.bucketCandidates(
       Dedup.lshBuckets(sigs, bands, numHashes / bands))
-    val crossSplit = Dedup.bucketCandidates(b)
       .filter(assignSplit(col("d1")) =!= assignSplit(col("d2")))
     Dedup.verifyJaccardKeys(keys, crossSplit, threshold)
       .select(

@@ -76,23 +76,60 @@ object SegmentStore {
     }
   }
 
+  /** What Spark's file index skips: `_`/`.`-prefixed names other than
+    * `k=v` directories.
+    */
+  private def hidden(st: FileStatus): Boolean = {
+    val n = st.getPath.getName
+    (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+  }
+
   /** The first data file under `roots` in path-string order, skipping
-    * what Spark's file index skips (`_`/`.`-prefixed names other than
-    * `k=v` directories). A depth-first walk: a directory sorts as its
+    * [[hidden]] names. A depth-first walk: a directory sorts as its
     * path plus `/`, which places it exactly where its files sort.
     */
   private def firstDataFile(fs: FileSystem, roots: Seq[Path]): Option[FileStatus] = {
-    def hidden(n: String) =
-      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
     def key(st: FileStatus) =
       st.getPath.toString + (if (st.isDirectory) "/" else "")
     def walk(sts: Seq[FileStatus]): Option[FileStatus] =
       sts.sortBy(key).iterator.map { st =>
-        if (st.isDirectory)
-          walk(fs.listStatus(st.getPath).toSeq.filterNot(c => hidden(c.getPath.getName)))
+        if (st.isDirectory) walk(fs.listStatus(st.getPath).toSeq.filterNot(hidden))
         else Some(st)
       }.collectFirst { case Some(f) => f }
     walk(roots.filter(fs.exists).map(fs.getFileStatus))
+  }
+
+  /** Rows in the parquet files under `dir`, at any depth, skipping
+    * [[hidden]] names: the sum of their footers' row counts, read on the
+    * driver, so no Spark job runs and no data page is read. 0 when `dir`
+    * does not exist.
+    */
+  private def footerRows(spark: SparkSession, dir: String): Long = {
+    val root = new Path(dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = root.getFileSystem(conf)
+    def rows(st: FileStatus): Long =
+      if (st.isDirectory) fs.listStatus(st.getPath).filterNot(hidden).map(rows).sum
+      else {
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        try reader.getRecordCount finally reader.close()
+      }
+    if (fs.exists(root)) rows(fs.getFileStatus(root)) else 0L
+  }
+
+  /** A store's row count from footers alone: the rows of its active
+    * generation (segments included) minus its tombstone rows. No Spark
+    * job runs, where `read(...).count()` scans the store and anti-joins
+    * the tombstones. The two differ when a tombstone names an id the
+    * store does not hold or that an earlier delete already removed (this
+    * count is then low), and when a tombstoned id matches several rows
+    * (high). Good for a size check; use `read(...).count()` for the
+    * exact live count.
+    */
+  def footerRowCount(spark: SparkSession, store: String): Long = {
+    val base = GenStore.resolve(spark, store)
+    footerRows(spark, base) - footerRows(spark, s"$base/${Tombstones.DirName}")
   }
 
   /** Read a store's active generation with per-batch segment

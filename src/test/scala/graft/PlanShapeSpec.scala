@@ -916,6 +916,82 @@ class PlanShapeSpec extends AnyFunSuite {
       s"expected key-only semi/anti narrowing joins:\n${s.take(1500)}")
   }
 
+  /** The jobs `body` starts on this thread and the deep plan strings of
+    * the SQL executions it runs, read by listeners once a marker
+    * execution after it has reached both.
+    */
+  private def jobsAndPlans(body: => Unit): (Int, Seq[String]) = {
+    import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    import scala.jdk.CollectionConverters._
+    val group = "plan-shape-jobs"
+    val jobs = ConcurrentHashMap.newKeySet[Int]()
+    val plans = new ConcurrentLinkedQueue[String]()
+    @volatile var jobMarker = false
+    @volatile var planMarker = false
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.properties.getProperty("spark.jobGroup.id") match {
+          case `group` => jobs.add(e.jobId)
+          case "plan-shape-marker" => jobMarker = true
+          case _ =>
+        }
+    }
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        val s = deepPlanString(qe.executedPlan)
+        if (s.contains("plan_shape_marker")) planMarker = true
+        else if (!planMarker) plans.add(s)
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.sparkContext.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    try {
+      spark.sparkContext.setJobGroup(group, group)
+      try body finally spark.sparkContext.clearJobGroup()
+      spark.sparkContext.setJobGroup("plan-shape-marker", "marker")
+      try spark.range(1).select(lit(1).as("plan_shape_marker")).collect()
+      finally spark.sparkContext.clearJobGroup()
+      eventually(timeout(30.seconds))(assert(jobMarker && planMarker))
+      (jobs.size, plans.asScala.toSeq)
+    } finally {
+      spark.sparkContext.removeSparkListener(jobListener)
+      spark.listenerManager.unregister(planListener)
+    }
+  }
+
+  test("tx_pipeline_e2e shingles once, caches only the cap's range " +
+      "partitioning, and runs a pinned number of jobs") {
+    def run(): Unit = {
+      graft.SparkEntry.queries("tx_pipeline_e2e")(spark, sf).collect()
+      graft.util.OpCaches.releaseAll(spark)
+    }
+    run() // the cold run reads footers and compiles what the warm one reuses
+    val (jobs, plans) = jobsAndPlans(run())
+    // one shingle-key projection (an alias of its own) for near-dedup and
+    // the leak audit together
+    val shingleAliases = plans.flatMap(p =>
+      "(?i)shinglekeys\\(.*? AS (\\w+#\\d+)".r.findAllMatchIn(p).map(_.group(1)))
+      .distinct
+    info(s"warm run: $jobs jobs, ${plans.size} executions, " +
+      s"shingle-key projections ${shingleAliases.mkString(", ")}")
+    assert(shingleAliases.size === 1,
+      s"shingle keys projected ${shingleAliases.size} times")
+    // the checkpointed chain caches nothing of its own; the cap's range
+    // partitioning (its `_pidx` column) is pinned on purpose
+    val cached = plans.flatMap(_.linesIterator.filter(_.contains("InMemoryRelation")))
+    assert(cached.nonEmpty && cached.forall(_.contains("_pidx#")),
+      s"a cache other than the cap's range partitioning:\n${cached.mkString("\n")}")
+    // measured on this fixture in the shared test session (4 threads, 4
+    // shuffle partitions)
+    assert(jobs === 28, "tx_pipeline_e2e warm-run jobs")
+  }
+
   test("tx_pipeline_e2e packs off the CHECKPOINTED survivor frame: the " +
       "pack plan scans truncated lineage, one shard exchange, no global " +
       "sort") {

@@ -114,9 +114,18 @@ class CacheLifecycleSpec extends AnyFunSuite {
     assert(leaked.isEmpty, s"dupGroups leaked persistent RDD ids: $leaked")
   }
 
-  test("nearDedup shares one shingle-key pass and releases both caches") {
+  test("nearDedup shares one shingle-key pass and releases its key cache") {
     assertReleased("nearDedup") {
       Dedup.nearDedup(docs, n = 3, numHashes = 16, bands = 4, threshold = 0.5)
+    }
+  }
+
+  test("the e2e pipeline's stage barriers, cap cache and survivor " +
+      "checkpoint are all released") {
+    assertReleased("pipelineSurvivors + pack") {
+      graft.text.TextOps.packSequences(
+        graft.SparkEntry.pipelineSurvivors(spark, "/root/testdata/sf0.001"),
+        budget = 512L, shards = 8)
     }
   }
 

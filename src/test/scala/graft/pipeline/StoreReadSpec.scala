@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerJobEnd,
-  SparkListenerJobStart}
+  SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -28,7 +28,8 @@ import graft.util.SegmentStore
   *  - JOBS: a warm BM25 request runs at most 5 jobs, a warm IVF request
   *    at most 4 (no listing, schema or metadata-aggregate jobs); a plain
   *    IVF build and append run a pinned number of jobs and store the
-  *    blocks of one RDD each.
+  *    blocks of one RDD each; an IVF append's jobs and input bytes do
+  *    not grow with the index.
   *  - PRUNING: queries whose buckets lack directories answer as the
   *    inline path does, schema included.
   *  - STATS: an empty append batch (null Σdl) leaves n and avgdl as
@@ -130,22 +131,34 @@ class StoreReadSpec extends AnyFunSuite {
     sameSchema(s"$sig/_tombstones")
   }
 
-  /** Jobs started while `body` runs on this thread, and the RDDs whose
-    * blocks were stored meanwhile (a cache or a local checkpoint),
-    * counted by a listener once a marker job after it has been seen.
+  /** What `body` cost on this thread: the jobs it started, the RDDs whose
+    * blocks were stored meanwhile (a cache or a local checkpoint), and
+    * the input bytes its tasks read.
     */
-  private def jobsAndStoredRdds(body: => Unit): (Int, Int) = {
+  private case class Cost(jobs: Int, storedRdds: Int, bytesRead: Long)
+
+  /** [[Cost]] of `body`, counted by a listener once a marker job after
+    * it has been seen.
+    */
+  private def costOf(body: => Unit): Cost = {
     val group = "store-read-jobs"
     val jobs = ConcurrentHashMap.newKeySet[Int]()
+    val stages = ConcurrentHashMap.newKeySet[Int]()
     val rdds = ConcurrentHashMap.newKeySet[Int]()
+    val bytes = new java.util.concurrent.atomic.AtomicLong
     val marker = new java.util.concurrent.atomic.AtomicBoolean
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         e.properties.getProperty("spark.jobGroup.id") match {
-          case `group` => jobs.add(e.jobId)
+          case `group` =>
+            jobs.add(e.jobId)
+            e.stageIds.foreach(stages.add)
           case "store-read-marker" => marker.set(true)
           case _ =>
         }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          bytes.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
       override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
         if (!marker.get && e.blockUpdatedInfo.storageLevel.isValid)
           e.blockUpdatedInfo.blockId.asRDDId.foreach(b => rdds.add(b.rddId))
@@ -157,11 +170,11 @@ class StoreReadSpec extends AnyFunSuite {
       sc.setJobGroup("store-read-marker", "marker")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       eventually(timeout(30.seconds))(assert(marker.get))
-      (jobs.size, rdds.size)
+      Cost(jobs.size, rdds.size, bytes.get)
     } finally sc.removeSparkListener(listener)
   }
 
-  private def jobsOf(body: => Unit): Int = jobsAndStoredRdds(body)._1
+  private def jobsOf(body: => Unit): Int = costOf(body).jobs
 
   test("a warm BM25 request runs at most 5 jobs, a warm IVF request at " +
       "most 4") {
@@ -195,10 +208,8 @@ class StoreReadSpec extends AnyFunSuite {
     val ivf = fresh("jobs_ivf_write")
     val corpus = vectors(0 until 200, 16)
     val batch = vectors(300 until 320, 16)
-    val (writeJobs, writeRdds) =
-      jobsAndStoredRdds(Similarity.writeIvfIndex(corpus, 8, ivf))
-    val (appendJobs, appendRdds) =
-      jobsAndStoredRdds(Similarity.appendToIvfIndex(batch, ivf))
+    val Cost(writeJobs, writeRdds, _) = costOf(Similarity.writeIvfIndex(corpus, 8, ivf))
+    val Cost(appendJobs, appendRdds, _) = costOf(Similarity.appendToIvfIndex(batch, ivf))
     info(s"IVF build: $writeJobs jobs, $writeRdds stored RDDs; " +
       s"IVF append: $appendJobs jobs, $appendRdds stored RDDs")
     // the counts the build and the append ran before every tier write
@@ -206,9 +217,29 @@ class StoreReadSpec extends AnyFunSuite {
     // The build stores only the quantizer fit's packed points, the append
     // only its cached batch.
     assert(writeJobs === 11, "IVF build jobs")
-    assert(appendJobs === 8, "IVF append jobs")
+    assert(appendJobs === 6, "IVF append jobs")
     assert(writeRdds === 1, "IVF build stored RDDs")
     assert(appendRdds === 1, "IVF append stored RDDs")
+  }
+
+  test("an IVF append costs the same jobs and input bytes after the index " +
+      "grows 4x") {
+    val ivf = fresh("ivf_append_flat")
+    Similarity.writeIvfIndex(vectors(0 until 200, 16), nlist = 8, path = ivf)
+    Similarity.deleteFromIvfIndex(spark, ivf, Seq(3L, 5L).toDF("id"))
+    val before = costOf(Similarity.appendToIvfIndex(vectors(1000 until 1020, 16), ivf))
+    for (k <- 1 to 3)
+      Similarity.appendToIvfIndex(vectors(k * 200 until k * 200 + 200, 16), ivf)
+    assert(SegmentStore.footerRowCount(spark, s"$ivf/cells") === 818L)
+    assert(SegmentStore.read(spark, s"$ivf/cells", "cid_id").count() === 818L)
+    val after = costOf(Similarity.appendToIvfIndex(vectors(2000 until 2020, 16), ivf))
+    info(s"append at 218 rows: $before; at 818 rows: $after")
+    // only the quantizer and the one-row meta are read, not the cells
+    // tier, which grew by 600 rows of 16 doubles: the input bytes stay
+    // within a few bytes (10% slack) of the small index's
+    assert(after.jobs === before.jobs, "append jobs")
+    assert(after.bytesRead <= before.bytesRead * 11 / 10,
+      s"append input bytes ${after.bytesRead} vs ${before.bytesRead}")
   }
 
   test("queries whose buckets have no directory answer as inline bm25TopK, " +
